@@ -24,11 +24,18 @@ corpus.  Rounds are bounded (``max_rounds``) and the result carries an
 explicit ``converged`` flag rather than silently returning partial
 components (no silent caps).
 
-Per round: 3 shuffles over O(|V| + |E|) rows of two thin columns.  Each
-round ends in ``localCheckpoint`` to truncate lineage (on a real
-cluster with a checkpoint dir configured, ``checkpoint`` gives the same
-plan truncation plus fault tolerance); no node- or edge-level data ever
-reaches the driver.
+Per round: step 1 is materialized once by an eager ``localCheckpoint``
+that carries each node's previous label (``_own``) beside the new min;
+an observed metric on that checkpoint counts the nodes whose label
+dropped, so convergence costs no job and no join of its own.  A round
+in which step 1 moved nothing has converged: labels are then constant
+across every edge, hence per component, and step 2 would move nothing
+either.  Otherwise step 2 joins the checkpoint to itself, so the
+neighbor min is computed once per round, and is checkpointed in turn,
+which also truncates lineage (on a real cluster with a checkpoint dir
+configured, ``checkpoint`` gives the same plan truncation plus fault
+tolerance).  Every shuffle carries O(|V| + |E|) rows of two or three
+thin columns; no node- or edge-level data ever reaches the driver.
 """
 
 from __future__ import annotations
@@ -62,32 +69,40 @@ def propagate_min_labels(nodes, edges, id_col='doc_id',
               .localCheckpoint(eager=True))
     converged = False
     for _ in range(max_rounds):
-        # 1. neighbor min: each node offers its label to its neighbors
+        # 1. neighbor min: each node offers its label to its neighbors;
+        # '_own' keeps the node's previous label (null on neighbor rows,
+        # which min() skips) so the round sees what moved without a
+        # second join
         nbr = (sym.join(labels.withColumnRenamed('_id', '_src'), '_src')
                .select(F.col('_dst').alias('_id'), 'label'))
-        combined = (labels.unionByName(nbr)
-                    .groupBy('_id').agg(F.min('label').alias('label')))
+        combined = (labels.withColumn('_own', F.col('label'))
+                    .unionByName(nbr, allowMissingColumns=True)
+                    .groupBy('_id').agg(F.min('label').alias('label'),
+                                        F.min('_own').alias('_own')))
+        # a null '_own' is an edge endpoint absent from ``nodes``: it
+        # joins the label set this round, so that counts as a move too.
+        # The count is a name-keyed observe read back from the query
+        # the checkpoint ran, not a ``pyspark.sql.Observation``: on
+        # Spark 4.1 the first Observation gives the session a
+        # non-serializable ObservationManager, and every later task
+        # whose closure captures the session (an ML model's training
+        # summary inside its transform UDF) fails "Task not
+        # serializable".
+        observed = combined.observe('moved', F.count_if(
+            F.col('_own').isNull() | (F.col('label') < F.col('_own'))))
+        combined = observed.localCheckpoint(eager=True)
+        moved = (observed._jdf.queryExecution().observedMetrics()
+                 .get('moved').get().getLong(0))
+        if moved == 0:
+            converged = True
+            break
         # 2. pointer jump: label <- label(label).  Every label IS a node
         # id (labels start as ids and min() only selects existing ones),
         # and node labels never increase, so the jump is monotone too.
-        jump = (combined
-                .join(combined.select(F.col('_id').alias('label'),
-                                      F.col('label').alias('_jl')),
-                      'label', 'left')
-                .select('_id',
-                        F.coalesce('_jl', 'label').alias('label')))
-        new_labels = jump.localCheckpoint(eager=True)
-        moved = (new_labels.withColumnRenamed('label', '_new')
-                 .join(labels, '_id')
-                 .where(F.col('_new') != F.col('label')))
-        done = moved.isEmpty()
-        labels.unpersist()
-        labels = new_labels
-        if done:
-            converged = True
-            break
-    # the edge list is only consumed during the rounds; the returned
-    # labels are independently checkpointed -- release it now rather
-    # than pinning a 2x-edge RDD in block storage per call
-    sym.unpersist()
+        labels = (combined
+                  .join(combined.select(F.col('_id').alias('label'),
+                                        F.col('label').alias('_jl')),
+                        'label', 'left')
+                  .select('_id', F.coalesce('_jl', 'label').alias('label'))
+                  .localCheckpoint(eager=True))
     return labels.select(F.col('_id').alias(id_col), 'label'), converged

@@ -80,28 +80,30 @@ def curate_corpus(docs, text_col='text', id_col='doc_id',
     Thresholds are parameters because corpus statistics move them (the
     synthetic corpus needs a scaled ``max_dup10``; see the funnel
     query's note).
+
+    The gates run once: their thin verdicts ``(doc_id,
+    passes_quality, passes_repetition)`` are materialized by one eager
+    ``localCheckpoint`` (never the text), and every consumer reads
+    that -- the survivors (``docs`` left-semi-joined to the passing
+    ids) that feed the MinHash pair plan and the components node set,
+    ``verdicts`` and ``curated`` -- so none of them re-runs the gates'
+    Arrow stage or tokenizing projections.
     """
     base = docs.select(F.col(id_col).alias('doc_id'),
                        F.col(text_col).alias('text'))
-    # the quality gate is a narrow projection: carry the text through
-    # it (keep_cols) instead of re-joining the corpus to recover it --
-    # only the aggregation-bearing repetition gate needs a join
-    quality = (gopher_quality_flags(base, keep_cols=('text',))
-               .select('doc_id', 'text',
-                       F.col('passes').alias('passes_quality')))
+    quality = (gopher_quality_flags(base)
+               .select('doc_id', F.col('passes').alias('passes_quality')))
     repetition = (gopher_repetition_flags_rowwise(
                       base, max_top2=max_top2, max_dup10=max_dup10)
                   .select('doc_id', 'passes_repetition'))
-    gated = quality.join(repetition, 'doc_id')
-    survivors = (gated
-                 .where((F.col('passes_quality') == 1)
-                        & (F.col('passes_repetition') == 1))
-                 .select('doc_id', 'text'))
+    gates = quality.join(repetition, 'doc_id').localCheckpoint(eager=True)
+    passing = (gates.where((F.col('passes_quality') == 1)
+                           & (F.col('passes_repetition') == 1))
+               .select('doc_id'))
+    survivors = base.join(passing, 'doc_id', 'left_semi')
     assigned = duplicate_cluster_assignments(survivors,
                                              threshold=dedup_threshold)
-    verdicts = (gated.select('doc_id', 'passes_quality',
-                             'passes_repetition')
-                .join(assigned, 'doc_id', 'left')
+    verdicts = (gates.join(assigned, 'doc_id', 'left')
                 .withColumn('kept',
                             (F.coalesce('is_canonical', F.lit(0)) == 1)
                             .cast('long')))

@@ -164,9 +164,8 @@ def jaccard_pairs(df, text_col='text', threshold=0.8):
 # -- MinHash-LSH --------------------------------------------------------------
 
 # max buffered output rows per yielded RecordBatch in the Arrow
-# explode stages (shingles, passage/gram sigs): bounds per-task python
-# memory the way the JVM Generate they replaced streamed in constant
-# space
+# passage-signature explode stage: bounds per-task python memory the
+# way the JVM Generate it replaced streamed in constant space
 EXPLODE_FLUSH_ROWS = 1 << 16
 
 MINHASH_K = 32
@@ -174,35 +173,12 @@ LSH_BANDS = 8
 LSH_ROWS = MINHASH_K // LSH_BANDS
 
 
-def shingles_col(toks):
-    """3-token shingles from a *materialized* token array column.
-
-    Built from zip_with over shifted slices -- one traversal, no
-    per-element re-evaluation.  (A transform(sequence(...), i ->
-    slice(toks_expr, ...)) formulation re-inlines the tokenization into
-    every lambda element: 20x slower, measured at sf0.1.)
-    """
-    n = 3
-    toks = F.col(toks) if isinstance(toks, str) else toks
-    s1 = F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0)))
-    s2 = F.slice(toks, 3, F.greatest(F.size(toks) - 2, F.lit(0)))
-    pair = F.zip_with(toks, s1, lambda x, y: F.concat_ws(' ', x, y))
-    trip = F.zip_with(pair, s2,
-                      lambda x, y: F.when(y.isNull(), F.lit(None))
-                      .otherwise(F.concat_ws(' ', x, y)))
-    sh = F.filter(trip, lambda x: x.isNotNull())
-    # token-less docs get an *empty* shingle set (never the '' sentinel,
-    # which made every pure-markup/punctuation doc a jaccard-1.0 dup of
-    # every other -- ADVICE r01); 1-2 token docs shingle as their text
-    return (F.when(F.size(toks) >= n, sh)
-            .when(F.size(toks) > 0, F.array(F.concat_ws(' ', toks)))
-            .otherwise(F.array().cast('array<string>')))
-
-
 def _py_shingles(toks):
-    """Python twin of ``shingles_col`` + ``array_distinct`` (first-
-    occurrence order): full 3-token ' '-joined windows, 1-2 token docs
-    shingle as their joined text, token-less docs get the empty set."""
+    """Distinct 3-token shingles in first-occurrence order: full
+    3-token ' '-joined windows, 1-2 token docs shingle as their joined
+    text, and token-less docs get the empty set (never a '' sentinel,
+    which would make every pure-markup doc a jaccard-1.0 dup of every
+    other)."""
     if len(toks) >= 3:
         it = (' '.join(toks[i:i + 3]) for i in range(len(toks) - 2))
     elif toks:
@@ -212,66 +188,34 @@ def _py_shingles(toks):
     return list(dict.fromkeys(it))
 
 
-def _shingle_stage(df, text_col, exploded):
-    """Tokenize + shingle in ONE Arrow python stage (r06 2nd pass: the
-    JVM regex engine on the measurement hardware is ~30x slower than
-    CPython's and thread-ceilinged per JVM -- text_analysis._counts_stage
-    note).  ``exploded=True`` yields (doc_id, sh) rows (the signature
-    shape), ``False`` yields (doc_id, shingles array) (the verify
-    shape).  Shingle STRINGS are identical to the zip_with/concat_ws
-    form, so every xxhash64 lane, LSH bucket and verified pair
-    downstream is value-identical."""
+def shingle_df(df, text_col='text'):
+    """(doc_id, shingles): tokenize + shingle in ONE Arrow python stage
+    (r06 2nd pass: the JVM regex engine on the measurement hardware is
+    ~30x slower than CPython's and thread-ceilinged per JVM --
+    text_analysis._counts_stage note).  The shingle STRINGS are those
+    of the zip_with/concat_ws column form this replaced, so every
+    xxhash64 lane, LSH bucket and verified pair downstream is
+    value-identical."""
     import pyarrow as pa
 
     from .text_analysis import TOKEN_PATTERN
 
     src = df.select(F.col('doc_id'), F.col(text_col).alias('_text'))
-    id_ddl = src.schema['doc_id'].dataType.simpleString()
-    out_ddl = ('doc_id %s, sh string' % id_ddl if exploded
-               else 'doc_id %s, shingles array<string>' % id_ddl)
+    out_ddl = ('doc_id %s, shingles array<string>'
+               % src.schema['doc_id'].dataType.simpleString())
 
     def gen(batches):
         import re
         tok_split = re.compile(TOKEN_PATTERN).split
         for rb in batches:
-            ids = rb.column(0).to_pylist()
-            texts = rb.column(1).to_pylist()
-            if exploded:
-                id_type = rb.column(0).type
-                out_ids, out_sh = [], []
-                for did, t in zip(ids, texts):
-                    for s in _py_shingles(
-                            [x for x in tok_split((t or '').lower()) if x]):
-                        out_ids.append(did)
-                        out_sh.append(s)
-                    # bound per-task memory (see EXPLODE_FLUSH_ROWS)
-                    if len(out_ids) >= EXPLODE_FLUSH_ROWS:
-                        yield pa.RecordBatch.from_arrays(
-                            [pa.array(out_ids, type=id_type),
-                             pa.array(out_sh, type=pa.string())],
-                            names=['doc_id', 'sh'])
-                        out_ids, out_sh = [], []
-                if out_ids:
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(out_ids, type=id_type),
-                         pa.array(out_sh, type=pa.string())],
-                        names=['doc_id', 'sh'])
-            else:
-                shs = [_py_shingles(
-                    [x for x in tok_split((t or '').lower()) if x])
-                    for t in texts]
-                yield pa.RecordBatch.from_arrays(
-                    [rb.column(0),
-                     pa.array(shs, type=pa.list_(pa.string()))],
-                    names=['doc_id', 'shingles'])
+            shs = [_py_shingles(
+                [x for x in tok_split((t or '').lower()) if x])
+                for t in rb.column(1).to_pylist()]
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(0), pa.array(shs, type=pa.list_(pa.string()))],
+                names=['doc_id', 'shingles'])
 
     return src.mapInArrow(gen, out_ddl)
-
-
-def shingle_df(df, text_col='text'):
-    """(doc_id, shingles): the verify-side shingle arrays (Arrow python
-    stage -- see ``_shingle_stage``)."""
-    return _shingle_stage(df, text_col, exploded=False)
 
 
 def minhash_signatures(df, text_col='text', k=MINHASH_K):
@@ -283,15 +227,17 @@ def minhash_signatures(df, text_col='text', k=MINHASH_K):
     doc per input partition.  (The nested array_min(transform(...))xK
     formulation generates pathological whole-stage code.)
 
-    r06 (2nd pass): the exploded (doc_id, sh) rows come from the Arrow
-    shingle stage (``_shingle_stage`` -- identical shingle strings, off
-    the ceilinged JVM regex engine; the python stage also closes the
-    earlier ``InferFiltersFromGenerate`` re-tokenization hole for good,
-    since no expression exists to push into the scan).  The k xxhash64
-    lanes and the min-aggregation stay in the JVM, so every signature
-    VALUE is unchanged.
+    The (doc_id, sh) rows are a JVM ``explode`` of the Arrow shingle
+    arrays (:func:`shingle_df` -- off the ceilinged JVM regex engine;
+    the python stage also closes the earlier
+    ``InferFiltersFromGenerate`` re-tokenization hole for good, since
+    no expression exists to push into the scan).  The Generate streams
+    its rows, so per-task memory stays bounded on fat documents.  The
+    k xxhash64 lanes and the min-aggregation stay in the JVM, so every
+    signature VALUE is unchanged.
     """
-    sh = _shingle_stage(df, text_col, exploded=True)
+    sh = shingle_df(df, text_col).select(
+        'doc_id', F.explode('shingles').alias('sh'))
     hashed = sh.select(
         'doc_id', *[F.xxhash64('sh', F.lit(i)).alias('h%d' % i)
                     for i in range(k)])

@@ -43,9 +43,12 @@ def salt_by_host(df, num_partitions, salts=DEFAULT_SALTS,
 
 
 def probe_parquet_layout(path):
-    """(achievable_scan_tasks, total_rows) of a local parquet input, or
+    """(achievable scan tasks, total rows) of a local parquet input, or
     ``None`` when it cannot be probed (non-local path, unreadable
-    footer) -- callers must then leave the scan alone.
+    footer, a directory with no top-level part files or with any
+    subdirectory, e.g. a hive ``key=value`` layout whose files the
+    listing here does not see) -- callers must then leave the scan
+    alone.
 
     Achievable scan tasks = total row-group count across part files:
     the ROW GROUP is the atomic split unit (a byte-range split never
@@ -62,8 +65,12 @@ def probe_parquet_layout(path):
         if os.path.isfile(path):
             files = [path]
         elif os.path.isdir(path):
-            files = [os.path.join(path, f) for f in os.listdir(path)
-                     if f.endswith('.parquet')]
+            entries = [os.path.join(path, f) for f in os.listdir(path)]
+            if any(os.path.isdir(e) for e in entries):
+                return None
+            files = [e for e in entries if e.endswith('.parquet')]
+            if not files:
+                return None
             if len(files) >= 64:
                 return (len(files), None)
         else:
@@ -76,13 +83,6 @@ def probe_parquet_layout(path):
         return (groups, rows)
     except Exception:
         return None
-
-
-def achievable_scan_tasks(path):
-    """Back-compat shim: just the split count from
-    :func:`probe_parquet_layout`."""
-    probe = probe_parquet_layout(path)
-    return probe[0] if probe else None
 
 
 def spread_small_scan(spark, df, path, factor=1):

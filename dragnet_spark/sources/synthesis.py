@@ -414,37 +414,6 @@ def synthesize_fused(spark, sf_dir, per_doc_rows, pa_schema, ddl,
     return docs.mapInArrow(gen, ddl)
 
 
-EXTRACT_GOLD_DDL = ('doc_id string, content_text string, '
-                    'content_text_gold string')
-
-
-def synthesize_extract_gold(spark, sf_dir, amplification=1, model=None,
-                            num_partitions=None):
-    """Synthesis + extraction + gold content in ONE python stage:
-    ``(doc_id, content_text, content_text_gold)`` -- the token-F1
-    evaluation shape with no second synthesis pass and no doc_id join
-    of fat text (both sides are born in the same kernel call)."""
-    from ..model import default_model
-    from ..operators.extract import process_document
-
-    model = model or default_model()
-    schema = pa.schema([('doc_id', pa.string()),
-                        ('content_text', pa.string()),
-                        ('content_text_gold', pa.string())])
-
-    def per_doc(sid, span_dicts, gold_c, gold_m):
-        try:
-            _, content, _ = process_document(span_dicts, model)
-        except Exception:
-            content = ''
-        return [{'doc_id': sid, 'content_text': content,
-                 'content_text_gold': gold_c}]
-
-    return synthesize_fused(spark, sf_dir, per_doc, schema,
-                            EXTRACT_GOLD_DDL, amplification,
-                            num_partitions)
-
-
 def synthesize_extract_gold_counts(spark, sf_dir, amplification=1,
                                    model=None, num_partitions=None):
     """Synthesis + extraction + token-F1 COUNT columns in one python

@@ -188,6 +188,25 @@ class TestPartitioning:
         assert n + o == small_corpus.count()
         assert 0 < o <= int(0.15 * (n + o)) + 1
 
+    def test_spread_guard_leaves_hive_layout_alone(self, spark, tmp_path):
+        # a hive layout has no top-level part files: the probe must say
+        # "unknown" instead of (0, 0), which made the guard repartition
+        # the whole input down to 2 partitions
+        from dragnet_spark.plans.partitioning import (probe_parquet_layout,
+                                                      spread_small_scan)
+        path = str(tmp_path / 'hive')
+        (spark.range(200).withColumn('key', F.col('id') % 3)
+         .write.partitionBy('key').parquet(path))
+        assert probe_parquet_layout(path) is None
+        df = spark.read.parquet(path)
+        assert spread_small_scan(spark, df, path) is df
+        (tmp_path / 'empty').mkdir()
+        assert probe_parquet_layout(str(tmp_path / 'empty')) is None
+        # a flat directory is still probed
+        flat = str(tmp_path / 'flat')
+        spark.range(200).coalesce(1).write.parquet(flat)
+        assert probe_parquet_layout(flat) == (1, 200)
+
 
 @pytest.mark.spark
 class TestLegacyLayoutMigration:

@@ -759,3 +759,17 @@ class TestCurateCorpus:
         curated, _ = curate_corpus(df)
         assert curated.columns == ['doc_id', 'text', 'meta']
         assert curated.first().meta == 'extra'
+
+    def test_outputs_read_gates_from_checkpoint(self, spark):
+        # the gate verdicts are materialized once while curate_corpus
+        # builds its frames: neither sink re-runs a gate's python stage
+        from dragnet_spark.operators.curation import curate_corpus
+        text = ('the story of words and that which have with be '
+                + ' '.join('token%03d' % i for i in range(54)))
+        df = spark.createDataFrame([(1, text), (2, 'too short')],
+                                   'doc_id long, text string')
+        curated, verdicts = curate_corpus(df)
+        for out in (curated, verdicts):
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert 'Python' not in plan and 'Arrow' not in plan, plan
+        assert [r.doc_id for r in curated.collect()] == [1]

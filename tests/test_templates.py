@@ -66,6 +66,28 @@ class TestHardCorpus:
         assert all(f.converged for f in fams)
 
 
+# rounds propagate_min_labels takes on the 100k-node chain below
+# (measured); converging within it pins that the round shape adds none
+CHAIN_ROUNDS = 17
+
+
+def _union_find_min_labels(ids, edges):
+    """Driver-side reference: node -> its component's minimum id."""
+    parent = {i: i for i in ids}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {i: find(i) for i in ids}
+
+
 @pytest.mark.spark
 class TestConnectedComponents:
     """propagate_min_labels: the DataFrame-only CC behind template
@@ -98,11 +120,50 @@ class TestConnectedComponents:
             F.format_string('d%07d', 'id').alias('src'),
             F.format_string('d%07d', F.col('id') - 1).alias('dst'))
         labels, converged = propagate_min_labels(nodes, edges,
-                                                 max_rounds=24)
+                                                 max_rounds=CHAIN_ROUNDS)
         assert converged
         n_components = labels.select('label').distinct().count()
         assert n_components == 1
         assert labels.count() == n
+
+    @pytest.mark.parametrize('id_type', ['long', 'string'])
+    def test_matches_union_find_on_random_graph(self, spark, id_type):
+        # many components of mixed size and shape, isolated nodes and
+        # duplicate / self-loop edges included
+        import random
+        from dragnet_spark.operators.components import propagate_min_labels
+        rng = random.Random(7)
+        n = 3000
+        nums = rng.sample(range(10 ** 6), n)
+        ids = nums if id_type == 'long' else ['n%d' % x for x in nums]
+        edges = [(rng.choice(ids), rng.choice(ids)) for _ in range(2200)]
+        edges += edges[:50] + [(ids[0], ids[0])]
+        nodes = spark.createDataFrame([(i,) for i in ids],
+                                      'doc_id %s' % id_type)
+        edge_df = spark.createDataFrame(
+            edges, 'src %s, dst %s' % (id_type, id_type))
+        labels, converged = propagate_min_labels(nodes, edge_df)
+        assert converged
+        got = {r.doc_id: r.label for r in labels.collect()}
+        want = _union_find_min_labels(ids, edges)
+        assert got == want
+        assert len(set(want.values())) > 100
+
+    def test_session_still_runs_ml_transform(self, spark):
+        # counting moved labels must leave the session serializable: a
+        # fitted model's transform UDF captures it via the training
+        # summary
+        from pyspark.ml.classification import LogisticRegression
+        from pyspark.ml.linalg import Vectors
+        from dragnet_spark.operators.components import propagate_min_labels
+        nodes = spark.createDataFrame([(1,), (2,)], 'doc_id long')
+        edges = spark.createDataFrame([(1, 2)], 'src long, dst long')
+        propagate_min_labels(nodes, edges)
+        train = spark.createDataFrame(
+            [(Vectors.dense([0.0]), 0.0), (Vectors.dense([1.0]), 1.0)],
+            ['features', 'label'])
+        model = LogisticRegression(maxIter=5).fit(train)
+        assert len(model.transform(train).collect()) == 2
 
     def test_max_rounds_flags_non_convergence(self, spark):
         from dragnet_spark.operators.components import propagate_min_labels
