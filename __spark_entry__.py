@@ -63,32 +63,44 @@ def entry(spark: SparkSession) -> DataFrame:
 # queries: extraction pipeline (rows-only -- non-SQL-expressible)
 # ---------------------------------------------------------------------------
 
+def _with_edge_docs(spark, fused, edge_stage):
+    """A fused single-stage query plus its edge-doc branch: the fixed
+    edge-case docs run through ``edge_stage(spans, gold)``, the regular
+    operator, so the union matches the
+    ``synthesize_corpus(include_edge_docs=True)`` pipeline."""
+    from dragnet_spark.sources.synthesis import edge_docs_dfs
+    return fused.unionByName(edge_stage(*edge_docs_dfs(spark)))
+
+
+def _extracted(spark, sf_dir):
+    from dragnet_spark.operators.extract import extract
+    from dragnet_spark.sources.synthesis import synthesize_and_extract
+    return _with_edge_docs(spark, synthesize_and_extract(spark, sf_dir),
+                           lambda spans, _: extract(spans))
+
+
+def _blocks(spark, sf_dir):
+    from dragnet_spark.operators.blocks_df import (blockify_df,
+                                                   synthesize_and_blockify)
+    return _with_edge_docs(spark, synthesize_and_blockify(spark, sf_dir),
+                           lambda spans, _: blockify_df(spans))
+
+
 def q_extract_content(spark, sf_dir):
     """M3-M6: fused blockify+featurize+predict+assemble.
 
     r06: single-stage ``synthesize_and_extract`` (spans never cross the
     Arrow boundary) + the tiny edge-doc branch through the regular
     ``extract`` path; identical rows to the r05 two-stage form."""
-    from dragnet_spark.operators.extract import extract
-    from dragnet_spark.sources.synthesis import (edge_docs_dfs,
-                                                 synthesize_and_extract)
-    fused = synthesize_and_extract(spark, sf_dir)
-    edge_spans, _ = edge_docs_dfs(spark)
-    return (fused.unionByName(extract(edge_spans))
-            .select('doc_id', 'content_text', 'status'))
+    return _extracted(spark, sf_dir).select('doc_id', 'content_text',
+                                            'status')
 
 
 def q_extract_spans(spark, sf_dir):
     """M5 span reassembly: exploded output spans incl. media passthrough.
 
     r06: same single-stage fusion as ``q_extract_content``."""
-    from dragnet_spark.operators.extract import extract
-    from dragnet_spark.sources.synthesis import (edge_docs_dfs,
-                                                 synthesize_and_extract)
-    fused = synthesize_and_extract(spark, sf_dir)
-    edge_spans, _ = edge_docs_dfs(spark)
-    out = fused.unionByName(extract(edge_spans))
-    return out.select(
+    return _extracted(spark, sf_dir).select(
         'doc_id', F.explode('spans').alias('s')
     ).select('doc_id', F.col('s.offset').alias('offset'),
              F.col('s.kind').alias('kind'),
@@ -101,12 +113,7 @@ def q_blockify_blocks(spark, sf_dir):
 
     r06: single-stage synthesis+blockify fusion (guide §4.1) + the tiny
     edge-doc branch through the regular ``blockify_df`` path."""
-    from dragnet_spark.operators.blocks_df import (blockify_df,
-                                                   synthesize_and_blockify)
-    from dragnet_spark.sources.synthesis import edge_docs_dfs
-    fused = synthesize_and_blockify(spark, sf_dir)
-    edge_spans, _ = edge_docs_dfs(spark)
-    return fused.unionByName(blockify_df(edge_spans)).select(
+    return _blocks(spark, sf_dir).select(
         'doc_id', 'block_idx', 'text', 'link_density', 'text_density',
         'tagcount', 'tagcount_since_last_block', 'anchor_count',
         'min_depth_since_last_block', 'block_start_tag', 'pred')
@@ -116,13 +123,7 @@ def q_block_features(spark, sf_dir):
     """F1-F4+F7: the 9-column feature union per block, posexploded to
     scalar (feature_idx, value) rows so the harness canonicalizer can
     sort/hash them (arrays are unhashable driver-side)."""
-    from dragnet_spark.operators.blocks_df import (blockify_df,
-                                                   synthesize_and_blockify)
-    from dragnet_spark.sources.synthesis import edge_docs_dfs
-    edge_spans, _ = edge_docs_dfs(spark)
-    blocks = synthesize_and_blockify(spark, sf_dir).unionByName(
-        blockify_df(edge_spans))
-    return blocks.select(
+    return _blocks(spark, sf_dir).select(
         'doc_id', 'block_idx',
         F.posexplode('features').alias('feature_idx', 'value')
     ).select('doc_id', F.col('block_idx').cast('long').alias('block_idx'),
@@ -138,10 +139,8 @@ def q_gold_block_labeling(spark, sf_dir):
     (guide §4.1/§2.4); edge docs keep the regular two-input path."""
     from dragnet_spark.operators.labeling import (gold_blocks,
                                                   synthesize_and_label)
-    from dragnet_spark.sources.synthesis import edge_docs_dfs
-    fused = synthesize_and_label(spark, sf_dir)
-    edge_spans, edge_gold = edge_docs_dfs(spark)
-    return fused.unionByName(gold_blocks(edge_spans, edge_gold)).select(
+    return _with_edge_docs(
+        spark, synthesize_and_label(spark, sf_dir), gold_blocks).select(
         'doc_id', 'block_idx', 'content_frac', 'comments_frac',
         'label_content', 'label_comments', 'weight')
 
@@ -161,17 +160,19 @@ def q_token_f1_extraction(spark, sf_dir):
     from dragnet_spark.operators.metrics import (token_f1_from_counts,
                                                  token_f1_per_doc)
     from dragnet_spark.sources.synthesis import (
-        edge_docs_dfs, synthesize_extract_gold_counts)
-    fused = token_f1_from_counts(
-        synthesize_extract_gold_counts(spark, sf_dir))
-    edge_spans, edge_gold = edge_docs_dfs(spark)
-    edge = token_f1_per_doc(
-        extract(edge_spans).select('doc_id', 'content_text')
-        .join(edge_gold.select(
-            'doc_id',
-            F.col('content_text').alias('content_text_gold')),
-            'doc_id'))
-    per_doc = fused.unionByName(edge)
+        synthesize_extract_gold_counts)
+
+    def edge(spans, gold):
+        return token_f1_per_doc(
+            extract(spans).select('doc_id', 'content_text')
+            .join(gold.select(
+                'doc_id',
+                F.col('content_text').alias('content_text_gold')),
+                'doc_id'))
+
+    per_doc = _with_edge_docs(
+        spark, token_f1_from_counts(
+            synthesize_extract_gold_counts(spark, sf_dir)), edge)
     res = per_doc.agg(
         F.avg('precision').alias('precision'),
         F.avg('recall').alias('recall'),
@@ -357,10 +358,10 @@ def q_gopher_repetition(spark, sf_dir):
     counts once; see the operator docstring) character fractions per
     document, defined identically in the oracle, with the pass flag.
 
-    r06: runs the zero-shuffle rowwise form -- bit-identical to the
-    shuffle form (asserted in tests) and ~9x faster at sf1.0 since its
-    coverage step went O(n log n); the shuffle form's plan re-computed
-    the scan+tokenize base five times across its four shuffles."""
+    r06: runs the zero-shuffle rowwise form -- ~9x faster at sf1.0 than
+    the retired shuffle form since its coverage step went O(n log n);
+    the shuffle form's plan re-computed the scan+tokenize base five
+    times across its four shuffles."""
     from dragnet_spark.operators.text_analysis import (
         gopher_repetition_flags_rowwise)
     return gopher_repetition_flags_rowwise(_docs(spark, sf_dir))
@@ -1628,7 +1629,7 @@ def _gopher_quality_oracle():
 
 
 def _gopher_repetition_oracle(max_top2='0.20', max_dup10='0.10'):
-    """DuckDB twin of gopher_repetition_flags; thresholds are
+    """DuckDB twin of gopher_repetition_flags_rowwise; thresholds are
     parameters so the corpus-scaled curation_gates oracle reuses the
     exact same n-gram derivation."""
     return f"""

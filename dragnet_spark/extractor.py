@@ -8,7 +8,7 @@ choice, ``fit`` on documents + gold, ``extract``/``predict`` afterwards --
 so a reference user can port call sites mechanically.  DataFrames replace
 the reference's lists of HTML strings.
 
-Two classifier backends:
+Three classifier backends:
 
 * ``'lr'`` (default): seeded logistic regression -> a 9-coef
   :class:`~dragnet_spark.model.LogisticModel` applied inside the fused

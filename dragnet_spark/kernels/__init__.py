@@ -10,7 +10,7 @@ from .blocks import (  # noqa: F401
     BLACKLIST, BLOCKS, Block, BlockifyError, blockify, guess_encoding,
     simple_tokenizer,
 )
-from .lcs import check_inclusion, longest_common_subsequence  # noqa: F401
+from .lcs import longest_common_subsequence  # noqa: F401
 from .metrics import (  # noqa: F401
     block_level_metrics, dameraulevenshtein, evaluation_metrics,
 )

@@ -7,7 +7,7 @@ NumPy row recurrence instead of the Cython double loop:
 
 Rows are non-decreasing in ``j``, so the in-row dependency resolves with a
 single ``np.maximum.accumulate`` -- O(m) vectorized row updates.  The
-backtrack in :func:`check_inclusion` replicates the reference's exact
+backtrack in :func:`check_inclusion_ex` replicates the reference's exact
 tie-breaking (``lcs.pyx:88-103``: prefer moving ``j`` when
 ``C[i][j-1] >= C[i-1][j]``) so the chosen LCS -- and therefore the derived
 block labels -- are bit-identical.
@@ -240,8 +240,3 @@ def check_inclusion_ex(x, y):
         flags = _inclusion(xs, y[s:s + GOLD_WINDOW])
         acc |= np.asarray(flags, dtype=bool)
     return acc.tolist(), x_cap, False
-
-
-def check_inclusion(x, y):
-    """Back-compat wrapper: flags only (covered prefix of ``x``)."""
-    return check_inclusion_ex(x, y)[0]

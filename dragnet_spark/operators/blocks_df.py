@@ -14,7 +14,7 @@ import pyarrow as pa
 
 from ..kernels.features import DEFAULT_FEATURES, compute
 from ..model import default_model
-from .extract import STATUS_OK, blockify_spans
+from .extract import STATUS_OK, blockify_spans, map_doc_rows
 
 BLOCKS_PA_SCHEMA = pa.schema([
     ('doc_id', pa.string()),
@@ -35,15 +35,6 @@ BLOCKS_PA_SCHEMA = pa.schema([
     ('pred', pa.int32()),
     ('status', pa.string()),
 ])
-
-BLOCKS_DDL = (
-    'doc_id string, block_idx int, text string, link_density double, '
-    'text_density double, link_tokens array<string>, tagcount int, '
-    'tagcount_since_last_block int, anchor_count int, '
-    'min_depth_since_last_block int, block_start_tag string, '
-    'ancestors array<int>, '
-    'class_weights array<struct<tag_id:int,weight:int>>, '
-    'features array<double>, pred int, status string')
 
 
 def doc_to_block_rows(doc_id, spans, model, features=DEFAULT_FEATURES):
@@ -95,22 +86,15 @@ def synthesize_and_blockify(spark, sf_dir, amplification=1, model=None,
         return doc_to_block_rows(sid, span_dicts, model, features)
 
     return synthesize_fused(spark, sf_dir, per_doc, BLOCKS_PA_SCHEMA,
-                            BLOCKS_DDL, amplification, num_partitions)
+                            amplification, num_partitions)
 
 
 def blockify_df(df, model=None, features=DEFAULT_FEATURES):
     """DataFrame[(doc_id, spans)] -> exploded blocks DataFrame."""
     model = model or default_model()
 
-    def to_blocks(batches):
-        from .extract import _spans_rows
-        for rb in batches:
-            doc_ids = rb.column('doc_id').to_pylist()
-            spans_col = _spans_rows(rb.column('spans'))
-            rows = []
-            for doc_id, spans in zip(doc_ids, spans_col):
-                rows.extend(doc_to_block_rows(doc_id, spans or [], model,
-                                              features))
-            yield pa.RecordBatch.from_pylist(rows, schema=BLOCKS_PA_SCHEMA)
+    def per_row(doc_id, spans):
+        return doc_to_block_rows(doc_id, spans or [], model, features)
 
-    return df.mapInArrow(to_blocks, BLOCKS_DDL)
+    return map_doc_rows(df.select('doc_id', 'spans'), per_row,
+                        BLOCKS_PA_SCHEMA)

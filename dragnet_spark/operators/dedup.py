@@ -673,14 +673,14 @@ def passage_sig_rows(df, text_col='text', id_col='doc_id',
                     out_sigs.append(md5(p.encode('utf-8')).digest())
                     if keep_passage:
                         out_ps.append(p)
-                # bound per-task memory: the JVM Generate this replaced
-                # streamed rows in constant space, so flush the fan-out
-                # instead of buffering an input batch's whole expansion
-                # (fat docs x 1024-row batches would hold millions of
-                # python objects at once)
-                if len(out_ids) >= EXPLODE_FLUSH_ROWS:
-                    yield flush()
-                    out_ids, out_sigs, out_ps = [], [], []
+                    # bound per-task memory: the JVM Generate this
+                    # replaced streamed rows in constant space, so flush
+                    # the fan-out -- within a document too, since one
+                    # fat document alone can expand to millions of
+                    # passages -- instead of buffering it whole
+                    if len(out_ids) >= EXPLODE_FLUSH_ROWS:
+                        yield flush()
+                        out_ids, out_sigs, out_ps = [], [], []
             if out_ids:
                 yield flush()
 

@@ -19,31 +19,33 @@ bit-identical to reference semantics.
 from __future__ import annotations
 
 import pyarrow as pa
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..kernels.blocks import BlockifyError, blockify
 from ..kernels.features import DEFAULT_FEATURES, compute
 from ..model import LogisticModel, default_model
+from ..plans.session import ARROW_BATCH_ROWS
 
 STATUS_OK = 'ok'
 STATUS_PARSE_ERROR = 'blockify_error'
 STATUS_TOO_FEW = 'too_few_blocks'
 
+# the span-document element type, declared once: every span table --
+# extraction input and output, synthesized corpora, streaming sources --
+# is ``(doc_id, spans: SPANS_TYPE, ...)``
+SPANS_TYPE = pa.list_(pa.struct([
+    ('kind', pa.string()),
+    ('text', pa.string()),
+    ('media_ref', pa.string()),
+    ('offset', pa.int32()),
+]))
+
 EXTRACTED_PA_SCHEMA = pa.schema([
     ('doc_id', pa.string()),
-    ('spans', pa.list_(pa.struct([
-        ('kind', pa.string()),
-        ('text', pa.string()),
-        ('media_ref', pa.string()),
-        ('offset', pa.int32()),
-    ]))),
+    ('spans', SPANS_TYPE),
     ('content_text', pa.string()),
     ('status', pa.string()),
 ])
-
-EXTRACTED_DDL = ('doc_id string, '
-                 'spans array<struct<kind:string,text:string,'
-                 'media_ref:string,offset:int>>, '
-                 'content_text string, status string')
 
 
 STATUS_ERROR = 'error'
@@ -235,44 +237,73 @@ def _spans_rows(spans_arr):
     return out
 
 
-def make_extract_fn(model, features=DEFAULT_FEATURES,
-                    strip_link_tokens=False):
-    """Arrow-batch iterator function for ``DataFrame.mapInArrow``.
+def extracted_row(doc_id, spans, model, features=DEFAULT_FEATURES,
+                  strip_link_tokens=False):
+    """One extraction output row; any kernel exception becomes an
+    ``error`` status row (last-resort containment: one pathological
+    document must never fail the task)."""
+    try:
+        out_spans, content, status = process_document(
+            spans or [], model, features,
+            strip_link_tokens=strip_link_tokens)
+    except Exception:
+        out_spans, content, status = [], '', STATUS_ERROR
+    return {'doc_id': doc_id, 'spans': out_spans, 'content_text': content,
+            'status': status}
 
-    Output batches are flushed at a byte budget, not just a row count:
-    ``maxRecordsPerBatch`` caps rows, but 1024 outlier documents of a few
-    MB each would otherwise pin gigabytes per in-flight batch (SURVEY.md
-    §4 'Arrow batch sizing').
+
+def _row_bytes(row):
+    """Estimated output bytes of one row: 64 + 2 x its top-level
+    str/bytes lengths (nested lists such as kept spans are covered by
+    the factor 2 -- their text is also in ``content_text``)."""
+    n = 64
+    for v in row.values():
+        if isinstance(v, (str, bytes)):
+            n += 2 * len(v)
+    return n
+
+
+def doc_row_batches(batches, per_row, schema):
+    """The batch loop of every per-document Arrow stage (Spark-free).
+
+    Each input row's column values go to ``per_row(*values)``, which
+    yields output row dicts; ``SPANS_TYPE`` columns arrive as lists of
+    span dicts (:func:`_spans_rows`), every other column as Python
+    values.  Output is flushed at the first of ``ARROW_BATCH_ROWS`` rows
+    or ``OUT_BATCH_BYTES`` of estimated output (:func:`_row_bytes`), so
+    a task holds one bounded batch however many rows one input batch
+    fans out to: ``maxRecordsPerBatch`` caps input rows only, and 1024
+    outlier documents of a few MB each would otherwise pin gigabytes
+    per in-flight batch (SURVEY.md §4 'Arrow batch sizing').
     """
-
-    def extract_batches(batches):
-        for rb in batches:
-            doc_ids = rb.column('doc_id').to_pylist()
-            spans_col = _spans_rows(rb.column('spans'))
-            rows = []
-            approx_bytes = 0
-            for doc_id, spans in zip(doc_ids, spans_col):
-                try:
-                    out_spans, content, status = process_document(
-                        spans or [], model, features,
-                        strip_link_tokens=strip_link_tokens)
-                except Exception:
-                    # last-resort containment: one pathological document
-                    # becomes a status row, never a task failure
-                    out_spans, content, status = [], '', STATUS_ERROR
-                rows.append({'doc_id': doc_id, 'spans': out_spans,
-                             'content_text': content, 'status': status})
-                approx_bytes += 2 * len(content) + 64
-                if approx_bytes >= OUT_BATCH_BYTES:
-                    yield pa.RecordBatch.from_pylist(
-                        rows, schema=EXTRACTED_PA_SCHEMA)
+    for rb in batches:
+        cols = [_spans_rows(c) if c.type == SPANS_TYPE else c.to_pylist()
+                for c in rb.columns]
+        rows = []
+        approx_bytes = 0
+        for values in zip(*cols):
+            for row in per_row(*values):
+                rows.append(row)
+                approx_bytes += _row_bytes(row)
+                if (len(rows) >= ARROW_BATCH_ROWS
+                        or approx_bytes >= OUT_BATCH_BYTES):
+                    yield pa.RecordBatch.from_pylist(rows, schema=schema)
                     rows = []
                     approx_bytes = 0
-            if rows:
-                yield pa.RecordBatch.from_pylist(
-                    rows, schema=EXTRACTED_PA_SCHEMA)
+        if rows:
+            yield pa.RecordBatch.from_pylist(rows, schema=schema)
 
-    return extract_batches
+
+def map_doc_rows(df, per_row, schema):
+    """DataFrame -> ``schema`` rows through ``per_row`` in ONE
+    ``mapInArrow`` stage (:func:`doc_row_batches`).  ``schema`` is the
+    only declaration of the output format: the Spark schema is derived
+    from it."""
+
+    def batches(it):
+        return doc_row_batches(it, per_row, schema)
+
+    return df.mapInArrow(batches, from_arrow_schema(schema))
 
 
 def extract(df, model=None, features=DEFAULT_FEATURES,
@@ -288,10 +319,13 @@ def extract(df, model=None, features=DEFAULT_FEATURES,
     verify with ``result.explain('formatted')`` that no Exchange appears.
     """
     model = model or default_model(to_extract)
-    return df.mapInArrow(
-        make_extract_fn(model, features,
-                        strip_link_tokens=strip_link_tokens),
-        EXTRACTED_DDL)
+
+    def per_row(doc_id, spans):
+        return [extracted_row(doc_id, spans, model, features,
+                              strip_link_tokens)]
+
+    return map_doc_rows(df.select('doc_id', 'spans'), per_row,
+                        EXTRACTED_PA_SCHEMA)
 
 
 def extract_content(df, model=None):

@@ -4,7 +4,7 @@ Distributed equivalent of ``extract_gold_standard_blocks``
 (``/root/reference/dragnet/data_processing.py:89-196``): join documents
 with their gold text, blockify, tokenize each block with the
 ``[\\W_]+`` tokenizer, LCS-match the flattened token stream against the
-gold content and gold comments (``check_inclusion``,
+gold content and gold comments (``check_inclusion_ex``,
 ``lcs.pyx:78-103``), and emit per-block matched fractions + matched
 token strings.  Labels apply the >10% threshold
 (``data_processing.py:324,331``); weights are token counts capped at
@@ -26,7 +26,7 @@ import pyarrow as pa
 from ..kernels.blocks import simple_tokenizer
 from ..kernels.features import DEFAULT_FEATURES, compute
 from ..kernels.lcs import check_inclusion_ex
-from .extract import STATUS_OK, blockify_spans
+from .extract import STATUS_OK, blockify_spans, map_doc_rows
 
 BLOCK_PCT_TOKENS_THRESH = 0.1
 MAX_BLOCK_WEIGHT = 200
@@ -46,13 +46,6 @@ GOLD_BLOCKS_PA_SCHEMA = pa.schema([
     ('features', pa.list_(pa.float64())),
     ('truncated', pa.bool_()),
 ])
-
-GOLD_BLOCKS_DDL = (
-    'doc_id string, block_idx int, text string, content_frac double, '
-    'comments_frac double, all_tokens array<string>, '
-    'content_tokens array<string>, comments_tokens array<string>, '
-    'label_content int, label_comments int, weight int, '
-    'features array<double>, truncated boolean')
 
 
 def _frac_and_tokens(blocks_tokens, all_tokens, block_ids, gs_text):
@@ -158,7 +151,7 @@ def synthesize_and_label(spark, sf_dir, amplification=1,
         return label_document(sid, span_dicts, gold_c, gold_m, features)
 
     return synthesize_fused(spark, sf_dir, per_doc, GOLD_BLOCKS_PA_SCHEMA,
-                            GOLD_BLOCKS_DDL, amplification, num_partitions)
+                            amplification, num_partitions)
 
 
 def gold_blocks(spans_df, gold_df, features=DEFAULT_FEATURES):
@@ -167,18 +160,11 @@ def gold_blocks(spans_df, gold_df, features=DEFAULT_FEATURES):
     Plan: SortMergeJoin/ShuffledHashJoin on doc_id (AQE-skew-aware)
     followed by one narrow Arrow stage.
     """
-    joined = spans_df.join(gold_df, 'doc_id')
+    joined = spans_df.join(gold_df, 'doc_id').select(
+        'doc_id', 'spans', 'content_text', 'comments_text')
 
-    def gen(batches):
-        from .extract import _spans_rows
-        for rb in batches:
-            doc_ids = rb.column('doc_id').to_pylist()
-            spans_col = _spans_rows(rb.column('spans'))
-            contents = rb.column('content_text').to_pylist()
-            comments = rb.column('comments_text').to_pylist()
-            rows = []
-            for did, spans, c, m in zip(doc_ids, spans_col, contents, comments):
-                rows.extend(label_document(did, spans or [], c, m, features))
-            yield pa.RecordBatch.from_pylist(rows, GOLD_BLOCKS_PA_SCHEMA)
+    def per_row(doc_id, spans, content, comments):
+        return label_document(doc_id, spans or [], content, comments,
+                              features)
 
-    return joined.mapInArrow(gen, GOLD_BLOCKS_DDL)
+    return map_doc_rows(joined, per_row, GOLD_BLOCKS_PA_SCHEMA)

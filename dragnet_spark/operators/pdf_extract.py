@@ -37,11 +37,11 @@ import pyspark.sql.functions as F
 
 from ..kernels.pdf import (extract_text_runs, layout_blocks, make_pdf,
                            strip_margin_furniture, strip_repeated_furniture)
+from ..sources.synthesis import _spread_docs
+from .extract import map_doc_rows
 
 _WS_RE = re.compile(r'[ \t\n\r\f\v]+')
 
-PDF_BLOCKS_DDL = ('doc_id string, page int, block_idx int, kind string, '
-                  'size double, y_top double, text string')
 PDF_BLOCKS_PA_SCHEMA = pa.schema([
     ('doc_id', pa.string()),
     ('page', pa.int32()),
@@ -67,27 +67,23 @@ def render_pdf(doc_id, text):
                     footer='retrieved for research use')
 
 
+PDF_CORPUS_SCHEMA = pa.schema([('doc_id', pa.string()),
+                               ('payload', pa.binary())])
+
+
+def _spread_docs_str(spark, sf_dir, num_partitions):
+    return _spread_docs(spark, sf_dir, num_partitions).select(
+        F.col('doc_id').cast('string').alias('doc_id'), 'text')
+
+
 def pdf_corpus(spark, sf_dir, num_partitions=None):
     """documents.parquet -> (doc_id, payload binary) PDFs."""
-    if num_partitions is None:
-        num_partitions = 4 * spark.sparkContext.defaultParallelism
-    docs = (spark.read.parquet(f'{sf_dir}/documents.parquet')
-            .select(F.col('doc_id').cast('string').alias('doc_id'), 'text'))
-    if num_partitions:
-        docs = docs.repartition(num_partitions)
 
-    schema = pa.schema([('doc_id', pa.string()), ('payload', pa.binary())])
+    def per_row(doc_id, text):
+        return [{'doc_id': doc_id, 'payload': render_pdf(doc_id, text)}]
 
-    def gen(batches):
-        for rb in batches:
-            ids = rb.column('doc_id').to_pylist()
-            texts = rb.column('text').to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, pa.string()),
-                 pa.array([render_pdf(d, t) for d, t in zip(ids, texts)],
-                          pa.binary())], schema=schema)
-
-    return docs.mapInArrow(gen, 'doc_id string, payload binary')
+    return map_doc_rows(_spread_docs_str(spark, sf_dir, num_partitions),
+                        per_row, PDF_CORPUS_SCHEMA)
 
 
 def _doc_blocks(doc_id, payload, dechrome):
@@ -102,19 +98,12 @@ def _doc_blocks(doc_id, payload, dechrome):
 
 def pdf_layout_blocks(df, dechrome=False, payload_col='payload'):
     """(doc_id, payload) -> exploded ordered layout blocks."""
-    src = df.select('doc_id', F.col(payload_col).alias('_p'))
 
-    def gen(batches):
-        for rb in batches:
-            ids = rb.column('doc_id').to_pylist()
-            payloads = rb.column('_p').to_pylist()
-            rows = []
-            for d, p in zip(ids, payloads):
-                rows.extend(_doc_blocks(d, p, dechrome))
-            yield pa.RecordBatch.from_pylist(rows,
-                                             schema=PDF_BLOCKS_PA_SCHEMA)
+    def per_row(doc_id, payload):
+        return _doc_blocks(doc_id, payload, dechrome)
 
-    return src.mapInArrow(gen, PDF_BLOCKS_DDL)
+    return map_doc_rows(df.select('doc_id', F.col(payload_col).alias('_p')),
+                        per_row, PDF_BLOCKS_PA_SCHEMA)
 
 
 _CONTENT_SCHEMA = pa.schema([
@@ -123,8 +112,6 @@ _CONTENT_SCHEMA = pa.schema([
     ('n_pages', pa.int32()),
     ('content_text', pa.string()),
 ])
-_CONTENT_DDL = ('doc_id string, title string, n_pages int, '
-                'content_text string')
 
 
 def _content_row(doc_id, payload):
@@ -150,17 +137,12 @@ def pdf_extract_content(df, payload_col='payload'):
     shape as the HTML synthesize_and_extract fast path; asserted in
     tests/test_pdf.py).
     """
-    src = df.select('doc_id', F.col(payload_col).alias('_p'))
 
-    def gen(batches):
-        for rb in batches:
-            ids = rb.column('doc_id').to_pylist()
-            payloads = rb.column('_p').to_pylist()
-            yield pa.RecordBatch.from_pylist(
-                [_content_row(d, p) for d, p in zip(ids, payloads)],
-                schema=_CONTENT_SCHEMA)
+    def per_row(doc_id, payload):
+        return [_content_row(doc_id, payload)]
 
-    return src.mapInArrow(gen, _CONTENT_DDL)
+    return map_doc_rows(df.select('doc_id', F.col(payload_col).alias('_p')),
+                        per_row, _CONTENT_SCHEMA)
 
 
 def synthesize_and_extract_pdf(spark, sf_dir, num_partitions=None):
@@ -168,20 +150,9 @@ def synthesize_and_extract_pdf(spark, sf_dir, num_partitions=None):
     as ``pdf_extract_content(pdf_corpus(...))`` -- the Flate-compressed
     payload bytes never cross the Arrow boundary at all (guide §4.1),
     they are parsed right where they are written."""
-    if num_partitions is None:
-        num_partitions = 4 * spark.sparkContext.defaultParallelism
-    docs = (spark.read.parquet(f'{sf_dir}/documents.parquet')
-            .select(F.col('doc_id').cast('string').alias('doc_id'), 'text'))
-    if num_partitions:
-        docs = docs.repartition(num_partitions)
 
-    def gen(batches):
-        for rb in batches:
-            ids = rb.column('doc_id').to_pylist()
-            texts = rb.column('text').to_pylist()
-            yield pa.RecordBatch.from_pylist(
-                [_content_row(d, render_pdf(d, t))
-                 for d, t in zip(ids, texts)],
-                schema=_CONTENT_SCHEMA)
+    def per_row(doc_id, text):
+        return [_content_row(doc_id, render_pdf(doc_id, text))]
 
-    return docs.mapInArrow(gen, _CONTENT_DDL)
+    return map_doc_rows(_spread_docs_str(spark, sf_dir, num_partitions),
+                        per_row, _CONTENT_SCHEMA)

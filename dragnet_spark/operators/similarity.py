@@ -361,23 +361,6 @@ def embedding_near_duplicates(df, threshold=0.9, vec_col='embedding',
             .where(F.col('cosine') >= threshold))
 
 
-# r01 compatibility name: the ANN scale path was 4-bit hyperplane LSH,
-# which OR-matched ~64% of the corpus per query (no real pruning --
-# VERDICT r01); the SQ8 quantized scan replaced it.
-def lsh_topk(df, queries_df, k=5, vec_col='embedding', id_col='vec_id',
-             **_compat):
-    if _compat:
-        import warnings
-        warnings.warn(
-            'lsh_topk is a deprecated alias of quantized_topk; ignored '
-            'arguments: %s (the 4-bit LSH parameters bands/bits/seed '
-            'have no quantized-scan equivalent -- tune rerank_frac via '
-            'quantized_topk directly)' % sorted(_compat),
-            DeprecationWarning, stacklevel=2)
-    return quantized_topk(df, queries_df, k=k, vec_col=vec_col,
-                          id_col=id_col)
-
-
 def with_planted_duplicates(df, vec_col='embedding', id_col='vec_id',
                             noise=0.03, id_offset=1_000_000):
     """Union the corpus with a deterministic near-duplicate of every

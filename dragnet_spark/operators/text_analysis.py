@@ -178,9 +178,10 @@ GOPHER_MAX_TOP2GRAM_FRAC = 0.20
 GOPHER_MAX_DUP10GRAM_FRAC = 0.10
 
 
-def gopher_repetition_flags(df, text_col='text',
-                            max_top2=GOPHER_MAX_TOP2GRAM_FRAC,
-                            max_dup10=GOPHER_MAX_DUP10GRAM_FRAC):
+def gopher_repetition_flags_rowwise(df, text_col='text',
+                                    max_top2=GOPHER_MAX_TOP2GRAM_FRAC,
+                                    max_dup10=GOPHER_MAX_DUP10GRAM_FRAC,
+                                    keep_cols=()):
     """Gopher repetition rules (Rae et al. 2021 A1.1, the other half of
     the quality gate): documents dominated by a repeated phrase are
     SEO/boilerplate spam.
@@ -198,108 +199,14 @@ def gopher_repetition_flags(df, text_col='text',
 
     Tokens are lowercased punctuation-split (``tokens_col``); the
     character base is the sum of token lengths (no separators),
-    identically in the DuckDB oracle, so both fractions hash-match
-    bit-exactly.
+    identically in the DuckDB ``gopher_repetition`` oracle, so both
+    fractions hash-match it bit-exactly (crafted spam/short/empty rows
+    are pinned against the oracle in tests).
 
-    Plan: n-gram projections + explodes, (doc_id, gram) partial-
-    aggregated groupBys, a distinct over covered positions, per-doc
-    sums -- all doc_id-keyed shuffles of O(total tokens) rows, no
-    Python; the same shuffle class as passage mining.
-    """
-    raw = "array_remove(split(lower(%s), '[^a-z0-9]+'), '')" % text_col
-    # grams never exist as STRINGS: each n-gram is xxhash64 of its
-    # token-array slice (Spark hashes arrays structurally), so neither
-    # the projection nor any shuffle ever builds/moves n-gram text --
-    # the wide ops carry 8-byte keys.  Token char lengths ride
-    # alongside for the numerators.  A hash collision would need ~2^32
-    # distinct grams within ONE document to matter (hashes are
-    # compared per doc_id only).
-    #
-    # The explode(array(1)) Generate node is a COLLAPSE BARRIER:
-    # lambda bodies are opaque to Catalyst's subexpression elimination,
-    # so without it the tokenizer expression inlines into every lambda
-    # below (measured: 29 split() occurrences in the optimized plan --
-    # the corpus tokenized ~29x per row); behind the barrier `_toks`
-    # is a materialized attribute, tokenized once per row per branch.
-    tk = (df.select('doc_id', F.expr(raw).alias('_tk'),
-                    F.explode(F.array(F.lit(1))).alias('_b'))
-          .drop('_b'))
-    t = '_tk'
-    base = tk.select(
-        'doc_id',
-        F.expr('aggregate(transform(%s, x -> length(x)), 0, '
-               '(a, x) -> a + x)' % t).alias('_chars'),
-        F.expr(t).alias('_toks'),
-        F.expr("CASE WHEN size({t}) >= 2 THEN transform("
-               "sequence(0, size({t}) - 2), "
-               "i -> xxhash64(slice({t}, i + 1, 2))) "
-               "ELSE array() END".format(t=t)).alias('_g2h'),
-        F.expr("CASE WHEN size({t}) >= 2 THEN transform("
-               "sequence(0, size({t}) - 2), "
-               "i -> length(element_at({t}, i + 1)) "
-               "   + length(element_at({t}, i + 2))) "
-               "ELSE array() END".format(t=t)).alias('_g2len'),
-        F.expr("CASE WHEN size({t}) >= 10 THEN transform("
-               "sequence(0, size({t}) - 10), "
-               "i -> xxhash64(slice({t}, i + 1, 10))) "
-               "ELSE array() END".format(t=t)).alias('_g10h'))
-
-    # most frequent 2-gram, numerator = token chars (gram minus space)
-    g2 = (base.select('doc_id',
-                      F.explode(F.arrays_zip('_g2h', '_g2len'))
-                      .alias('z'))
-          .select('doc_id', F.col('z._g2h').alias('gh'),
-                  F.col('z._g2len').alias('glen'))
-          .groupBy('doc_id', 'gh')
-          .agg(F.count('*').alias('n'), F.max('glen').alias('glen'))
-          .groupBy('doc_id')
-          .agg(F.max(F.col('glen') * F.col('n')).alias('_top2')))
-
-    # duplicated 10-grams -> their start positions -> covered indices
-    starts = (base.select('doc_id',
-                          F.posexplode('_g10h').alias('i', 'gh')))
-    dup_grams = (starts.groupBy('doc_id', 'gh')
-                 .agg(F.count('*').alias('n'))
-                 .where(F.col('n') > 1)
-                 .select('doc_id', 'gh'))
-    covered = (starts.join(dup_grams, ['doc_id', 'gh'])
-               .select('doc_id',
-                       F.explode(F.expr('sequence(i, i + 9)'))
-                       .alias('idx'))
-               .distinct())
-    tok_pos = base.select('doc_id',
-                          F.posexplode('_toks').alias('idx', 'tok'))
-    dup10 = (covered.join(tok_pos, ['doc_id', 'idx'])
-             .groupBy('doc_id')
-             .agg(F.sum(F.length('tok')).alias('_dup10')))
-
-    out = (base.select('doc_id', '_chars')
-           .join(g2, 'doc_id', 'left')
-           .join(dup10, 'doc_id', 'left'))
-    top2 = (F.coalesce('_top2', F.lit(0)).cast('double')
-            / F.greatest('_chars', F.lit(1)).cast('double'))
-    dup = (F.coalesce('_dup10', F.lit(0)).cast('double')
-           / F.greatest('_chars', F.lit(1)).cast('double'))
-    passes = (top2 <= max_top2) & (dup <= max_dup10)
-    return out.select(
-        'doc_id',
-        F.round(top2, 6).alias('top_2gram_char_frac'),
-        F.round(dup, 6).alias('dup_10gram_char_frac'),
-        passes.cast('long').alias('passes_repetition'))
-
-
-def gopher_repetition_flags_rowwise(df, text_col='text',
-                                    max_top2=GOPHER_MAX_TOP2GRAM_FRAC,
-                                    max_dup10=GOPHER_MAX_DUP10GRAM_FRAC,
-                                    keep_cols=()):
-    """The Gopher repetition gate as ONE stateless projection -- no
-    groupBy, no join, no shuffle -- bit-identical to
-    :func:`gopher_repetition_flags` (asserted in tests).
-
-    Being stateless makes it legal in a Structured Streaming pipeline
-    (the shuffle form's blocking aggregations are not, short of
-    watermark gymnastics on a per-doc key) and removes the gate's four
-    shuffles in batch.  The trick: per-gram COUNTS come from run
+    ONE stateless projection -- no groupBy, no join, no shuffle -- so
+    it is legal in a Structured Streaming pipeline (blocking
+    aggregations are not, short of watermark gymnastics on a per-doc
+    key).  The trick: per-gram COUNTS come from run
     lengths in the doc's SORTED gram-hash array (equal hashes are
     adjacent after ``array_sort``; a single ``aggregate`` pass with a
     (prev, run, best) accumulator finds the max), and the duplicated-
@@ -313,14 +220,11 @@ def gopher_repetition_flags_rowwise(df, text_col='text',
     everywhere else -- the r05 form's coverage step was
     O(starts x duplicated-gram-set) (an ``array_contains`` per
     position) with an ``array_append`` accumulator (quadratic on
-    mostly-repeat spam); both are gone, so this form is now the batch
-    default as well (``__spark_entry__.q_gopher_repetition``,
-    ``curation.gate_funnel`` / ``curate_corpus``), replacing four
-    token-exploded shuffles and five re-computations of the corpus
-    scan+tokenize projection (the shuffle form's plan re-reads the
-    base five times) with one zero-shuffle projection.  The shuffle
-    form remains exported as the cross-check twin (bit-equality
-    asserted in tests).
+    mostly-repeat spam); both are gone, so this form is the batch
+    gate too (``__spark_entry__.q_gopher_repetition``,
+    ``curation.gate_funnel`` / ``curate_corpus``), in place of a
+    shuffle form's four token-exploded shuffles and five
+    re-computations of the corpus scan+tokenize projection.
     """
     # (r06 2nd pass: an Arrow python tokenizer stage was A/B-measured
     # here and REVERTED -- 1.15 s vs 1.25-1.45 s at the 50 k corpus.
@@ -340,9 +244,9 @@ def gopher_repetition_flags_rowwise(df, text_col='text',
     # INTERPRETED evaluator -- the r06 form hashed each token's string
     # ~12x (once per overlapping 2-gram and 10-gram slice); hashing 8-
     # byte longs instead cuts the dominant interpreted work.  Gram
-    # equality via equal hash values is unchanged in kind (the shuffle
-    # twin groups on 8-byte gram hashes too); only the internal hash
-    # VALUES differ, which the output fractions never see.
+    # equality via equal hash values is unchanged in kind; only the
+    # internal hash VALUES differ, which the output fractions never
+    # see.
     hk = (tk.select('doc_id', *keep, '_tk',
                     F.expr('transform(_tk, x -> xxhash64(x))').alias('_th'),
                     F.explode(F.array(F.lit(1))).alias('_b'))

@@ -25,16 +25,13 @@ import hashlib
 import re
 
 import pyarrow as pa
+from pyspark.sql.pandas.types import from_arrow_schema
 
-SPANS_SCHEMA = pa.schema([
-    ('doc_id', pa.string()),
-    ('spans', pa.list_(pa.struct([
-        ('kind', pa.string()),
-        ('text', pa.string()),
-        ('media_ref', pa.string()),
-        ('offset', pa.int32()),
-    ]))),
-])
+from ..model import default_model
+from ..operators.extract import (EXTRACTED_PA_SCHEMA, SPANS_TYPE,
+                                 extracted_row, map_doc_rows)
+
+SPANS_SCHEMA = pa.schema([('doc_id', pa.string()), ('spans', SPANS_TYPE)])
 
 GOLD_SCHEMA = pa.schema([
     ('doc_id', pa.string()),
@@ -288,10 +285,17 @@ EDGE_DOCS = [
 ]
 
 
-def synthesize_batches(doc_batch, amplification=1, chrome_by_host=False):
-    """documents.parquet RecordBatch -> (spans RecordBatch, gold RecordBatch).
+def _span_dicts(spans):
+    return [{'kind': k, 'text': t, 'media_ref': m, 'offset': o}
+            for k, t, m, o in spans]
 
-    Pure function of the input rows (executor-safe, order-independent).
+
+def _iter_docs(did, text, amplification=1, chrome_by_host=False):
+    """Yield ``(doc_id, span_dicts, gold_content, gold_comments)`` for
+    the ``amplification`` synthetic documents of one source row -- the
+    one id scheme (~30% of ids on host ``h000``, FIXTURES.md §6) and
+    rendering every synthesis path shares.
+
     ``chrome_by_host=True`` is the phase-3 "hard" corpus: each HOST is
     deterministically assigned one of the four chrome template families
     (default/alt/de/zh), so templates cross hosts and ~half the chrome
@@ -299,22 +303,29 @@ def synthesize_batches(doc_batch, amplification=1, chrome_by_host=False):
     boilerplate), but extraction can no longer key on any one template
     and template mining has real cross-host families to find.
     """
-    doc_ids = doc_batch.column('doc_id').to_pylist()
-    texts = doc_batch.column('text').to_pylist()
+    for rep in range(amplification):
+        h = _h('%s:%d' % (did, rep), 10)
+        host = ('h000' if h < 3
+                else 'h%03d' % (1 + _h('%s:%d:host' % (did, rep), 97)))
+        sid = '%s/doc-%08d-%d' % (host, did, rep)
+        chrome = (TEMPLATE_FAMILIES[_h(host + ':tpl', len(TEMPLATE_FAMILIES))]
+                  if chrome_by_host else 'default')
+        spans, gold_c, gold_m = make_document(sid, text or '', chrome=chrome)
+        yield sid, _span_dicts(spans), gold_c, gold_m
+
+
+def synthesize_batches(doc_batch, amplification=1, chrome_by_host=False):
+    """documents.parquet RecordBatch -> (spans RecordBatch, gold RecordBatch).
+
+    Pure function of the input rows (executor-safe, order-independent);
+    see :func:`_iter_docs` for ``chrome_by_host``.
+    """
     span_rows, gold_rows = [], []
-    for did, text in zip(doc_ids, texts):
-        for rep in range(amplification):
-            h = _h('%s:%d' % (did, rep), 10)
-            host = 'h000' if h < 3 else 'h%03d' % (1 + _h('%s:%d:host' % (did, rep), 97))
-            sid = '%s/doc-%08d-%d' % (host, did, rep)
-            chrome = (TEMPLATE_FAMILIES[_h(host + ':tpl',
-                                           len(TEMPLATE_FAMILIES))]
-                      if chrome_by_host else 'default')
-            spans, gold_c, gold_m = make_document(sid, text or '',
-                                                  chrome=chrome)
-            span_rows.append({'doc_id': sid, 'spans': [
-                {'kind': k, 'text': t, 'media_ref': m, 'offset': o}
-                for k, t, m, o in spans]})
+    for did, text in zip(doc_batch.column('doc_id').to_pylist(),
+                         doc_batch.column('text').to_pylist()):
+        for sid, spans, gold_c, gold_m in _iter_docs(did, text, amplification,
+                                                     chrome_by_host):
+            span_rows.append({'doc_id': sid, 'spans': spans})
             gold_rows.append({'doc_id': sid, 'content_text': gold_c,
                               'comments_text': gold_m})
     spans_rb = pa.RecordBatch.from_pylist(span_rows, schema=SPANS_SCHEMA)
@@ -322,45 +333,42 @@ def synthesize_batches(doc_batch, amplification=1, chrome_by_host=False):
     return spans_rb, gold_rb
 
 
-def edge_doc_rows():
-    """The fixed edge-case docs as (span_rows, gold_rows) pylists."""
-    span_rows, gold_rows = [], []
-    for sid, html, gold in EDGE_DOCS:
-        span_rows.append({'doc_id': sid, 'spans': [
-            {'kind': 'text', 'text': html, 'media_ref': '', 'offset': 0}]})
-        gold_rows.append({'doc_id': sid, 'content_text': gold,
-                          'comments_text': ''})
-    return span_rows, gold_rows
-
-
 def edge_docs_dfs(spark):
-    """(spans_df, gold_df) for the fixed edge-case docs -- the tiny
-    union branch the fused single-stage queries attach so their output
-    matches ``synthesize_corpus(include_edge_docs=True)`` pipelines."""
-    import pyspark.sql.types as T
-
-    spans_type = T.StructType([
-        T.StructField('doc_id', T.StringType()),
-        T.StructField('spans', T.ArrayType(T.StructType([
-            T.StructField('kind', T.StringType()),
-            T.StructField('text', T.StringType()),
-            T.StructField('media_ref', T.StringType()),
-            T.StructField('offset', T.IntegerType()),
-        ]))),
-    ])
-    gold_type = T.StructType([
-        T.StructField('doc_id', T.StringType()),
-        T.StructField('content_text', T.StringType()),
-        T.StructField('comments_text', T.StringType()),
-    ])
-    span_rows, gold_rows = edge_doc_rows()
-    return (spark.createDataFrame(span_rows, spans_type),
-            spark.createDataFrame(gold_rows, gold_type))
+    """(spans_df, gold_df) for the fixed edge-case docs (FIXTURES.md §1)
+    -- the tiny union branch of ``synthesize_corpus(include_edge_docs=
+    True)``, also attached by the fused single-stage queries so their
+    output matches it."""
+    span_rows = [{'doc_id': sid, 'spans': [
+        {'kind': 'text', 'text': html, 'media_ref': '', 'offset': 0}]}
+        for sid, html, _ in EDGE_DOCS]
+    gold_rows = [{'doc_id': sid, 'content_text': gold, 'comments_text': ''}
+                 for sid, _, gold in EDGE_DOCS]
+    return (spark.createDataFrame(span_rows, from_arrow_schema(SPANS_SCHEMA)),
+            spark.createDataFrame(gold_rows, from_arrow_schema(GOLD_SCHEMA)))
 
 
-def synthesize_fused(spark, sf_dir, per_doc_rows, pa_schema, ddl,
-                     amplification=1, num_partitions=None,
-                     docs_per_flush=1024):
+def _spread_docs(spark, sf_dir, num_partitions=None):
+    """documents.parquet ``(doc_id, text)``, round-robin spread over
+    ``num_partitions`` (default 4 x defaultParallelism; 0 keeps the file
+    splits, for plan inspection).
+
+    The source parquet is one small file = one input split, but the
+    downstream Arrow stages (synthesis, blockify, featurize) are
+    Python-heavy per row -- parallelism must come from an explicit
+    repartition of the *cheap* doc rows before the fat work, not from
+    file splits.  One tiny round-robin exchange of (doc_id, text) rows,
+    then everything stays narrow.  Catalyst prunes the scan to
+    (doc_id, text) (ReadSchema).
+    """
+    if num_partitions is None:
+        num_partitions = 4 * spark.sparkContext.defaultParallelism
+    docs = spark.read.parquet(f'{sf_dir}/documents.parquet').select(
+        'doc_id', 'text')
+    return docs.repartition(num_partitions) if num_partitions else docs
+
+
+def synthesize_fused(spark, sf_dir, per_doc_rows, pa_schema,
+                     amplification=1, num_partitions=None):
     """Synthesis + an arbitrary per-document kernel in ONE python stage.
 
     The two-stage form (``synthesize_corpus`` -> join/mapInArrow) pays
@@ -370,48 +378,22 @@ def synthesize_fused(spark, sf_dir, per_doc_rows, pa_schema, ddl,
     a doc_id shuffle join of two opaque python outputs (guide §4.1: you
     control how many columns/rows cross the boundary).  Here
     ``per_doc_rows(sid, span_dicts, gold_content, gold_comments)`` runs
-    right where the document is synthesized -- same id scheme and
-    rendering as :func:`synthesize_batches` -- so spans and gold never
-    cross the boundary at all, only the kernel's output rows.
+    right where the document is synthesized (:func:`_iter_docs`), so
+    spans and gold never cross the boundary at all, only the kernel's
+    ``pa_schema`` output rows (batches bounded by
+    ``operators.extract.doc_row_batches``).
 
-    Output batches are flushed every ``docs_per_flush`` documents to
-    bound per-batch memory.  Covers the parquet corpus only; callers
-    wanting edge-doc parity union the tiny :func:`edge_docs_dfs` branch.
+    Covers the parquet corpus only; callers wanting edge-doc parity
+    union the tiny :func:`edge_docs_dfs` branch.
     """
-    if num_partitions is None:
-        num_partitions = 4 * spark.sparkContext.defaultParallelism
-    docs = spark.read.parquet(f'{sf_dir}/documents.parquet').select(
-        'doc_id', 'text')
-    if num_partitions:
-        docs = docs.repartition(num_partitions)
 
-    def gen(batches):
-        for rb in batches:
-            doc_ids = rb.column('doc_id').to_pylist()
-            texts = rb.column('text').to_pylist()
-            rows = []
-            n_done = 0
-            for did, text in zip(doc_ids, texts):
-                for rep in range(amplification):
-                    h = _h('%s:%d' % (did, rep), 10)
-                    host = ('h000' if h < 3 else 'h%03d'
-                            % (1 + _h('%s:%d:host' % (did, rep), 97)))
-                    sid = '%s/doc-%08d-%d' % (host, did, rep)
-                    spans, gold_c, gold_m = make_document(sid, text or '')
-                    span_dicts = [
-                        {'kind': k, 'text': t, 'media_ref': m, 'offset': o}
-                        for k, t, m, o in spans]
-                    rows.extend(per_doc_rows(sid, span_dicts,
-                                             gold_c, gold_m))
-                    n_done += 1
-                    if n_done >= docs_per_flush:
-                        yield pa.RecordBatch.from_pylist(rows,
-                                                         schema=pa_schema)
-                        rows, n_done = [], 0
-            if rows:
-                yield pa.RecordBatch.from_pylist(rows, schema=pa_schema)
+    def per_row(did, text):
+        for sid, spans, gold_c, gold_m in _iter_docs(did, text,
+                                                     amplification):
+            yield from per_doc_rows(sid, spans, gold_c, gold_m)
 
-    return docs.mapInArrow(gen, ddl)
+    return map_doc_rows(_spread_docs(spark, sf_dir, num_partitions),
+                        per_row, pa_schema)
 
 
 def synthesize_extract_gold_counts(spark, sf_dir, amplification=1,
@@ -426,8 +408,6 @@ def synthesize_extract_gold_counts(spark, sf_dir, amplification=1,
     (``metrics.TOKEN_PATTERN``), on which Java and Python regex agree
     codepoint-for-codepoint, and the emitted counts are exact ints, so
     the downstream ratio arithmetic is bit-identical."""
-    from ..model import default_model
-    from ..operators.extract import process_document
     from ..operators.metrics import TOKEN_PATTERN
 
     model = model or default_model()
@@ -436,10 +416,7 @@ def synthesize_extract_gold_counts(spark, sf_dir, amplification=1,
                         ('_np', pa.int32()), ('_na', pa.int32())])
 
     def per_doc(sid, span_dicts, gold_c, gold_m):
-        try:
-            _, content, _ = process_document(span_dicts, model)
-        except Exception:
-            content = ''
+        content = extracted_row(sid, span_dicts, model)['content_text']
         p = set(tok_re.split(content))
         p.discard('')
         a = set(tok_re.split(gold_c))
@@ -447,46 +424,15 @@ def synthesize_extract_gold_counts(spark, sf_dir, amplification=1,
         return [{'doc_id': sid, '_tp': len(p & a), '_np': len(p),
                  '_na': len(a)}]
 
-    return synthesize_fused(spark, sf_dir, per_doc, schema,
-                            'doc_id string, _tp int, _np int, _na int',
-                            amplification, num_partitions)
+    return synthesize_fused(spark, sf_dir, per_doc, schema, amplification,
+                            num_partitions)
 
 
 def synthesize_corpus(spark, sf_dir, amplification=1, include_edge_docs=True,
                       num_partitions=None, chrome_by_host=False):
-    """Distributed corpus synthesis: returns (spans_df, gold_df).
-
-    The source parquet is one small file = one input split, but the
-    downstream Arrow stages (synthesis, blockify, featurize) are
-    Python-heavy per row -- parallelism must come from an explicit
-    repartition of the *cheap* doc rows before the fat work, not from
-    file splits.  One tiny round-robin exchange of (doc_id, text) rows,
-    then everything stays narrow.  Catalyst prunes the scan to
-    (doc_id, text) (ReadSchema).
-    """
-    import pyspark.sql.types as T
-
-    if num_partitions is None:
-        num_partitions = 4 * spark.sparkContext.defaultParallelism
-    docs = spark.read.parquet(f'{sf_dir}/documents.parquet').select(
-        'doc_id', 'text')
-    if num_partitions:  # 0/None disables the spread (plan inspection)
-        docs = docs.repartition(num_partitions)
-
-    spans_type = T.StructType([
-        T.StructField('doc_id', T.StringType()),
-        T.StructField('spans', T.ArrayType(T.StructType([
-            T.StructField('kind', T.StringType()),
-            T.StructField('text', T.StringType()),
-            T.StructField('media_ref', T.StringType()),
-            T.StructField('offset', T.IntegerType()),
-        ]))),
-    ])
-    gold_type = T.StructType([
-        T.StructField('doc_id', T.StringType()),
-        T.StructField('content_text', T.StringType()),
-        T.StructField('comments_text', T.StringType()),
-    ])
+    """Distributed corpus synthesis: returns (spans_df, gold_df), each
+    one Arrow stage over the spread doc rows (:func:`_spread_docs`)."""
+    docs = _spread_docs(spark, sf_dir, num_partitions)
 
     def gen_spans(batches):
         for rb in batches:
@@ -498,13 +444,13 @@ def synthesize_corpus(spark, sf_dir, amplification=1, include_edge_docs=True,
             _, out = synthesize_batches(rb, amplification, chrome_by_host)
             yield out
 
-    spans_df = docs.mapInArrow(gen_spans, schema=spans_type)
-    gold_df = docs.mapInArrow(gen_gold, schema=gold_type)
+    spans_df = docs.mapInArrow(gen_spans, from_arrow_schema(SPANS_SCHEMA))
+    gold_df = docs.mapInArrow(gen_gold, from_arrow_schema(GOLD_SCHEMA))
 
     if include_edge_docs:
-        span_rows, gold_rows = edge_doc_rows()
-        spans_df = spans_df.unionByName(spark.createDataFrame(span_rows, spans_type))
-        gold_df = gold_df.unionByName(spark.createDataFrame(gold_rows, gold_type))
+        edge_spans, edge_gold = edge_docs_dfs(spark)
+        spans_df = spans_df.unionByName(edge_spans)
+        gold_df = gold_df.unionByName(edge_gold)
     return spans_df, gold_df
 
 
@@ -527,49 +473,21 @@ def synthesize_with_mirrors(spark, sf_dir, mod=8, num_partitions=None):
     differing template dominates the token stream); near-dup over
     *extracted* content finds them.
 
-    Returns (spans_df, n_expected_mirror_pairs_is_data_dependent).
+    Returns the spans DataFrame (the number of mirror pairs is data
+    dependent).
     """
-    import pyspark.sql.types as T
 
-    if num_partitions is None:
-        num_partitions = 4 * spark.sparkContext.defaultParallelism
-    docs = spark.read.parquet(f'{sf_dir}/documents.parquet').select(
-        'doc_id', 'text')
-    if num_partitions:
-        docs = docs.repartition(num_partitions)
+    def per_row(did, text):
+        for sid, spans, _, _ in _iter_docs(did, text):
+            yield {'doc_id': sid, 'spans': spans}
+            if _h(sid + ':mirror', mod) == 0:
+                mirror, _, _ = make_document('mirror/' + sid, text or '',
+                                             chrome='alt', layout_key=sid)
+                yield {'doc_id': 'mirror/' + sid,
+                       'spans': _span_dicts(mirror)}
 
-    spans_type = T.StructType([
-        T.StructField('doc_id', T.StringType()),
-        T.StructField('spans', T.ArrayType(T.StructType([
-            T.StructField('kind', T.StringType()),
-            T.StructField('text', T.StringType()),
-            T.StructField('media_ref', T.StringType()),
-            T.StructField('offset', T.IntegerType()),
-        ]))),
-    ])
-
-    def gen(batches):
-        for rb in batches:
-            doc_ids = rb.column('doc_id').to_pylist()
-            texts = rb.column('text').to_pylist()
-            rows = []
-            for did, text in zip(doc_ids, texts):
-                h = _h('%s:0' % did, 10)
-                host = ('h000' if h < 3
-                        else 'h%03d' % (1 + _h('%s:0:host' % did, 97)))
-                sid = '%s/doc-%08d-0' % (host, did)
-                variants = [(sid, 'default', sid)]
-                if _h(sid + ':mirror', mod) == 0:
-                    variants.append(('mirror/' + sid, 'alt', sid))
-                for out_id, chrome, lk in variants:
-                    spans, _, _ = make_document(out_id, text or '',
-                                                chrome=chrome, layout_key=lk)
-                    rows.append({'doc_id': out_id, 'spans': [
-                        {'kind': k, 'text': t, 'media_ref': m, 'offset': o}
-                        for k, t, m, o in spans]})
-            yield pa.RecordBatch.from_pylist(rows, schema=SPANS_SCHEMA)
-
-    return docs.mapInArrow(gen, schema=spans_type)
+    return map_doc_rows(_spread_docs(spark, sf_dir, num_partitions),
+                        per_row, SPANS_SCHEMA)
 
 
 def iter_span_docs(doc_ids, texts, amplification=1):
@@ -577,14 +495,8 @@ def iter_span_docs(doc_ids, texts, amplification=1):
     scheme and rendering as :func:`synthesize_batches`, without the
     intermediate Arrow materialization."""
     for did, text in zip(doc_ids, texts):
-        for rep in range(amplification):
-            h = _h('%s:%d' % (did, rep), 10)
-            host = ('h000' if h < 3
-                    else 'h%03d' % (1 + _h('%s:%d:host' % (did, rep), 97)))
-            sid = '%s/doc-%08d-%d' % (host, did, rep)
-            spans, _, _ = make_document(sid, text or '')
-            yield sid, [{'kind': k, 'text': t, 'media_ref': m, 'offset': o}
-                        for k, t, m, o in spans]
+        for sid, spans, _, _ in _iter_docs(did, text, amplification):
+            yield sid, spans
 
 
 def synthesize_and_extract(spark, sf_dir, amplification=1, model=None,
@@ -597,42 +509,10 @@ def synthesize_and_extract(spark, sf_dir, amplification=1, model=None,
     span structs never need to exist JVM-side at all.  Same output as
     extract(synthesize_corpus(...)[0]) for the no-edge-docs corpus
     (asserted in tests)."""
-    from ..model import default_model
-    from ..operators.extract import (EXTRACTED_DDL, EXTRACTED_PA_SCHEMA,
-                                     OUT_BATCH_BYTES, STATUS_ERROR,
-                                     process_document)
-
     model = model or default_model()
-    if num_partitions is None:
-        num_partitions = 4 * spark.sparkContext.defaultParallelism
-    docs = spark.read.parquet(f'{sf_dir}/documents.parquet').select(
-        'doc_id', 'text')
-    if num_partitions:
-        docs = docs.repartition(num_partitions)
 
-    def gen(batches):
-        for rb in batches:
-            doc_ids = rb.column('doc_id').to_pylist()
-            texts = rb.column('text').to_pylist()
-            rows = []
-            approx_bytes = 0
-            for sid, span_dicts in iter_span_docs(doc_ids, texts,
-                                                  amplification):
-                try:
-                    out_spans, content, status = process_document(
-                        span_dicts, model)
-                except Exception:
-                    out_spans, content, status = [], '', STATUS_ERROR
-                rows.append({'doc_id': sid, 'spans': out_spans,
-                             'content_text': content, 'status': status})
-                approx_bytes += 2 * len(content) + 64
-                if approx_bytes >= OUT_BATCH_BYTES:
-                    yield pa.RecordBatch.from_pylist(
-                        rows, schema=EXTRACTED_PA_SCHEMA)
-                    rows = []
-                    approx_bytes = 0
-            if rows:
-                yield pa.RecordBatch.from_pylist(
-                    rows, schema=EXTRACTED_PA_SCHEMA)
+    def per_doc(sid, span_dicts, gold_c, gold_m):
+        return [extracted_row(sid, span_dicts, model)]
 
-    return docs.mapInArrow(gen, EXTRACTED_DDL)
+    return synthesize_fused(spark, sf_dir, per_doc, EXTRACTED_PA_SCHEMA,
+                            amplification, num_partitions)

@@ -29,6 +29,7 @@ Required cluster confs (documented, not settable here)::
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 
 ICEBERG_CATALOG_IMPL = 'org.apache.iceberg.spark.SparkCatalog'
 
@@ -107,6 +108,23 @@ def append_run_partitioned(df, name, path=None, catalog='lake'):
     df.write.mode('append').partitionBy('run_id').parquet(path)
 
 
+def _read_runs(spark, base, *paths):
+    """Parquet read of hive ``run_id=<id>`` directories under ``base``
+    with ``run_id`` typed string.  Partition discovery would infer an
+    all-digit id (``000000000001``, which a ``uuid4`` hex prefix can
+    draw) as an integer -- dropping its leading zeros -- and
+    ``<digits>e<digits>`` as a double; a manifest aggregated from such
+    a read then mixes numeric and string ``run_id`` files and cannot be
+    read back.  A user schema types the partition column exactly as the
+    raw directory value."""
+    reader = spark.read.option('basePath', base)
+    inferred = reader.parquet(*paths).schema
+    schema = T.StructType([
+        T.StructField('run_id', T.StringType()) if f.name == 'run_id'
+        else f for f in inferred])
+    return reader.schema(schema).parquet(*paths)
+
+
 def read_all_runs(spark, name, path=None, catalog='lake'):
     """Every run's rows, tolerant of a MIXED on-disk layout.
 
@@ -116,9 +134,8 @@ def read_all_runs(spark, name, path=None, catalog='lake'):
     old checkpoint resumed under the new code) fails Spark's partition
     discovery outright -- conflicting directory structures plus a
     duplicate ``run_id`` column (ADVICE r03).  Here the two layouts are
-    listed apart and read separately, then unioned by name with
-    ``run_id`` normalized to string (partition-value type inference
-    could otherwise type an all-digit run id as long).  Iceberg needs
+    listed apart and read separately, then unioned by name, ``run_id``
+    a string in both (:func:`_read_runs`).  Iceberg needs
     none of this: the partition transform is table metadata, not
     directory layout.
     """
@@ -133,11 +150,9 @@ def read_all_runs(spark, name, path=None, catalog='lake'):
                   if e.endswith('.parquet') and not e.startswith('_'))
     runs = sorted(e for e in entries if e.startswith('run_id='))
     if not (flat and runs):
-        return spark.read.parquet(path)
+        return _read_runs(spark, path, path)
     legacy = spark.read.parquet(*(os.path.join(path, f) for f in flat))
-    cur = (spark.read.option('basePath', path)
-           .parquet(*(os.path.join(path, d) for d in runs)))
-    cur = cur.withColumn('run_id', F.col('run_id').cast('string'))
+    cur = _read_runs(spark, path, *(os.path.join(path, d) for d in runs))
     return legacy.unionByName(cur, allowMissingColumns=True)
 
 
@@ -150,5 +165,4 @@ def read_run(spark, name, run_id, path=None, catalog='lake'):
         raise ValueError('no Iceberg catalog and no fallback path for %r'
                          % name)
     import os
-    return (spark.read.option('basePath', path)
-            .parquet(os.path.join(path, 'run_id=%s' % run_id)))
+    return _read_runs(spark, path, os.path.join(path, 'run_id=%s' % run_id))

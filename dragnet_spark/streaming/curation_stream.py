@@ -3,11 +3,9 @@ unbounded source.
 
     spans stream -> fused extraction (stateless mapInArrow)
                  -> Gopher quality gate (stateless projection)
-                 -> Gopher repetition gate (ROWWISE form -- the shuffle
-                    form's blocking aggregations are illegal in a
-                    stream; ``gopher_repetition_flags_rowwise`` is the
-                    same math as one stateless projection, equality
-                    asserted in tests)
+                 -> Gopher repetition gate (ROWWISE: one stateless
+                    projection, so legal in a stream where blocking
+                    aggregations are not)
                  -> stateful first-seen exact dedup
                     (applyInPandasWithState, per-host fingerprint state)
 
@@ -27,11 +25,13 @@ see.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..operators.text_analysis import (GOPHER_MAX_DUP10GRAM_FRAC,
                                        GOPHER_MAX_TOP2GRAM_FRAC,
                                        gopher_quality_flags,
                                        gopher_repetition_flags_rowwise)
+from ..sources.synthesis import SPANS_SCHEMA
 from .dedup_stream import dedup_stream
 from .extract_stream import extract_stream
 
@@ -63,18 +63,8 @@ def curate_stream(spans_stream, model=None,
 def run_curation_stream(spark, source_dir, out_dir, checkpoint_dir,
                         model=None, max_dup10=GOPHER_MAX_DUP10GRAM_FRAC):
     """File-source -> full curation -> parquet, one availableNow pass."""
-    import pyspark.sql.types as T
-
-    schema = T.StructType([
-        T.StructField('doc_id', T.StringType()),
-        T.StructField('spans', T.ArrayType(T.StructType([
-            T.StructField('kind', T.StringType()),
-            T.StructField('text', T.StringType()),
-            T.StructField('media_ref', T.StringType()),
-            T.StructField('offset', T.IntegerType()),
-        ]))),
-    ])
-    src = spark.readStream.schema(schema).parquet(source_dir)
+    src = (spark.readStream.schema(from_arrow_schema(SPANS_SCHEMA))
+           .parquet(source_dir))
     out = curate_stream(src, model=model, max_dup10=max_dup10)
     q = (out.writeStream.format('parquet')
          .option('path', out_dir)

@@ -2,7 +2,7 @@
 
 The reference has no streaming surface (SURVEY.md §2.7); this is the
 Spark-native extension: the SAME fused Arrow stage
-(``operators.extract.make_extract_fn``) applied to an unbounded source.
+(``operators.extract.extract``) applied to an unbounded source.
 ``mapInArrow`` is a stateless narrow map, so it composes with any
 streaming source/sink, needs no watermark, and checkpointing comes from
 the engine (exactly-once file sink via the streaming commit log --
@@ -15,14 +15,15 @@ deterministic.
 
 from __future__ import annotations
 
-from ..model import default_model
-from ..operators.extract import EXTRACTED_DDL, make_extract_fn
+from pyspark.sql.pandas.types import from_arrow_schema
+
+from ..operators.extract import extract
+from ..sources.synthesis import SPANS_SCHEMA
 
 
 def extract_stream(stream_df, model=None):
     """streaming DataFrame[(doc_id, spans)] -> streaming extraction."""
-    model = model or default_model()
-    return stream_df.mapInArrow(make_extract_fn(model), EXTRACTED_DDL)
+    return extract(stream_df, model)
 
 
 def run_file_stream(spark, source_dir, out_dir, checkpoint_dir,
@@ -30,18 +31,7 @@ def run_file_stream(spark, source_dir, out_dir, checkpoint_dir,
     """File-source -> parquet-sink streaming job, one availableNow pass.
 
     Returns the StreamingQuery (already awaited to termination)."""
-    from ..sources.synthesis import SPANS_SCHEMA  # noqa: F401
-    import pyspark.sql.types as T
-
-    schema = source_schema or T.StructType([
-        T.StructField('doc_id', T.StringType()),
-        T.StructField('spans', T.ArrayType(T.StructType([
-            T.StructField('kind', T.StringType()),
-            T.StructField('text', T.StringType()),
-            T.StructField('media_ref', T.StringType()),
-            T.StructField('offset', T.IntegerType()),
-        ]))),
-    ])
+    schema = source_schema or from_arrow_schema(SPANS_SCHEMA)
     src = spark.readStream.schema(schema).parquet(source_dir)
     out = extract_stream(src, model)
     q = (out.writeStream

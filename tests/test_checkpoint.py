@@ -51,6 +51,37 @@ class TestCheckpointResume:
         assert m2.agg(F.sum('n_docs')).first()[0] == total
         assert run1 != run2
 
+    def test_numeric_run_id_resumes(self, spark, tmp_path, small_corpus):
+        # an all-digit run id (a caller's, or a uuid4 hex prefix that
+        # happens to draw only digits) must read back as the same string:
+        # partition discovery would infer run_id=000000000001 as bigint 1
+        from dragnet_spark.operators.extract import extract
+        from dragnet_spark.plans.partitioning import repartition_by_doc_range
+        from dragnet_spark.sources.checkpoint import (
+            extract_resumable, read_extracted, read_manifest,
+            run_with_checkpoints)
+        base = str(tmp_path / 'ckpt_numeric')
+        total = small_corpus.count()
+        mid = sorted(r.doc_id for r in small_corpus.select('doc_id')
+                     .collect())[total // 2]
+        half = small_corpus.where(F.col('doc_id') <= mid)
+
+        run1 = run_with_checkpoints(
+            extract(repartition_by_doc_range(half, 4)), base,
+            run_id='000000000001')
+        assert run1 == '000000000001'
+        m1 = read_manifest(spark, base)
+        assert {r.run_id for r in m1.collect()} == {run1}
+        assert m1.agg(F.sum('n_docs')).first()[0] == half.count()
+
+        run2 = extract_resumable(spark, small_corpus, base, num_partitions=4)
+        m2 = read_manifest(spark, base)
+        assert {r.run_id for r in m2.collect()} == {run1, run2}
+        assert m2.agg(F.sum('n_docs')).first()[0] == total
+        committed = read_extracted(spark, base)
+        assert committed.count() == total
+        assert committed.select('doc_id').distinct().count() == total
+
     def test_orphan_rows_invisible_and_reprocessed_once(self, spark, tmp_path,
                                                         small_corpus):
         # crash between the output append and the manifest append (ADVICE

@@ -215,13 +215,13 @@ class TestGateFunnel:
     def test_counts_match_flag_tables(self, spark, sf_dir):
         from dragnet_spark.operators.curation import gate_funnel
         from dragnet_spark.operators.text_analysis import (
-            gopher_quality_flags, gopher_repetition_flags)
+            gopher_quality_flags, gopher_repetition_flags_rowwise)
         docs = (spark.read.parquet(f'{sf_dir}/documents.parquet')
                 .select('doc_id', 'text'))
         row = gate_funnel(docs, max_dup10=0.6).collect()[0]
         q = gopher_quality_flags(docs).agg(
             F.sum('passes')).collect()[0][0]
-        r = gopher_repetition_flags(docs, max_dup10=0.6).agg(
+        r = gopher_repetition_flags_rowwise(docs, max_dup10=0.6).agg(
             F.sum('passes_repetition')).collect()[0][0]
         assert row.n_total == docs.count()
         assert row.n_quality_pass == q
@@ -298,25 +298,35 @@ class TestZipSafeModelLoading:
 
 @pytest.mark.spark
 class TestRowwiseRepetitionGate:
-    def test_bit_identical_to_shuffle_form(self, spark, sf_dir):
+    def test_bit_identical_to_duckdb_oracle(self, spark, sf_dir):
+        # the spec is pinned by the DuckDB oracle: the corpus plus
+        # crafted empty / short / spam / cyclic / sub-10-gram rows
+        import duckdb
+
+        from __spark_entry__ import _gopher_repetition_oracle
         from dragnet_spark.operators.text_analysis import (
-            gopher_repetition_flags, gopher_repetition_flags_rowwise)
+            gopher_repetition_flags_rowwise)
         docs = (spark.read.parquet(f'{sf_dir}/documents.parquet')
                 .select('doc_id', 'text'))
-        extra = spark.createDataFrame(
-            [(9001, ''), (9002, 'one two'),
-             (9003, ' '.join(['spam phrase repeat now'] * 60)),
-             (9004, ' '.join('w%d' % (i % 15) for i in range(200))),
-             (9005, ' '.join('u%d' % i for i in range(9)))],
-            'doc_id long, text string')
+        extra_rows = [
+            (9001, ''), (9002, 'one two'),
+            (9003, ' '.join(['spam phrase repeat now'] * 60)),
+            (9004, ' '.join('w%d' % (i % 15) for i in range(200))),
+            (9005, ' '.join('u%d' % i for i in range(9)))]
+        extra = spark.createDataFrame(extra_rows, 'doc_id long, text string')
         all_docs = docs.unionByName(extra)
         key = lambda r: (r.doc_id, r.top_2gram_char_frac,  # noqa: E731
                          r.dup_10gram_char_frac, r.passes_repetition)
-        a = sorted(map(key, gopher_repetition_flags(all_docs).collect()))
-        b = sorted(map(key,
-                       gopher_repetition_flags_rowwise(all_docs)
-                       .collect()))
-        assert a == b
+        got = sorted(map(key,
+                         gopher_repetition_flags_rowwise(all_docs)
+                         .collect()))
+        con = duckdb.connect()
+        con.execute("CREATE TABLE documents AS SELECT doc_id, text "
+                    "FROM read_parquet('%s/documents.parquet')" % sf_dir)
+        con.executemany('INSERT INTO documents VALUES (?, ?)', extra_rows)
+        want = sorted(tuple(r) for r in
+                      con.execute(_gopher_repetition_oracle()).fetchall())
+        assert got == want
 
     def test_rowwise_is_shuffle_free(self, spark, sf_dir):
         from dragnet_spark.operators.text_analysis import (
@@ -335,7 +345,7 @@ class TestCurationStream:
         import pyspark.sql.functions as FF
         from dragnet_spark.operators.extract import extract
         from dragnet_spark.operators.text_analysis import (
-            gopher_quality_flags, gopher_repetition_flags)
+            gopher_quality_flags, gopher_repetition_flags_rowwise)
         from dragnet_spark.sources.synthesis import synthesize_corpus
         from dragnet_spark.streaming.curation_stream import (
             run_curation_stream)
@@ -355,8 +365,8 @@ class TestCurationStream:
                        FF.col('content_text').alias('text')))
         q = (gopher_quality_flags(ext, keep_cols=('text',))
              .where(FF.col('passes') == 1).select('doc_id', 'text'))
-        r = (gopher_repetition_flags(q.select('doc_id', 'text'),
-                                     max_dup10=0.6)
+        r = (gopher_repetition_flags_rowwise(q.select('doc_id', 'text'),
+                                             max_dup10=0.6)
              .where(FF.col('passes_repetition') == 1)
              .select('doc_id'))
         gated = q.join(r, 'doc_id')

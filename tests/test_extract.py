@@ -258,3 +258,66 @@ class TestHostileSpans:
         assert out['megabyte_doc'].status == 'ok'
         assert 'large body word' in out['megabyte_doc'].content_text
         assert out['deep_nesting'].status in allowed
+
+
+class TestDocRowBatches:
+    """The one batch loop behind every per-document Arrow stage
+    (extraction, blockify, gold labeling, pdf, fused synthesis) bounds
+    its output WITHIN an input batch, Spark-free."""
+
+    @staticmethod
+    def _drive(rb, per_row, schema):
+        import pyarrow as pa
+
+        from dragnet_spark.operators.extract import doc_row_batches
+        out = list(doc_row_batches(iter([rb]), per_row, schema))
+        cols = [c.to_pylist() for c in rb.columns]
+        direct = pa.Table.from_pylist(
+            [row for values in zip(*cols) for row in per_row(*values)],
+            schema=schema)
+        return out, direct
+
+    def test_row_cap_splits_block_fan_out(self):
+        import pyarrow as pa
+
+        from dragnet_spark.model import default_model
+        from dragnet_spark.operators.blocks_df import (BLOCKS_PA_SCHEMA,
+                                                       doc_to_block_rows)
+        from dragnet_spark.plans.session import ARROW_BATCH_ROWS
+        from dragnet_spark.sources.synthesis import (SPANS_SCHEMA,
+                                                     iter_span_docs)
+        text = ('First sentence here. Second one follows. Third is longer '
+                'than the rest of them. Fourth. Fifth closes it.')
+        docs = list(iter_span_docs(list(range(200)), [text] * 200))
+        rb = pa.RecordBatch.from_pylist(
+            [{'doc_id': d, 'spans': s} for d, s in docs],
+            schema=SPANS_SCHEMA)
+        model = default_model()
+
+        def per_row(doc_id, spans):
+            return doc_to_block_rows(doc_id, spans, model)
+
+        out, direct = self._drive(rb, per_row, BLOCKS_PA_SCHEMA)
+        assert direct.num_rows > ARROW_BATCH_ROWS  # one batch fans out
+        assert len(out) > 1
+        assert all(b.num_rows <= ARROW_BATCH_ROWS for b in out)
+        assert pa.Table.from_batches(out).equals(direct)
+
+    def test_byte_budget_splits_fat_rows(self):
+        import pyarrow as pa
+
+        from dragnet_spark.operators.extract import (EXTRACTED_PA_SCHEMA,
+                                                     OUT_BATCH_BYTES)
+        big = 'x' * (1 << 20)
+        rb = pa.RecordBatch.from_pylist(
+            [{'doc_id': 'd%d' % i, 'text': big} for i in range(20)])
+
+        def per_row(doc_id, text):
+            return [{'doc_id': doc_id, 'spans': [], 'content_text': text,
+                     'status': 'ok'}]
+
+        out, direct = self._drive(rb, per_row, EXTRACTED_PA_SCHEMA)
+        assert 20 * 2 * len(big) > OUT_BATCH_BYTES  # estimate crosses it
+        assert len(out) > 1
+        assert all(b.num_rows < 20 for b in out)
+        assert pa.Table.from_batches(out).equals(direct)

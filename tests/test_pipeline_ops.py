@@ -156,15 +156,13 @@ class TestSimilarity:
         assert out[0].neighbor_id == 1  # the planted near-duplicate
 
     def test_quantized_topk_finds_planted_neighbor(self, spark, emb):
-        from dragnet_spark.operators.similarity import (lsh_topk,
-                                                        quantized_topk)
+        from dragnet_spark.operators.similarity import quantized_topk
         q = emb.where('vec_id = 0')
         out = quantized_topk(emb, q, k=3, rerank_frac=0.25).collect()
         assert [r.rank for r in out] == [1, 2, 3]
         assert out[0].neighbor_id == 1
-        # compat alias routes to the quantized path
-        alias = lsh_topk(emb, q, k=3).collect()
-        assert alias[0].neighbor_id == 1
+        # at the default rerank_frac too
+        assert quantized_topk(emb, q, k=3).collect()[0].neighbor_id == 1
 
     def test_quantized_topk_matches_bruteforce(self, spark, emb):
         # at rerank_frac=1.0 the quantized prefilter keeps everything:
@@ -572,7 +570,7 @@ class TestDuplicatedPassages:
 class TestGopherRepetition:
     def test_spam_vs_clean(self, spark):
         from dragnet_spark.operators.text_analysis import (
-            gopher_repetition_flags)
+            gopher_repetition_flags_rowwise)
         spam = 'buy now ' * 50                      # one 2-gram is the doc
         dup10 = ('alpha beta gamma delta epsilon zeta eta theta iota '
                  'kappa ') * 3 + 'unique closing words here'
@@ -581,7 +579,7 @@ class TestGopherRepetition:
             [(1, spam), (2, dup10), (3, clean), (4, '')],
             'doc_id long, text string')
         got = {r.doc_id: r for r in
-               gopher_repetition_flags(df).collect()}
+               gopher_repetition_flags_rowwise(df).collect()}
         assert got[1].top_2gram_char_frac > 0.5
         assert got[1].passes_repetition == 0
         assert got[2].dup_10gram_char_frac > 0.1
