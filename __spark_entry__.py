@@ -345,9 +345,9 @@ def q_duplicated_passages(spark, sf_dir):
 def q_gopher_quality(spark, sf_dir):
     """Gopher-rule pre-training quality gate (Rae et al. 2021 A1.1):
     word-count / mean-word-length / symbol-ratio / alpha-word /
-    stop-word rules as one whole-stage-codegen projection, pass flag
-    included.  Every ratio is an int/int division so the DuckDB oracle
-    is hash-exact."""
+    stop-word rules -- counts from the Arrow counts stage, ratios in one
+    projection, pass flag included.  Every ratio is an int/int division
+    so the DuckDB oracle is hash-exact."""
     from dragnet_spark.operators.text_analysis import gopher_quality_flags
     return gopher_quality_flags(_docs(spark, sf_dir))
 
@@ -357,11 +357,8 @@ def q_gopher_repetition(spark, sf_dir):
     duplicated-10-gram (POSITIONAL coverage -- each token position
     counts once; see the operator docstring) character fractions per
     document, defined identically in the oracle, with the pass flag.
-
-    r06: runs the zero-shuffle rowwise form -- ~9x faster at sf1.0 than
-    the retired shuffle form since its coverage step went O(n log n);
-    the shuffle form's plan re-computed the scan+tokenize base five
-    times across its four shuffles."""
+    The per-document counts come from the Arrow counts stage; no
+    shuffle, no join."""
     from dragnet_spark.operators.text_analysis import (
         gopher_repetition_flags_rowwise)
     return gopher_repetition_flags_rowwise(_docs(spark, sf_dir))
@@ -953,27 +950,6 @@ def q_training_corpus_funnel(spark, sf_dir):
         'n_extracted_ok long, n_quality_pass long, n_canonical long')
 
 
-def q_events_props_json(spark, sf_dir):
-    """Semi-structured payload parsing: events.props JSON parsed
-    JVM-side (from_json, whole-stage codegen -- no Python) and the k
-    field aggregated per event_type; missing/corrupt payloads counted
-    as n_missing, never dropped."""
-    from dragnet_spark.operators.semistructured import json_props_stats
-    return json_props_stats(
-        spark.read.parquet(f'{sf_dir}/events.parquet'))
-
-
-def q_events_props_variant(spark, sf_dir):
-    """Spark 4 VARIANT path for the same payload aggregation:
-    try_parse_json -> try_variant_get typed extraction (schema-on-read;
-    no struct re-declaration as payload fields grow).  Shares the
-    events_props_json DuckDB oracle -- both engines and both Spark
-    paths must agree."""
-    from dragnet_spark.operators.semistructured import variant_props_stats
-    return variant_props_stats(
-        spark.read.parquet(f'{sf_dir}/events.parquet'))
-
-
 def q_gold_corrected_source(spark, sf_dir):
     """Spark 4 Python Data Source over the reference's own gold-corpus
     directory layout: spark.read.format('gold_corrected') lists file
@@ -1389,14 +1365,12 @@ def q_text_profile(spark, sf_dir):
 
 
 def q_gopher_gates(spark, sf_dir):
-    """Both Gopher gate tables (Rae et al. 2021 A1.1) joined per doc:
-    quality stats + pass flag and repetition fractions + pass flag --
-    one hash-checked row per document covering the full gate surface
-    (the funnel arithmetic over these is curation_gates)."""
-    q = q_gopher_quality(spark, sf_dir).withColumnRenamed(
-        'passes', 'passes_quality')
-    r = q_gopher_repetition(spark, sf_dir)
-    return q.join(r, 'doc_id')
+    """Both Gopher gates (Rae et al. 2021 A1.1) from one Arrow counts
+    stage: quality stats + pass flag and repetition fractions + pass
+    flag -- one hash-checked row per document covering the full gate
+    surface (the funnel arithmetic over these is curation_gates)."""
+    from dragnet_spark.operators.text_analysis import gopher_gates
+    return gopher_gates(_docs(spark, sf_dir))
 
 
 def q_events_props(spark, sf_dir):

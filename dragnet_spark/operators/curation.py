@@ -9,8 +9,8 @@ LLM-training-data flow over an extracted corpus:
 
 Every stage is the library operator (individually oracle- or
 golden-checked); this module only wires them, so the composition
-inherits each stage's scale shape: the gates are narrow projections /
-doc-keyed aggregations, dedup is the chain-capped LSH + distributed
+inherits each stage's scale shape: both gates are one narrow Arrow
+stage (``gopher_gates``), dedup is the chain-capped LSH + distributed
 connected components path, and nothing touches the driver.
 
 ``__spark_entry__.training_corpus_funnel`` is the driver-checked
@@ -23,9 +23,7 @@ import pyspark.sql.functions as F
 
 from .dedup import duplicate_cluster_assignments
 from .text_analysis import (GOPHER_MAX_DUP10GRAM_FRAC,
-                            GOPHER_MAX_TOP2GRAM_FRAC,
-                            gopher_quality_flags,
-                            gopher_repetition_flags_rowwise)
+                            GOPHER_MAX_TOP2GRAM_FRAC, gopher_gates)
 
 
 def gate_funnel(docs, text_col='text', id_col='doc_id',
@@ -35,29 +33,22 @@ def gate_funnel(docs, text_col='text', id_col='doc_id',
     ``(n_total, n_quality_pass, n_repetition_pass, n_both_pass)``.
 
     The oracle-checkable prefix of :func:`curate_corpus` -- both gates
-    are pure column expressions / doc-keyed aggregations, so DuckDB can
+    are per-document counts and int/int ratios, so DuckDB can
     re-derive the exact counts (``curation_gates`` in
     ``__spark_entry__``), pinning the funnel arithmetic that the full
     pipeline (extraction + MinHash in the loop) can only rows-check.
-    Same composition shape as curate_corpus: narrow quality projection,
-    aggregation-bearing repetition gate joined on doc_id, one global
-    agg of four longs.
+    Same gate stage as curate_corpus (:func:`gopher_gates`), then one
+    global agg of four longs.
     """
     base = docs.select(F.col(id_col).alias('doc_id'),
                        F.col(text_col).alias('text'))
-    quality = (gopher_quality_flags(base)
-               .select('doc_id', F.col('passes').alias('pq')))
-    repetition = (gopher_repetition_flags_rowwise(
-                      base, max_top2=max_top2, max_dup10=max_dup10)
-                  .select('doc_id',
-                          F.col('passes_repetition').alias('pr')))
-    gated = quality.join(repetition, 'doc_id')
-    return gated.agg(
+    pq = F.col('passes_quality')
+    pr = F.col('passes_repetition')
+    return gopher_gates(base, max_top2, max_dup10).agg(
         F.count('*').alias('n_total'),
-        F.sum('pq').alias('n_quality_pass'),
-        F.sum('pr').alias('n_repetition_pass'),
-        F.sum(((F.col('pq') == 1) & (F.col('pr') == 1)).cast('long'))
-        .alias('n_both_pass'))
+        F.sum(pq).alias('n_quality_pass'),
+        F.sum(pr).alias('n_repetition_pass'),
+        F.sum(((pq == 1) & (pr == 1)).cast('long')).alias('n_both_pass'))
 
 
 def curate_corpus(docs, text_col='text', id_col='doc_id',
@@ -87,16 +78,13 @@ def curate_corpus(docs, text_col='text', id_col='doc_id',
     that -- the survivors (``docs`` left-semi-joined to the passing
     ids) that feed the MinHash pair plan and the components node set,
     ``verdicts`` and ``curated`` -- so none of them re-runs the gates'
-    Arrow stage or tokenizing projections.
+    Arrow stage.
     """
     base = docs.select(F.col(id_col).alias('doc_id'),
                        F.col(text_col).alias('text'))
-    quality = (gopher_quality_flags(base)
-               .select('doc_id', F.col('passes').alias('passes_quality')))
-    repetition = (gopher_repetition_flags_rowwise(
-                      base, max_top2=max_top2, max_dup10=max_dup10)
-                  .select('doc_id', 'passes_repetition'))
-    gates = quality.join(repetition, 'doc_id').localCheckpoint(eager=True)
+    gates = (gopher_gates(base, max_top2, max_dup10)
+             .select('doc_id', 'passes_quality', 'passes_repetition')
+             .localCheckpoint(eager=True))
     passing = (gates.where((F.col('passes_quality') == 1)
                            & (F.col('passes_repetition') == 1))
                .select('doc_id'))

@@ -12,12 +12,23 @@ microbenchmark showed java.util.regex on the measurement hardware is
 ~30x slower than CPython's engine per split AND hard-ceilinged per JVM
 across threads; every ratio / CASE / rounding stays in the JVM over the
 same integers, so outputs (and the frozen DuckDB oracles) are
-bit-identical.  The repetition gates remain all-JVM -- their
-interpreted HOF chains interleave with the split, the ceiling binds
-only partially there, and the python form A/B-measured slower.
+bit-identical.  Both Gopher gates count there too (:func:`gopher_gates`
+runs them from one stage); only three integers per document cross back
+to the JVM for the repetition gate.
+
+Lowercasing: the stage lowers with python ``str.lower()`` where the JVM
+operators (``tokens_col(lower=True)``) use Spark ``lower()``.  Tokens
+keep only ASCII ``[a-zA-Z0-9]`` runs, so the two agree whenever their
+case mappings agree on which characters become ASCII letters -- true
+for the locale-independent mappings (Kelvin sign -> ``k``, ``İ`` ->
+``i`` + U+0307) and assumed of the JVM default locale: a Turkic default
+locale (``tr``/``az``), whose ``I`` -> dotless ``ı`` drops the letter,
+is not supported.  Pinned on non-ASCII rows in tests.
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 import pyspark.sql.functions as F
 
@@ -116,32 +127,11 @@ GOPHER_MIN_ALPHA_WORD_FRAC = 0.8
 GOPHER_MIN_STOPWORD_HITS = 2
 
 
-def gopher_quality_flags(df, text_col='text', keep_cols=()):
-    """Gopher-rule document filter (Rae et al. 2021, arXiv:2112.11446
-    Appendix A1.1 -- the canonical pre-training quality gate), as pure
-    column expressions:
-
-    * word count in [50, 100k], mean word length in [3, 10]
-    * symbol-to-word ratio (``#`` / ``...``) <= 0.1
-    * >= 80% of words contain an alphabetic character
-    * >= 2 distinct Gopher stop words present
-
-    Words here are whitespace-split (Gopher's definition), unlike the
-    punctuation-split ``tokens_col`` the other analyzers use.  Every
-    ratio is an int/int division, so the DuckDB oracle reproduces the
-    doubles bit-exactly; ``passes`` is the conjunction, computed
-    identically both sides.  At 10^12 docs this is one narrow Arrow
-    stage plus one projection -- no shuffle, no join.
-    """
-    # r06 (2nd pass): the word-split counts come from the Arrow counts
-    # stage (JVM regex ceiling, see _counts_stage; the python \s+ is
-    # pinned to Java's ASCII dialect with re.ASCII); the ratio
-    # arithmetic below is the unchanged expression tree over the same
-    # integers, so the gate doubles and oracle hashes are bit-identical.
-    # ``keep_cols`` ride through the Arrow batch so callers get flags +
-    # payload without a corpus-wide re-join, and the python stage is a
-    # natural pushdown barrier (the old explode-barrier role).
-    df = _counts_stage(df, text_col, words=True, keep_cols=keep_cols)
+def _quality_exprs():
+    """``(stat columns, passes)`` of the Gopher quality gate over the
+    counts stage's ``words`` fields; every ratio is an int/int division,
+    so the gate doubles and the DuckDB oracle hashes are bit-identical
+    to the old all-JVM expression tree."""
     n_words = F.col('_n_words')
     sum_word_len = F.col('_sum_word_len')
     mean_word_len = (sum_word_len.cast('double')
@@ -161,21 +151,54 @@ def gopher_quality_flags(df, text_col='text', keep_cols=()):
               & (symbol_ratio <= GOPHER_MAX_SYMBOL_RATIO)
               & (alpha_frac >= GOPHER_MIN_ALPHA_WORD_FRAC)
               & (stop_hits >= GOPHER_MIN_STOPWORD_HITS))
-    return df.select(
-        'doc_id',
-        *keep_cols,
+    stats = [
         n_words.cast('long').alias('n_words'),
         F.round(mean_word_len, 6).alias('mean_word_len'),
         F.round(symbol_ratio, 6).alias('symbol_ratio'),
         F.round(alpha_frac, 6).alias('alpha_word_frac'),
         stop_hits.cast('long').alias('stopword_hits'),
-        # 0/1 rather than boolean so the oracle hash is dtype-stable
-        passes.cast('long').alias('passes'),
-    )
+    ]
+    # 0/1 rather than boolean so the oracle hash is dtype-stable
+    return stats, passes.cast('long')
+
+
+def gopher_quality_flags(df, text_col='text', keep_cols=()):
+    """Gopher-rule document filter (Rae et al. 2021, arXiv:2112.11446
+    Appendix A1.1 -- the canonical pre-training quality gate):
+
+    * word count in [50, 100k], mean word length in [3, 10]
+    * symbol-to-word ratio (``#`` / ``...``) <= 0.1
+    * >= 80% of words contain an alphabetic character
+    * >= 2 distinct Gopher stop words present
+
+    Words here are whitespace-split (Gopher's definition), unlike the
+    punctuation-split ``tokens_col`` the other analyzers use.  Every
+    ratio is an int/int division, so the DuckDB oracle reproduces the
+    doubles bit-exactly; ``passes`` is the conjunction, computed
+    identically both sides.  At 10^12 docs this is one narrow Arrow
+    stage plus one projection -- no shuffle, no join.  ``keep_cols``
+    ride through the Arrow batch so callers get flags + payload without
+    a corpus-wide re-join.
+    """
+    stats, passes = _quality_exprs()
+    return (_counts_stage(df, text_col, words=True, keep_cols=keep_cols)
+            .select('doc_id', *keep_cols, *stats, passes.alias('passes')))
 
 
 GOPHER_MAX_TOP2GRAM_FRAC = 0.20
 GOPHER_MAX_DUP10GRAM_FRAC = 0.10
+
+
+def _repetition_exprs(max_top2, max_dup10):
+    """The Gopher repetition gate's fraction and pass columns over the
+    counts stage's ``rep`` fields (null text: 0.0 fractions, passes)."""
+    chars = F.greatest('_tok_chars', F.lit(1)).cast('double')
+    top2f = F.coalesce('_top2', F.lit(0)).cast('double') / chars
+    dupf = F.coalesce('_dup10', F.lit(0)).cast('double') / chars
+    passes = (top2f <= max_top2) & (dupf <= max_dup10)
+    return [F.round(top2f, 6).alias('top_2gram_char_frac'),
+            F.round(dupf, 6).alias('dup_10gram_char_frac'),
+            passes.cast('long').alias('passes_repetition')]
 
 
 def gopher_repetition_flags_rowwise(df, text_col='text',
@@ -203,141 +226,32 @@ def gopher_repetition_flags_rowwise(df, text_col='text',
     fractions hash-match it bit-exactly (crafted spam/short/empty rows
     are pinned against the oracle in tests).
 
-    ONE stateless projection -- no groupBy, no join, no shuffle -- so
-    it is legal in a Structured Streaming pipeline (blocking
-    aggregations are not, short of watermark gymnastics on a per-doc
-    key).  The trick: per-gram COUNTS come from run
-    lengths in the doc's SORTED gram-hash array (equal hashes are
-    adjacent after ``array_sort``; a single ``aggregate`` pass with a
-    (prev, run, best) accumulator finds the max), and the duplicated-
-    10-gram POSITIONAL coverage comes from the start positions of
-    duplicated grams (any element of a >=2 run in the sorted
-    (hash, start) struct array), interval-merged in one ``aggregate``
-    pass so each covered position's token length is summed exactly
-    once.
-
-    Cost: O(n log n) per document in the two ``array_sort``s, linear
-    everywhere else -- the r05 form's coverage step was
-    O(starts x duplicated-gram-set) (an ``array_contains`` per
-    position) with an ``array_append`` accumulator (quadratic on
-    mostly-repeat spam); both are gone, so this form is the batch
-    gate too (``__spark_entry__.q_gopher_repetition``,
-    ``curation.gate_funnel`` / ``curate_corpus``), in place of a
-    shuffle form's four token-exploded shuffles and five
-    re-computations of the corpus scan+tokenize projection.
+    The three integers per document come from the Arrow counts stage
+    (``_counts_stage(rep=True)``); the ratios, rounding and thresholds
+    are JVM expressions.  One stateless stage -- no groupBy, no join,
+    no shuffle -- so it is legal in a Structured Streaming pipeline,
+    and the Python stage stops predicate pushdown: a downstream
+    ``.where(passes_repetition = 1)`` filters its output and never
+    re-enters the counting.
     """
-    # (r06 2nd pass: an Arrow python tokenizer stage was A/B-measured
-    # here and REVERTED -- 1.15 s vs 1.25-1.45 s at the 50 k corpus.
-    # Unlike the pure-counting operators, this gate's interpreted HOF
-    # chain interleaves with the split so the JVM regex ceiling binds
-    # only partially, and shipping list<string> token arrays across
-    # Arrow costs more than the split saves.)
-    raw = "array_remove(split(lower(%s), '[^a-z0-9]+'), '')" % text_col
-    keep = [F.col(c) for c in keep_cols]
-    tk = (df.select('doc_id', *keep, F.expr(raw).alias('_tk'),
-                    F.explode(F.array(F.lit(1))).alias('_b'))
-          .drop('_b'))
-    # r06: hash every token ONCE into a long array behind a second
-    # barrier, then build gram hashes from longs.  Projections holding
-    # higher-order functions never enter whole-stage codegen (no
-    # doGenCode on HigherOrderFunction), so this operator runs in the
-    # INTERPRETED evaluator -- the r06 form hashed each token's string
-    # ~12x (once per overlapping 2-gram and 10-gram slice); hashing 8-
-    # byte longs instead cuts the dominant interpreted work.  Gram
-    # equality via equal hash values is unchanged in kind; only the
-    # internal hash VALUES differ, which the output fractions never
-    # see.
-    hk = (tk.select('doc_id', *keep, '_tk',
-                    F.expr('transform(_tk, x -> xxhash64(x))').alias('_th'),
-                    F.explode(F.array(F.lit(1))).alias('_b'))
-          .drop('_b'))
-    base = hk.select(
-        'doc_id', *keep,
-        F.expr('aggregate(_tk, 0, (a, x) -> a + length(x))')
-        .alias('_chars'),
-        F.expr('_tk').alias('_toks'),
-        # (hash, char-len) structs for 2-grams; sorted so equal hashes
-        # are adjacent (struct sort orders by first field)
-        F.expr("CASE WHEN size(_tk) >= 2 THEN sort_array(transform("
-               "sequence(0, size(_tk) - 2), "
-               "i -> struct(xxhash64(element_at(_th, i + 1), "
-               "            element_at(_th, i + 2)) AS gh, "
-               "length(element_at(_tk, i + 1)) "
-               "  + length(element_at(_tk, i + 2)) AS glen))) "
-               "ELSE array() END").alias('_g2'),
-        F.expr("CASE WHEN size(_tk) >= 10 THEN sort_array(transform("
-               "sequence(0, size(_tk) - 10), "
-               "i -> struct(xxhash64(slice(_th, i + 1, 10)) AS gh, "
-               "i AS i))) ELSE array() END").alias('_g10s'))
+    return (_counts_stage(df, text_col, rep=True, keep_cols=keep_cols)
+            .select('doc_id', *keep_cols,
+                    *_repetition_exprs(max_top2, max_dup10)))
 
-    # max over distinct 2-grams of (count x gram char len): single
-    # aggregate pass over the sorted (gh, glen) structs
-    top2 = F.expr(
-        "aggregate(_g2, "
-        "named_struct('prev', CAST(NULL AS BIGINT), 'glen', 0, "
-        "             'run', 0L, 'best', 0L), "
-        "(a, s) -> IF(a.prev IS NOT NULL AND s.gh = a.prev, "
-        "  named_struct('prev', a.prev, 'glen', a.glen, "
-        "               'run', a.run + 1L, 'best', a.best), "
-        "  named_struct('prev', s.gh, 'glen', s.glen, 'run', 1L, "
-        "    'best', greatest(a.best, a.run * CAST(a.glen AS BIGINT)))), "
-        "a -> greatest(a.best, a.run * CAST(a.glen AS BIGINT)))")
 
-    # duplicated-10-gram START positions: in the (gh, i) structs sorted
-    # by hash, a start belongs to a duplicated gram iff its hash equals
-    # a neighbor's -- one O(n) pass of O(1) element_at probes, no
-    # per-position membership scan, no array_append accumulator
-    dup_starts = F.expr(
-        "CASE WHEN size(_g10s) = 0 THEN CAST(array() AS ARRAY<INT>) "
-        "ELSE sort_array(transform(filter(sequence(1, size(_g10s)), "
-        "j -> (j > 1 AND element_at(_g10s, j).gh = "
-        "      element_at(_g10s, j - 1).gh) "
-        "  OR (j < size(_g10s) AND element_at(_g10s, j).gh = "
-        "      element_at(_g10s, j + 1).gh)), "
-        "j -> element_at(_g10s, j).i)) END")
-    # two-step select so the start-positions array is a bound attribute
-    # before the summing lambda (opaque to CSE otherwise)
-    staged = base.select('doc_id', *keep, '_chars', '_toks',
-                         top2.alias('_top2'), dup_starts.alias('_dupS'))
-    # positional coverage = union of [s, s+9] windows over the SORTED
-    # duplicated starts, interval-merged in one pass: each start adds
-    # only its not-yet-covered suffix [max(s, prev_end + 1), s + 9]
-    # (never empty: consecutive starts differ by >= 1, so
-    # prev_end + 1 = prev_s + 10 <= s + 9), so every covered position's
-    # token length is summed exactly once -- equal to the distinct-
-    # position sum by construction
-    dup10 = F.expr(
-        "aggregate(_dupS, named_struct('pe', -1, 'acc', 0L), "
-        "(a, s) -> named_struct('pe', s + 9, "
-        "  'acc', a.acc + aggregate(sequence(greatest(s, a.pe + 1), s + 9), "
-        "    0L, (x, k) -> x + length(element_at(_toks, k + 1)))), "
-        "a -> a.acc)")
-    out = staged.select('doc_id', *keep, '_chars', '_top2',
-                        dup10.alias('_dup10'))
-    top2f = (F.coalesce('_top2', F.lit(0)).cast('double')
-             / F.greatest('_chars', F.lit(1)).cast('double'))
-    dupf = (F.coalesce('_dup10', F.lit(0)).cast('double')
-            / F.greatest('_chars', F.lit(1)).cast('double'))
-    passes = (top2f <= max_top2) & (dupf <= max_dup10)
-    # r06: the output rides through a STRUCT-EXPLODE barrier.  The
-    # explode(array(1)) barriers above stop projection collapse but NOT
-    # predicate pushdown: a downstream ``.where(passes_repetition = 1)``
-    # (curate_corpus, the streaming pipeline) was alias-substituted
-    # through every projection and Generate down the chain, inlining the
-    # whole tokenize+hash+sort pipeline into an interpreted Filter whose
-    # lambda-nested re-evaluation went O(n^2) per document (measured
-    # 3.15 s -> 133 s at sf0.01 for gate + where).  Filters on a
-    # GENERATOR OUTPUT cannot push below the Generate, so emitting the
-    # final columns as exploded struct fields pins them as attributes:
-    # any downstream predicate stops here and costs one struct-field
-    # probe per row.
-    out_struct = F.struct(
-        F.col('doc_id'), *keep,
-        F.round(top2f, 6).alias('top_2gram_char_frac'),
-        F.round(dupf, 6).alias('dup_10gram_char_frac'),
-        passes.cast('long').alias('passes_repetition'))
-    return (out.select(F.explode(F.array(out_struct)).alias('_r'))
-            .select('_r.*'))
+def gopher_gates(df, max_top2=GOPHER_MAX_TOP2GRAM_FRAC,
+                 max_dup10=GOPHER_MAX_DUP10GRAM_FRAC, keep_cols=()):
+    """Both Gopher gates from ONE counts stage over ``(doc_id, text)``:
+    the quality stats of :func:`gopher_quality_flags` (its ``passes`` as
+    ``passes_quality``), then the columns of
+    :func:`gopher_repetition_flags_rowwise` -- one row per input row,
+    no join, no shuffle."""
+    stats, passes = _quality_exprs()
+    return (_counts_stage(df, 'text', words=True, rep=True,
+                          keep_cols=keep_cols)
+            .select('doc_id', *keep_cols, *stats,
+                    passes.alias('passes_quality'),
+                    *_repetition_exprs(max_top2, max_dup10)))
 
 
 def language_id(df, text_col='text'):
@@ -530,9 +444,30 @@ def _py_regexes():
     return _PY_TOKEN_RE
 
 
+def _top2gram_chars(toks):
+    """max over the distinct 2-grams of occurrences x (len a + len b)."""
+    counts = Counter(zip(toks, toks[1:]))
+    return max((n * (len(a) + len(b)) for (a, b), n in counts.items()),
+               default=0)
+
+
+def _dup10gram_chars(toks, lens):
+    """Sum of ``lens`` over the positions covered by a 10-gram that
+    occurs more than once, each position counted once."""
+    grams = [tuple(toks[i:i + 10]) for i in range(len(toks) - 9)]
+    counts = Counter(grams)
+    acc = end = 0
+    for i, g in enumerate(grams):
+        if counts[g] > 1:
+            # starts ascend, so only [max(i, end), i + 10) is new
+            acc += sum(lens[max(i, end):i + 10])
+            end = i + 10
+    return acc
+
+
 def _counts_stage(df, text_col='text', raw=False, lower=False, hits=False,
                   cjk=False, alnum=False, sigs=False, words=False,
-                  keep_cols=()):
+                  rep=False, keep_cols=()):
     """(doc_id, <keep_cols>, _n_chars, <requested count cols>) via ONE
     mapInArrow stage; exactly one output row per input row, in order.
 
@@ -564,6 +499,9 @@ def _counts_stage(df, text_col='text', raw=False, lower=False, hits=False,
         fields += [('_n_words', pa.int64()), ('_sum_word_len', pa.int64()),
                    ('_n_hash', pa.int64()), ('_ell_lendiff', pa.int64()),
                    ('_alpha_words', pa.int64()), ('_stop_hits', pa.int64())]
+    if rep:
+        fields += [('_tok_chars', pa.int64()), ('_top2', pa.int64()),
+                   ('_dup10', pa.int64())]
 
     in_fields = ['doc_id', *keep_cols, text_col]
     src = df.select(*dict.fromkeys(in_fields))  # dedup, keep order
@@ -597,7 +535,7 @@ def _counts_stage(df, text_col='text', raw=False, lower=False, hits=False,
                     toks = [x for x in tok_split(t) if x]
                     out['_n_tokens'].append(len(toks))
                     out['_n_distinct'].append(len(set(toks)))
-                if lower or hit_langs or sigs:
+                if lower or hit_langs or sigs or rep:
                     toksl = [x for x in tok_split(t.lower()) if x]
                     dt = set(toksl)
                 if lower:
@@ -624,6 +562,11 @@ def _counts_stage(df, text_col='text', raw=False, lower=False, hits=False,
                         sum(1 for w in ws if alpha_re.search(w)))
                     out['_stop_hits'].append(
                         len({w.lower() for w in ws} & gopher_stop))
+                if rep:
+                    lens = [len(x) for x in toksl]
+                    out['_tok_chars'].append(sum(lens))
+                    out['_top2'].append(_top2gram_chars(toksl))
+                    out['_dup10'].append(_dup10gram_chars(toksl, lens))
             arrays = [cols[c] for c in pass_cols]
             arrays += [pa.array(out[name], type=typ)
                        for name, typ in fields]

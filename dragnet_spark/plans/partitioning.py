@@ -85,7 +85,7 @@ def probe_parquet_layout(path):
         return None
 
 
-def spread_small_scan(spark, df, path, factor=1):
+def spread_small_scan(spark, df, path):
     """Adaptive scan-parallelism guard (optimization guide §2.1/§6).
 
     A parquet input exposing fewer row groups than the session has
@@ -106,16 +106,9 @@ def spread_small_scan(spark, df, path, factor=1):
     guide requires instead of a constant tuned to either local mode or
     the cluster.
 
-    ``factor=1`` (cores partitions) measured best across all three
-    downstream shapes at the 50 k-doc corpus: Arrow python stages pay
-    ~6 ms per TASK of worker handshake (text_profile 0.83 s at 32p vs
-    1.60 s at 128p), JVM HOF chains are flat (gopher repetition 1.07 vs
-    1.13), and aggregation-only consumers lose to the extra shuffle
-    blocks at higher counts (exact dedup 0.94 vs 2.0).  Rows are
-    near-uniform in size, so the straggler argument for over-splitting
-    does not apply; callers whose pre-shuffle work is trivial
-    (md5-only aggregations, hash-bucket sample filters) should skip the
-    guard entirely -- the shuffle is pure cost there.
+    Callers whose pre-shuffle work is trivial (md5-only aggregations,
+    hash-bucket sample filters) should skip the guard entirely -- the
+    shuffle is pure cost there.
     """
     par = spark.sparkContext.defaultParallelism
     probe = probe_parquet_layout(path)
@@ -137,7 +130,7 @@ def spread_small_scan(spark, df, path, factor=1):
     target = max(2, min(par, -(-rows // 600)))
     if tasks >= target:
         return df
-    return df.repartition(factor * target)
+    return df.repartition(target)
 
 
 def repartition_by_doc_range(df, num_partitions, doc_id_col='doc_id'):

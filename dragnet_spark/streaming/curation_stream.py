@@ -2,9 +2,8 @@
 unbounded source.
 
     spans stream -> fused extraction (stateless mapInArrow)
-                 -> Gopher quality gate (stateless projection)
-                 -> Gopher repetition gate (ROWWISE: one stateless
-                    projection, so legal in a stream where blocking
+                 -> Gopher quality + repetition gates (one stateless
+                    Arrow stage, so legal in a stream where blocking
                     aggregations are not)
                  -> stateful first-seen exact dedup
                     (applyInPandasWithState, per-host fingerprint state)
@@ -27,13 +26,12 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
+from ..operators.extract import extract
 from ..operators.text_analysis import (GOPHER_MAX_DUP10GRAM_FRAC,
                                        GOPHER_MAX_TOP2GRAM_FRAC,
-                                       gopher_quality_flags,
-                                       gopher_repetition_flags_rowwise)
+                                       gopher_gates)
 from ..sources.synthesis import SPANS_SCHEMA
 from .dedup_stream import dedup_stream
-from .extract_stream import extract_stream
 
 
 def curate_stream(spans_stream, model=None,
@@ -43,20 +41,17 @@ def curate_stream(spans_stream, model=None,
     (doc_id, host, content_sig, is_first_seen) for documents that
     extracted ok AND passed both gates; ``is_first_seen`` marks the
     kept (canonical) rows."""
-    # the gates CHAIN as projections (keep_cols passthrough) -- a
-    # stream cannot be joined with a derivation of itself without
-    # watermark machinery, and no join is needed for narrow gates
-    extracted = (extract_stream(spans_stream, model)
+    # the text rides through the gate stage (keep_cols) -- a stream
+    # cannot be joined with a derivation of itself without watermark
+    # machinery, and no join is needed for narrow gates
+    extracted = (extract(spans_stream, model)
                  .where(F.col('status') == 'ok')
                  .select('doc_id', F.col('content_text').alias('text')))
-    quality_pass = (gopher_quality_flags(extracted, keep_cols=('text',))
-                    .where(F.col('passes') == 1)
-                    .select('doc_id', 'text'))
-    gated = (gopher_repetition_flags_rowwise(
-        quality_pass, max_top2=max_top2, max_dup10=max_dup10,
-        keep_cols=('text',))
-        .where(F.col('passes_repetition') == 1)
-        .select('doc_id', F.col('text').alias('content_text')))
+    gated = (gopher_gates(extracted, max_top2, max_dup10,
+                          keep_cols=('text',))
+             .where((F.col('passes_quality') == 1)
+                    & (F.col('passes_repetition') == 1))
+             .select('doc_id', F.col('text').alias('content_text')))
     return dedup_stream(gated)
 
 

@@ -21,11 +21,6 @@ from ..operators.extract import extract
 from ..sources.synthesis import SPANS_SCHEMA
 
 
-def extract_stream(stream_df, model=None):
-    """streaming DataFrame[(doc_id, spans)] -> streaming extraction."""
-    return extract(stream_df, model)
-
-
 def run_file_stream(spark, source_dir, out_dir, checkpoint_dir,
                     source_schema=None, model=None):
     """File-source -> parquet-sink streaming job, one availableNow pass.
@@ -33,7 +28,7 @@ def run_file_stream(spark, source_dir, out_dir, checkpoint_dir,
     Returns the StreamingQuery (already awaited to termination)."""
     schema = source_schema or from_arrow_schema(SPANS_SCHEMA)
     src = spark.readStream.schema(schema).parquet(source_dir)
-    out = extract_stream(src, model)
+    out = extract(src, model)
     q = (out.writeStream
          .format('parquet')
          .option('path', out_dir)

@@ -228,6 +228,33 @@ class TestGateFunnel:
         assert row.n_repetition_pass == r
         assert row.n_both_pass <= min(q, r)
 
+    def test_one_gate_stage_and_no_join(self, spark, sf_dir):
+        from dragnet_spark.operators.curation import gate_funnel
+        docs = (spark.read.parquet(f'{sf_dir}/documents.parquet')
+                .select('doc_id', 'text'))
+        plan = (gate_funnel(docs)._jdf.queryExecution().executedPlan()
+                .toString())
+        assert plan.count('MapInArrow') == 1, plan
+        assert 'Join' not in plan, plan
+
+    def test_null_text_row(self, spark):
+        # a null text counts toward n_total and the repetition gate
+        # (nothing repeated), while its quality verdict stays null
+        from dragnet_spark.operators.curation import gate_funnel
+        from dragnet_spark.operators.text_analysis import (
+            gopher_quality_flags, gopher_repetition_flags_rowwise)
+        df = spark.createDataFrame([(1, None)], 'doc_id long, text string')
+        q = gopher_quality_flags(df).collect()[0].asDict()
+        assert q == {'doc_id': 1, 'n_words': None, 'mean_word_len': None,
+                     'symbol_ratio': None, 'alpha_word_frac': None,
+                     'stopword_hits': None, 'passes': None}
+        r = gopher_repetition_flags_rowwise(df).collect()[0].asDict()
+        assert r == {'doc_id': 1, 'top_2gram_char_frac': 0.0,
+                     'dup_10gram_char_frac': 0.0, 'passes_repetition': 1}
+        f = gate_funnel(df).collect()[0].asDict()
+        assert f == {'n_total': 1, 'n_quality_pass': None,
+                     'n_repetition_pass': 1, 'n_both_pass': None}
+
 
 class TestZipSafeArrowStages:
     def test_counts_stage_runs_from_zip_shipped_package(self, tmp_path):
@@ -312,7 +339,7 @@ class TestRowwiseRepetitionGate:
             (9001, ''), (9002, 'one two'),
             (9003, ' '.join(['spam phrase repeat now'] * 60)),
             (9004, ' '.join('w%d' % (i % 15) for i in range(200))),
-            (9005, ' '.join('u%d' % i for i in range(9)))]
+            (9005, ' '.join('u%d' % i for i in range(9))), (9006, None)]
         extra = spark.createDataFrame(extra_rows, 'doc_id long, text string')
         all_docs = docs.unionByName(extra)
         key = lambda r: (r.doc_id, r.top_2gram_char_frac,  # noqa: E731
@@ -336,6 +363,48 @@ class TestRowwiseRepetitionGate:
         plan = (gopher_repetition_flags_rowwise(docs)
                 ._jdf.queryExecution().executedPlan().toString())
         assert 'Exchange' not in plan
+
+    def test_lowering_matches_jvm_on_non_ascii(self, spark):
+        # the counts stage lowers with python str.lower(); its lowered
+        # token count and the repetition gate's token chars must equal
+        # the JVM lower() + split over the same rows
+        from dragnet_spark.operators.text_analysis import (_counts_stage,
+                                                           tokens_col)
+        rows = [(1, 'İstanbul İİ DİKKAT İx'),
+                (2, 'Kelvin \u212a \u212aB 5\u212a'),
+                (3, 'straße STRASSE ß ẞ'), (4, 'ΣΑΣ ΟΔΟΣ σας ΣaΣ'),
+                (5, 'ﬁle ﬁne ﬂ'), (6, '１２３ ４５６ 12３ ＡＢ')]
+        df = spark.createDataFrame(rows, 'doc_id long, text string')
+        toks = tokens_col(F.col('text'), lower=True)
+        jvm = {r.doc_id: (r.n, r.chars) for r in df.select(
+            'doc_id', F.size(toks).alias('n'),
+            F.aggregate(toks, F.lit(0), lambda a, x: a + F.length(x))
+            .alias('chars')).collect()}
+        py = {r.doc_id: (r._n_tokens_lower, r._tok_chars) for r in
+              _counts_stage(df, lower=True, rep=True).collect()}
+        assert py == jvm
+        assert jvm[2] == (4, 11)  # the Kelvin sign lowers to ASCII 'k'
+
+
+@pytest.mark.spark
+class TestGopherGates:
+    def test_equals_both_gates_in_one_stage(self, spark, sf_dir):
+        from dragnet_spark.operators.text_analysis import (
+            gopher_gates, gopher_quality_flags,
+            gopher_repetition_flags_rowwise)
+        docs = (spark.read.parquet(f'{sf_dir}/documents.parquet')
+                .select('doc_id', 'text'))
+        gates = gopher_gates(docs)
+        plan = gates._jdf.queryExecution().executedPlan().toString()
+        assert plan.count('MapInArrow') == 1, plan
+        assert 'Exchange' not in plan, plan
+        got = gopher_gates(docs, max_dup10=0.6, keep_cols=('text',))
+        q = gopher_quality_flags(docs, keep_cols=('text',))
+        r = gopher_repetition_flags_rowwise(docs, max_dup10=0.6)
+        want = (q.withColumnRenamed('passes', 'passes_quality')
+                .join(r, 'doc_id'))
+        assert got.columns == want.columns
+        assert sorted(got.collect()) == sorted(want.collect())
 
 
 @pytest.mark.spark
