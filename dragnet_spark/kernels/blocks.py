@@ -457,11 +457,6 @@ class _Walker:
             if val is not None:
                 self.css[attrib].append(val)
 
-    def _add_text(self, node, which):
-        t = node.text if which == 'text' else node.tail
-        if t is not None:
-            self.text.append(t)
-
     def _anchor_text(self, node, tail, out):
         # _text_from_subtree, blocks.pyx:155-216
         if node.text is not None:
@@ -496,16 +491,6 @@ class _Walker:
         if subtree.children:
             self.tag_id = self.next_tag_id
             self.next_tag_id += 1
-
-    def _leave(self):
-        # blocks.pyx _subtree_fe(-1)
-        if self.do_readability:
-            self.tag_id = self.ancestors[-1]
-            self.ancestors.pop()
-        if self.do_tagcount:
-            self._depth -= 1
-            if self._depth < self._min_depth_pending:
-                self._min_depth_pending = self._depth
 
     def recurse(self, subtree):
         """blocks.pyx:581-662, iterative (explicit frame stack).
@@ -570,7 +555,7 @@ class _Walker:
                     break
             if not descended:
                 frames.pop()
-                # _leave(), inlined
+                # leave the subtree: blocks.pyx _subtree_fe(-1)
                 if do_r:
                     self.tag_id = ancestors[-1]
                     ancestors.pop()

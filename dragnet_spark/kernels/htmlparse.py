@@ -103,11 +103,6 @@ class Node:
     def __repr__(self):  # pragma: no cover - debug aid
         return '<Node %s children=%d>' % (self.tag, len(self.children))
 
-    def iter(self):
-        yield self
-        for c in self.children:
-            yield from c.iter()
-
 
 class _TreeBuilder(HTMLParser):
     def __init__(self):
@@ -138,21 +133,6 @@ class _TreeBuilder(HTMLParser):
     def _cur(self):
         return self.stack[-1]
 
-    def _append_text(self, node, data):
-        if node.children:
-            last = node.children[-1]
-            last.tail = (last.tail or '') + data
-        else:
-            node.text = (node.text or '') + data
-
-    def _autoclose_for(self, tag):
-        while len(self.stack) > 1:
-            closers = AUTOCLOSE.get(self.stack[-1].tag)
-            if closers is not None and tag in closers:
-                self.stack.pop()
-            else:
-                break
-
     # -- HTMLParser callbacks --------------------------------------------
     def handle_starttag(self, tag, attrs):
         self.saw_markup = True
@@ -162,58 +142,48 @@ class _TreeBuilder(HTMLParser):
             for k, v in attrs:
                 self.root.attrs.setdefault(k, v if v is not None else '')
             return
-        if self.body is not None and tag != 'body':
-            # hot path: body established, ordinary content tag
-            stack = self.stack
-            while len(stack) > 1:  # _autoclose_for, inlined
-                closers = AUTOCLOSE.get(stack[-1].tag)
-                if closers is not None and tag in closers:
-                    stack.pop()
-                else:
-                    break
-            node = Node(tag, _attr_dict(attrs) if attrs else None)
-            stack[-1].children.append(node)
-            if tag not in VOID_ELEMENTS and len(stack) < MAX_DEPTH:
-                stack.append(node)
-            return
-        if self._cur() is self.root and self.body is None:
-            if tag == 'head':
-                self.head = Node('head', _attr_dict(attrs))
-                self.root.children.append(self.head)
-                self.stack.append(self.head)
+        if self.body is None or tag == 'body':
+            # set-up: route head content and open the (implicit) body;
+            # once body is open, ordinary tags skip straight to the tail
+            if self.body is not None:
+                # stray duplicate <body>: ignore the tag itself
                 return
-            if tag == 'body':
-                self.body = Node('body', _attr_dict(attrs))
-                self.root.children.append(self.body)
-                self.stack.append(self.body)
-                return
-            if tag in _HEAD_ONLY or (tag in ('meta', 'link') and self.head is not None):
-                head = self._ensure_head()
-                node = Node(tag, _attr_dict(attrs))
-                head.children.append(node)
-                if tag not in VOID_ELEMENTS:
-                    # title: capture its text without tracking a full stack
-                    self.stack.append(node)
-                return
-            self._ensure_body()
-        elif tag == 'body' and self.body is not None:
-            # stray duplicate <body>: ignore the tag itself
-            return
-
-        if (self.body is None and self.head is not None
-                and self.head in self.stack and tag not in _HEAD_CONTENT):
-            # flow content inside an unterminated <head>: implicit </head>
-            # + start body, as libxml2 recovery does (ADVICE r01)
-            del self.stack[1:]
-            if tag == 'body':
-                self.body = Node('body', _attr_dict(attrs))
-                self.root.children.append(self.body)
-                self.stack.append(self.body)
-                return
-            self._ensure_body()
+            if self._cur() is self.root:
+                if tag == 'head':
+                    self.head = Node('head', _attr_dict(attrs))
+                    self.root.children.append(self.head)
+                    self.stack.append(self.head)
+                    return
+                if tag == 'body':
+                    self.body = Node('body', _attr_dict(attrs))
+                    self.root.children.append(self.body)
+                    self.stack.append(self.body)
+                    return
+                if tag in _HEAD_ONLY or (tag in ('meta', 'link')
+                                         and self.head is not None):
+                    head = self._ensure_head()
+                    node = Node(tag, _attr_dict(attrs))
+                    head.children.append(node)
+                    if tag not in VOID_ELEMENTS:
+                        # title: capture its text without tracking a
+                        # full stack
+                        self.stack.append(node)
+                    return
+                self._ensure_body()
+            if (self.body is None and self.head is not None
+                    and self.head in self.stack and tag not in _HEAD_CONTENT):
+                # flow content inside an unterminated <head>: implicit
+                # </head> + start body, as libxml2 recovery does (ADVICE r01)
+                del self.stack[1:]
+                if tag == 'body':
+                    self.body = Node('body', _attr_dict(attrs))
+                    self.root.children.append(self.body)
+                    self.stack.append(self.body)
+                    return
+                self._ensure_body()
 
         stack = self.stack
-        while len(stack) > 1:  # _autoclose_for, inlined (hot path)
+        while len(stack) > 1:  # pop the open elements this tag autocloses
             closers = AUTOCLOSE.get(stack[-1].tag)
             if closers is not None and tag in closers:
                 stack.pop()
@@ -225,10 +195,8 @@ class _TreeBuilder(HTMLParser):
             stack.append(node)
 
     def handle_startendtag(self, tag, attrs):
-        if tag in VOID_ELEMENTS:
-            self.handle_starttag(tag, attrs)
-        else:
-            self.handle_starttag(tag, attrs)
+        self.handle_starttag(tag, attrs)
+        if tag not in VOID_ELEMENTS:
             self.handle_endtag(tag)
 
     def handle_endtag(self, tag):
@@ -260,7 +228,7 @@ class _TreeBuilder(HTMLParser):
                 # libxml2 treats as no document; only matters when the
                 # doc has no tags
                 self.saw_text = True
-        # _append_text, inlined (hot path)
+        # text goes to the current node, or to its last child's tail
         children = cur.children
         if children:
             last = children[-1]

@@ -26,6 +26,7 @@ import pandas as pd
 
 import pyspark.sql.functions as F
 
+from .similarity import BUCKET_CAP, bucket_candidate_pairs
 from .text_analysis import tokens_col
 
 # -- exact ------------------------------------------------------------------
@@ -245,9 +246,6 @@ def minhash_signatures(df, text_col='text', k=MINHASH_K):
         *[F.min('h%d' % i).alias('h%d' % i) for i in range(k)])
 
 
-BUCKET_CAP = 256
-
-
 def band_key_rows(sigs, k=MINHASH_K, bands=LSH_BANDS):
     """(doc_id, bucket) rows: one banded LSH key per (doc, band) from a
     ``minhash_signatures`` frame -- the join key for bucket-based
@@ -347,7 +345,6 @@ def minhash_candidates(df, text_col='text', k=MINHASH_K, bands=LSH_BANDS,
     ``capped`` (no silent caps); callers that need the full family expand
     it transitively downstream.
     """
-    from .similarity import bucket_candidate_pairs
     sigs = minhash_signatures(df, text_col, k)
     banded = band_key_rows(sigs, k, bands)
     return bucket_candidate_pairs(banded, 'doc_id', 'doc_a', 'doc_b',
@@ -512,7 +509,6 @@ def simhash_near_duplicates(df, text_col='text', bucket_cap=BUCKET_CAP):
     """Near-dups at Hamming distance <= 3 over 64-bit SimHash: Manku
     multi-table bucket join (exact for d <= 3), mega-buckets chain-capped,
     candidates verified with popcount."""
-    from .similarity import bucket_candidate_pairs
     sigs = simhash_signatures(df, text_col)
     cand = bucket_candidate_pairs(
         simhash_buckets(sigs), 'doc_id', 'doc_a', 'doc_b', bucket_cap,

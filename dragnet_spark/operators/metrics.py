@@ -16,13 +16,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-# [\W_]+ restricted to ASCII so Spark (Java regex) and DuckDB (RE2)
-# tokenize identically in oracle-paired queries
-TOKEN_PATTERN = '[^a-zA-Z0-9]+'
-
-
-def _tokens(col):
-    return F.array_remove(F.split(col, TOKEN_PATTERN), '')
+from .text_analysis import tokens_col
 
 
 def block_level_metrics(df, label_col='label', pred_col='pred',
@@ -64,8 +58,8 @@ def token_f1_per_doc(df, pred_col='content_text', gold_col='content_text_gold'):
     barrier the counts are bound attributes computed once per row and
     the ratios are scalar arithmetic.
     """
-    p = F.array_distinct(_tokens(F.col(pred_col)))
-    a = F.array_distinct(_tokens(F.col(gold_col)))
+    p = F.array_distinct(tokens_col(F.col(pred_col)))
+    a = F.array_distinct(tokens_col(F.col(gold_col)))
     base = (df.select(
         'doc_id',
         F.size(F.array_intersect(p, a)).cast('double').alias('_tp'),
@@ -111,15 +105,15 @@ def evaluate_extracted_tokens(extracted_df, gold_df, max_tokens=2000):
         gold_df.select('doc_id',
                        F.col('content_text').alias('content_text_gold')),
         'doc_id')
-    p = F.array_distinct(_tokens(F.col('content_text')))
-    a = F.array_distinct(_tokens(F.col('content_text_gold')))
+    p = F.array_distinct(tokens_col(F.col('content_text')))
+    a = F.array_distinct(tokens_col(F.col('content_text_gold')))
     inter = F.size(F.array_intersect(p, a)).cast('double')
     union = F.size(F.array_union(p, a)).cast('double')
     with_jac = joined.select(
         'doc_id',
         F.when(union > 0, inter / union).otherwise(1.0).alias('jaccard'),
-        F.slice(_tokens(F.col('content_text')), 1, max_tokens).alias('_p'),
-        F.slice(_tokens(F.col('content_text_gold')), 1, max_tokens)
+        F.slice(tokens_col(F.col('content_text')), 1, max_tokens).alias('_p'),
+        F.slice(tokens_col(F.col('content_text_gold')), 1, max_tokens)
         .alias('_a'))
 
     schema = T.StructType([

@@ -32,6 +32,8 @@ from collections import Counter
 
 import pyspark.sql.functions as F
 
+# [\W_]+ restricted to ASCII so Spark (Java regex) and DuckDB (RE2)
+# tokenize identically in oracle-paired queries
 TOKEN_PATTERN = '[^a-zA-Z0-9]+'
 _ALNUM_SPACE = ('abcdefghijklmnopqrstuvwxyz'
                 'ABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789 ')
@@ -87,6 +89,23 @@ def token_counts(df, text_col='text'):
     )
 
 
+def _quality_score_exprs():
+    """``punct_ratio``, ``en_stopword_hits``, ``mean_token_len`` and
+    ``quality_ok`` of :func:`quality_scores` over the counts stage's
+    ``lower``/``alnum`` fields and its ``en`` stopword hits."""
+    n_chars = F.col('_n_chars')
+    n_tokens = F.col('_n_tokens_lower')
+    mean_tok = (n_chars.cast('double')
+                / F.greatest(n_tokens, F.lit(1)).cast('double'))
+    return [
+        ((n_chars - F.col('_n_alnum_sp')).cast('double')
+         / F.greatest(n_chars, F.lit(1)).cast('double')).alias('punct_ratio'),
+        F.col('_h_en').cast('long').alias('en_stopword_hits'),
+        mean_tok.alias('mean_token_len'),
+        ((n_tokens >= 10) & (mean_tok < 12.0)).cast('long').alias('quality_ok'),
+    ]
+
+
 def quality_scores(df, text_col='text'):
     """Length / punctuation / stopword-ratio quality features.
 
@@ -95,25 +114,15 @@ def quality_scores(df, text_col='text'):
     oracle reproduces them bit-exactly.
     """
     # r06: the counts come from the Arrow stage (JVM regex ceiling, see
-    # _counts_stage); the ratio arithmetic below is the UNCHANGED
-    # expression tree over the same integers, so every double is
-    # bit-identical and the oracle hashes are untouched.
+    # _counts_stage); the ratio arithmetic (_quality_score_exprs) is the
+    # UNCHANGED expression tree over the same integers, so every double
+    # is bit-identical and the oracle hashes are untouched.
     c = _counts_stage(df, text_col, lower=True, hits=('en',), alnum=True)
-    n_chars = F.col('_n_chars')
-    alnum_sp = F.col('_n_alnum_sp')
-    n_tokens = F.col('_n_tokens_lower')
-    stop_hits = F.col('_h_en')
-    mean_tok = (n_chars.cast('double')
-                / F.greatest(n_tokens, F.lit(1)).cast('double'))
     return c.select(
         'doc_id',
-        n_chars.cast('long').alias('n_chars_text'),
-        n_tokens.cast('long').alias('n_tokens'),
-        ((n_chars - alnum_sp).cast('double')
-         / F.greatest(n_chars, F.lit(1)).cast('double')).alias('punct_ratio'),
-        stop_hits.cast('long').alias('en_stopword_hits'),
-        mean_tok.alias('mean_token_len'),
-        ((n_tokens >= 10) & (mean_tok < 12.0)).cast('long').alias('quality_ok'),
+        F.col('_n_chars').cast('long').alias('n_chars_text'),
+        F.col('_n_tokens_lower').cast('long').alias('n_tokens'),
+        *_quality_score_exprs(),
     )
 
 
@@ -254,6 +263,26 @@ def gopher_gates(df, max_top2=GOPHER_MAX_TOP2GRAM_FRAC,
                     *_repetition_exprs(max_top2, max_dup10)))
 
 
+def _language_exprs():
+    """The per-language ``*_hits``, ``cjk_ratio`` and ``pred_lang``
+    columns of :func:`language_id` over the counts stage's ``hits`` and
+    ``cjk`` fields."""
+    h = {lang: F.col('_h_' + lang) for lang in STOPWORDS}
+    cjk_ratio = (F.col('_n_cjk').cast('double')
+                 / F.greatest(F.col('_n_chars'), F.lit(1)).cast('double'))
+    pred = (
+        F.when(cjk_ratio > 0.2, 'zh')
+        .when((h['en'] >= h['de']) & (h['en'] >= h['fr'])
+              & (h['en'] >= h['es']), 'en')
+        .when((h['de'] >= h['fr']) & (h['de'] >= h['es']), 'de')
+        .when(h['fr'] >= h['es'], 'fr')
+        .otherwise('es'))
+    return [*[h[lang].cast('long').alias('%s_hits' % lang)
+              for lang in STOPWORDS],
+            F.round(cjk_ratio, 6).alias('cjk_ratio'),
+            pred.alias('pred_lang')]
+
+
 def language_id(df, text_col='text'):
     """Stopword + CJK-ratio language heuristic over (en, de, fr, es, zh).
 
@@ -270,22 +299,7 @@ def language_id(df, text_col='text'):
     # _counts_stage); ratio + CASE arithmetic unchanged over the same
     # integers, so the oracle hashes are untouched.
     base = _counts_stage(df, text_col, hits=True, cjk=True)
-    h = {lang: F.col('_h_' + lang) for lang in STOPWORDS}
-    cjk_ratio = (F.col('_n_cjk').cast('double')
-                 / F.greatest(F.col('_n_chars'), F.lit(1)).cast('double'))
-    pred = (
-        F.when(cjk_ratio > 0.2, 'zh')
-        .when((h['en'] >= h['de']) & (h['en'] >= h['fr'])
-              & (h['en'] >= h['es']), 'en')
-        .when((h['de'] >= h['fr']) & (h['de'] >= h['es']), 'de')
-        .when(h['fr'] >= h['es'], 'fr')
-        .otherwise('es'))
-    cols = [F.col('doc_id')]
-    cols += [h[lang].cast('long').alias('%s_hits' % lang)
-             for lang in STOPWORDS]
-    cols += [F.round(cjk_ratio, 6).alias('cjk_ratio'),
-             pred.alias('pred_lang')]
-    return base.select(*cols)
+    return base.select('doc_id', *_language_exprs())
 
 
 def fingerprints(df, text_col='text'):
@@ -316,45 +330,22 @@ def text_profile(df, text_col='text'):
 
     r06 (2nd pass): every count comes from the Arrow counts stage
     (JVM regex ceiling -- see ``_counts_stage``); the ratio / CASE /
-    rounding arithmetic below is the unchanged expression tree over
-    the same integers, so every double and the oracle hashes are
-    bit-identical.  One python stage, no shuffle, no join.
+    rounding expressions are the ones :func:`quality_scores` and
+    :func:`language_id` use (``_quality_score_exprs``,
+    ``_language_exprs``), over the same integers, so every double and
+    the oracle hashes are bit-identical.  One python stage, no
+    shuffle, no join.
     """
     b3 = _counts_stage(df, text_col, raw=True, lower=True, hits=True,
                        cjk=True, alnum=True, sigs=True)
-    h = {lang: F.col('_h_' + lang) for lang in STOPWORDS}
-    n_chars = F.col('_n_chars')
-    cjk_ratio = (F.col('_n_cjk').cast('double')
-                 / F.greatest(n_chars, F.lit(1)).cast('double'))
-    pred = (
-        F.when(cjk_ratio > 0.2, 'zh')
-        .when((h['en'] >= h['de']) & (h['en'] >= h['fr'])
-              & (h['en'] >= h['es']), 'en')
-        .when((h['de'] >= h['fr']) & (h['de'] >= h['es']),
-              'de')
-        .when(h['fr'] >= h['es'], 'fr')
-        .otherwise('es'))
-    alnum_sp = F.col('_n_alnum_sp')
-    n_tokens_l = F.col('_n_tokens_lower')
-    mean_tok = (n_chars.cast('double')
-                / F.greatest(n_tokens_l, F.lit(1)).cast('double'))
     return b3.select(
         'doc_id',
         F.col('_n_tokens').alias('n_tokens'),
         F.col('_n_distinct').alias('n_distinct_tokens'),
-        n_chars.alias('n_chars_text'),
-        n_tokens_l.alias('n_tokens_lower'),
-        ((n_chars - alnum_sp).cast('double')
-         / F.greatest(n_chars, F.lit(1)).cast('double'))
-        .alias('punct_ratio'),
-        h['en'].cast('long').alias('en_stopword_hits'),
-        mean_tok.alias('mean_token_len'),
-        ((n_tokens_l >= 10) & (mean_tok < 12.0)).cast('long')
-        .alias('quality_ok'),
-        *[h[lang].cast('long').alias('%s_hits' % lang)
-          for lang in STOPWORDS],
-        F.round(cjk_ratio, 6).alias('cjk_ratio'),
-        pred.alias('pred_lang'),
+        F.col('_n_chars').alias('n_chars_text'),
+        F.col('_n_tokens_lower').alias('n_tokens_lower'),
+        *_quality_score_exprs(),
+        *_language_exprs(),
         F.col('_content_sig').alias('content_sig'),
         F.col('_tokenset_sig').alias('tokenset_sig'),
     )

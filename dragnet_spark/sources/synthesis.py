@@ -405,10 +405,10 @@ def synthesize_extract_gold_counts(spark, sf_dir, amplification=1,
     JVM twin re-tokenized both 2 KB texts per doc with regex split +
     array_distinct + array_intersect (~4.3 s of a 9.6 s query at 50 k
     docs); the tokenizer here is the same ASCII class
-    (``metrics.TOKEN_PATTERN``), on which Java and Python regex agree
+    (``text_analysis.TOKEN_PATTERN``), on which Java and Python regex agree
     codepoint-for-codepoint, and the emitted counts are exact ints, so
     the downstream ratio arithmetic is bit-identical."""
-    from ..operators.metrics import TOKEN_PATTERN
+    from ..operators.text_analysis import TOKEN_PATTERN
 
     model = model or default_model()
     tok_re = re.compile(TOKEN_PATTERN)

@@ -374,6 +374,29 @@ class TestIVF:
                                               n_probe=3).collect()}
         assert len(exact & approx) / len(exact) >= 0.9
 
+    @pytest.mark.parametrize('path, kwargs', [
+        ('ivf_topk', {'n_cells': 4, 'n_probe': 4}),
+        ('ivf_quantized_topk', {'n_cells': 4, 'n_probe': 4,
+                                'rerank_frac': 1.0}),
+        ('quantized_topk', {'rerank_frac': 1.0}),
+    ])
+    def test_full_probe_equals_exact(self, spark, path, kwargs):
+        # every cell probed and every candidate re-ranked: each
+        # approximate path ends in the same exact cosine re-rank as the
+        # brute-force baseline, so the rank lists match row for row
+        import pyspark.sql.functions as F2
+        from dragnet_spark.operators import similarity
+        emb = spark.read.parquet('/root/testdata/sf0.001/embeddings.parquet')
+        clustered = similarity.with_planted_clusters(emb, n_clusters=5) \
+            .cache()
+        q = clustered.where(F2.col('vec_id') < 10)
+        exact = sorted(similarity.cosine_topk(clustered, q, k=5).collect())
+        approx = sorted(getattr(similarity, path)(clustered, q, k=5,
+                                                  **kwargs).collect())
+        clustered.unpersist()
+        assert len(exact) == 50
+        assert approx == exact
+
     def test_planted_clusters_deterministic(self, spark):
         from dragnet_spark.operators.similarity import with_planted_clusters
         emb = spark.read.parquet('/root/testdata/sf0.001/embeddings.parquet')
