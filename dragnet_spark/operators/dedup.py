@@ -18,6 +18,12 @@ The scale story (100 TB corpus):
   bucketing (20 tables of 30-33-bit block-combination keys -- linear
   bucket occupancy at 10^9 docs, unlike 16-bit chunks), then popcount
   verify on candidates only.
+
+The near-dup core is one pair plan and one shingle table: MinHash,
+SimHash and ``similarity.embedding_near_duplicates`` all end in
+``similarity.verified_pairs`` (band keys -> chain-capped candidates ->
+side table at both ends -> score -> threshold), and MinHash builds
+:func:`shingle_df` once for both its signatures and its verify.
 """
 
 from __future__ import annotations
@@ -26,8 +32,9 @@ import pandas as pd
 
 import pyspark.sql.functions as F
 
-from .similarity import BUCKET_CAP, bucket_candidate_pairs
-from .text_analysis import tokens_col
+from .similarity import (BUCKET_CAP, _map_batches, bucket_candidate_pairs,
+                         verified_pairs)
+from .text_analysis import _counts_stage, py_tokens, tokens_col
 
 # -- exact ------------------------------------------------------------------
 
@@ -36,11 +43,10 @@ def exact_duplicates(df, text_col='text'):
     """md5-groupBy exact dedup: every doc with its duplicate-group size and
     the group's canonical (min) doc_id."""
     sig = F.md5(F.col(text_col)).alias('content_sig')
-    groups = (df.select(F.col('doc_id'), sig)
-              .groupBy('content_sig')
-              .agg(F.count('*').alias('dup_count'),
-                   F.min('doc_id').alias('canonical_doc_id')))
-    return groups
+    return (df.select(F.col('doc_id'), sig)
+            .groupBy('content_sig')
+            .agg(F.count('*').alias('dup_count'),
+                 F.min('doc_id').alias('canonical_doc_id')))
 
 
 def exact_dedup_incremental(new_docs, store_path, text_col='text',
@@ -101,25 +107,12 @@ def _read_store(spark, store_path, cols):
     error -- RAISES: the r05 form swallowed every exception as "first
     batch", silently disabling dedup-vs-store for the batch and
     re-seeding the store on the exact failure day it matters (VERDICT
-    r05 "What's wrong #1").  Mirrors ``checkpoint.py``'s path-absent
-    detection: structured error class first, message substring as the
-    cross-version fallback.
+    r05 "What's wrong #1").  ``tables.read_if_present`` is the one
+    path-absent test, shared with ``checkpoint.py``.
     """
-    from pyspark.errors import AnalysisException
-    try:
-        df = spark.read.parquet(store_path)
-        return df.select(*cols) if cols else df
-    except AnalysisException as e:
-        cls = None
-        try:
-            cls = e.getErrorClass()
-        except Exception:
-            pass
-        msg = str(e)
-        if (cls == 'PATH_NOT_FOUND' or 'PATH_NOT_FOUND' in msg
-                or 'Path does not exist' in msg):
-            return None
-        raise
+    from ..sources.tables import read_if_present
+    df = read_if_present(lambda: spark.read.parquet(store_path))
+    return df.select(*cols) if cols and df is not None else df
 
 
 # -- exact token-set Jaccard (oracle-checkable pair join) --------------------
@@ -171,56 +164,24 @@ EXPLODE_FLUSH_ROWS = 1 << 16
 
 MINHASH_K = 32
 LSH_BANDS = 8
-LSH_ROWS = MINHASH_K // LSH_BANDS
-
-
-def _py_shingles(toks):
-    """Distinct 3-token shingles in first-occurrence order: full
-    3-token ' '-joined windows, 1-2 token docs shingle as their joined
-    text, and token-less docs get the empty set (never a '' sentinel,
-    which would make every pure-markup doc a jaccard-1.0 dup of every
-    other)."""
-    if len(toks) >= 3:
-        it = (' '.join(toks[i:i + 3]) for i in range(len(toks) - 2))
-    elif toks:
-        it = (' '.join(toks),)
-    else:
-        return []
-    return list(dict.fromkeys(it))
 
 
 def shingle_df(df, text_col='text'):
-    """(doc_id, shingles): tokenize + shingle in ONE Arrow python stage
-    (r06 2nd pass: the JVM regex engine on the measurement hardware is
-    ~30x slower than CPython's and thread-ceilinged per JVM --
-    text_analysis._counts_stage note).  The shingle STRINGS are those
-    of the zip_with/concat_ws column form this replaced, so every
-    xxhash64 lane, LSH bucket and verified pair downstream is
-    value-identical."""
-    import pyarrow as pa
-
-    from .text_analysis import TOKEN_PATTERN
-
-    src = df.select(F.col('doc_id'), F.col(text_col).alias('_text'))
-    out_ddl = ('doc_id %s, shingles array<string>'
-               % src.schema['doc_id'].dataType.simpleString())
-
-    def gen(batches):
-        import re
-        tok_split = re.compile(TOKEN_PATTERN).split
-        for rb in batches:
-            shs = [_py_shingles(
-                [x for x in tok_split((t or '').lower()) if x])
-                for t in rb.column(1).to_pylist()]
-            yield pa.RecordBatch.from_arrays(
-                [rb.column(0), pa.array(shs, type=pa.list_(pa.string()))],
-                names=['doc_id', 'shingles'])
-
-    return src.mapInArrow(gen, out_ddl)
+    """(doc_id, shingles): ``text_analysis.py_shingles`` of the lowered
+    tokens, a field group of the Arrow counts stage (r06 2nd pass: the
+    JVM regex engine on the measurement hardware is ~30x slower than
+    CPython's and thread-ceilinged per JVM -- _counts_stage note); a
+    null text shingles as ``[]``.  The shingle STRINGS are those of the
+    zip_with/concat_ws column form this replaced, so every xxhash64
+    lane, LSH bucket and verified pair downstream is value-identical."""
+    return (_counts_stage(df, text_col, shingles=True)
+            .select('doc_id', F.coalesce('_shingles', F.array())
+                    .alias('shingles')))
 
 
-def minhash_signatures(df, text_col='text', k=MINHASH_K):
-    """doc_id + k min-hash columns (h0..h{k-1}).
+def minhash_signatures(shingles, k=MINHASH_K):
+    """doc_id + k min-hash columns (h0..h{k-1}) from a :func:`shingle_df`
+    frame.
 
     Shape chosen for codegen: explode shingles once, k flat xxhash64
     columns, then a groupBy(doc_id) of k ``min`` aggregates -- partial
@@ -229,16 +190,14 @@ def minhash_signatures(df, text_col='text', k=MINHASH_K):
     formulation generates pathological whole-stage code.)
 
     The (doc_id, sh) rows are a JVM ``explode`` of the Arrow shingle
-    arrays (:func:`shingle_df` -- off the ceilinged JVM regex engine;
-    the python stage also closes the earlier
-    ``InferFiltersFromGenerate`` re-tokenization hole for good, since
-    no expression exists to push into the scan).  The Generate streams
-    its rows, so per-task memory stays bounded on fat documents.  The
-    k xxhash64 lanes and the min-aggregation stay in the JVM, so every
-    signature VALUE is unchanged.
+    arrays (off the ceilinged JVM regex engine; the python stage also
+    closes the earlier ``InferFiltersFromGenerate`` re-tokenization
+    hole for good, since no expression exists to push into the scan).
+    The Generate streams its rows, so per-task memory stays bounded on
+    fat documents.  The k xxhash64 lanes and the min-aggregation stay in
+    the JVM, so every signature VALUE is unchanged.
     """
-    sh = shingle_df(df, text_col).select(
-        'doc_id', F.explode('shingles').alias('sh'))
+    sh = shingles.select('doc_id', F.explode('shingles').alias('sh'))
     hashed = sh.select(
         'doc_id', *[F.xxhash64('sh', F.lit(i)).alias('h%d' % i)
                     for i in range(k)])
@@ -296,7 +255,7 @@ def minhash_dedup_incremental(new_docs, store_path, text_col='text',
     # dominant cost and was re-executed by every count and the store
     # append; both persists are dropped before returning.
     batch.persist()
-    sigs = minhash_signatures(batch, text_col, k)
+    sigs = minhash_signatures(shingle_df(batch, text_col), k)
     sigs.persist()
     try:
         n_in = new_docs.count()
@@ -345,9 +304,9 @@ def minhash_candidates(df, text_col='text', k=MINHASH_K, bands=LSH_BANDS,
     ``capped`` (no silent caps); callers that need the full family expand
     it transitively downstream.
     """
-    sigs = minhash_signatures(df, text_col, k)
-    banded = band_key_rows(sigs, k, bands)
-    return bucket_candidate_pairs(banded, 'doc_id', 'doc_a', 'doc_b',
+    keys = band_key_rows(minhash_signatures(shingle_df(df, text_col), k),
+                         k, bands)
+    return bucket_candidate_pairs(keys, 'doc_id', 'doc_a', 'doc_b',
                                   bucket_cap, assume_distinct=True)
 
 
@@ -365,35 +324,21 @@ def minhash_near_duplicates(df, text_col='text', threshold=0.8,
     bands/rows split is the knob that moves the LSH S-curve to the
     target threshold (classic MMDS ch.3 tuning).
     """
-    toks = shingle_df(df, text_col).select(
-        'doc_id', F.col('shingles').alias('t'))
-    cand = minhash_candidates(df, text_col, k=k, bands=bands)
-    # r06: both sides attach from the SAME un-renamed subtree (aliases
-    # above the joins, not per-side selects inside the join children),
-    # making the two broadcast subtrees structurally identical --
-    # measured NEUTRAL on this Spark build (4.1.2 plans two independent
-    # BroadcastQueryStages even for a minimal identical self-join, so
-    # the shingle table is still built twice); kept because it is the
-    # exchange-reuse-eligible shape and no worse.  A melt/regroup
-    # single-join alternative was measured and rejected for the
-    # embedding twin (similarity.py note); same trade here.
-    ta, tb = toks.alias('_sta'), toks.alias('_stb')
-    joined = (cand
-              .join(ta, F.col('doc_a') == F.col('_sta.doc_id'))
-              .join(tb, F.col('doc_b') == F.col('_stb.doc_id')))
-    inter = F.size(F.array_intersect(F.col('_sta.t'),
-                                     F.col('_stb.t'))).cast('double')
-    union = (F.size(F.col('_sta.t'))
-             + F.size(F.col('_stb.t'))).cast('double') - inter
-    jac = inter / F.greatest(union, F.lit(1.0))
-    return (joined.select('doc_a', 'doc_b', F.round(jac, 6).alias('jaccard'))
-            .where(F.col('jaccard') >= threshold))
+    shingles = shingle_df(df, text_col)
+    keys = band_key_rows(minhash_signatures(shingles, k), k, bands)
+
+    def jaccard(a, b):
+        inter = F.size(F.array_intersect(a('shingles'),
+                                         b('shingles'))).cast('double')
+        union = (F.size(a('shingles'))
+                 + F.size(b('shingles'))).cast('double') - inter
+        return F.round(inter / F.greatest(union, F.lit(1.0)), 6)
+
+    return verified_pairs(keys, shingles, 'doc_a', 'doc_b', 'jaccard',
+                          jaccard, lambda jac: jac >= threshold)
 
 
 # -- SimHash -------------------------------------------------------------------
-
-
-_SIMHASH_TOKEN_RE = None
 
 
 def simhash_signatures(df, text_col='text'):
@@ -410,64 +355,58 @@ def simhash_signatures(df, text_col='text'):
     ``np.add.reduceat`` -- no per-doc numpy allocation, no per-bit loop.
     """
     import re
-    import pyspark.sql.types as T
-    import numpy as np
     import zlib
 
-    fields = df.select('doc_id', F.col(text_col).alias('_text'))
+    import numpy as np
+
+    src = df.select('doc_id', F.col(text_col).alias('_text'))
     token_re = re.compile(r'[^\W_]+')
     weights = (np.uint64(1) << np.arange(64, dtype=np.uint64))
 
-    def batches(pdfs):
-        for pdf in pdfs:
-            n = len(pdf)
-            if not n:
-                continue
-            tok_lists = [token_re.findall((t or '').lower())
-                         for t in pdf['_text']]
-            counts = np.fromiter((len(t) for t in tok_lists),
-                                 dtype=np.int64, count=n)
-            all_toks = [t for toks in tok_lists for t in toks]
-            sigs = np.zeros(n, dtype=np.int64)
-            if all_toks:
-                # batch vocabulary: hash each distinct token once
-                vocab = {}
-                codes = np.fromiter(
-                    (vocab.setdefault(t, len(vocab)) for t in all_toks),
-                    dtype=np.int64, count=len(all_toks))
-                nv = len(vocab)
-                # collapse to per-(doc, token) rows with multiplicities --
-                # web text repeats ~half its tokens, so the bit-expansion
-                # below touches far fewer rows than one-per-occurrence
-                doc_idx = np.repeat(np.arange(n), counts)
-                uk, cnt = np.unique(doc_idx * nv + codes,
-                                    return_counts=True)
-                d = uk // nv
-                c = uk % nv
-                uh = np.fromiter(
-                    ((zlib.crc32(e) << 32) | zlib.crc32(e[::-1])
-                     for e in (t.encode() for t in vocab)),
-                    dtype=np.uint64, count=nv)
-                bits_v = np.unpackbits(uh[:, None].view(np.uint8), axis=1,
-                                       bitorder='little').astype(np.int64)
-                contrib = bits_v[c] * cnt[:, None]     # (rows, 64) ones
-                starts = np.concatenate(
-                    ([0], np.flatnonzero(np.diff(d)) + 1))
-                seg = np.add.reduceat(contrib, starts, axis=0)
-                ones = np.zeros((n, 64), dtype=np.int64)
-                ones[d[starts]] = seg
-                votes = 2 * ones - counts[:, None]
-                nz = counts > 0
-                sigs[nz] = ((votes[nz] > 0).astype(np.uint64)
-                            * weights).sum(axis=1).astype(np.int64)
-            yield pd.DataFrame({'doc_id': pdf['doc_id'].to_numpy(),
-                                'simhash': sigs})
+    def signatures(pdf):
+        n = len(pdf)
+        tok_lists = [token_re.findall((t or '').lower())
+                     for t in pdf['_text']]
+        counts = np.fromiter((len(t) for t in tok_lists),
+                             dtype=np.int64, count=n)
+        all_toks = [t for toks in tok_lists for t in toks]
+        sigs = np.zeros(n, dtype=np.int64)
+        if all_toks:
+            # batch vocabulary: hash each distinct token once
+            vocab = {}
+            codes = np.fromiter(
+                (vocab.setdefault(t, len(vocab)) for t in all_toks),
+                dtype=np.int64, count=len(all_toks))
+            nv = len(vocab)
+            # collapse to per-(doc, token) rows with multiplicities --
+            # web text repeats ~half its tokens, so the bit-expansion
+            # below touches far fewer rows than one-per-occurrence
+            doc_idx = np.repeat(np.arange(n), counts)
+            uk, cnt = np.unique(doc_idx * nv + codes,
+                                return_counts=True)
+            d = uk // nv
+            c = uk % nv
+            uh = np.fromiter(
+                ((zlib.crc32(e) << 32) | zlib.crc32(e[::-1])
+                 for e in (t.encode() for t in vocab)),
+                dtype=np.uint64, count=nv)
+            bits_v = np.unpackbits(uh[:, None].view(np.uint8), axis=1,
+                                   bitorder='little').astype(np.int64)
+            contrib = bits_v[c] * cnt[:, None]     # (rows, 64) ones
+            starts = np.concatenate(
+                ([0], np.flatnonzero(np.diff(d)) + 1))
+            seg = np.add.reduceat(contrib, starts, axis=0)
+            ones = np.zeros((n, 64), dtype=np.int64)
+            ones[d[starts]] = seg
+            votes = 2 * ones - counts[:, None]
+            nz = counts > 0
+            sigs[nz] = ((votes[nz] > 0).astype(np.uint64)
+                        * weights).sum(axis=1).astype(np.int64)
+        return pd.DataFrame({'doc_id': pdf['doc_id'].to_numpy(),
+                             'simhash': sigs})
 
-    schema = T.StructType([
-        T.StructField('doc_id', fields.schema['doc_id'].dataType),
-        T.StructField('simhash', T.LongType()),
-    ])
-    return fields.mapInPandas(batches, schema)
+    return _map_batches(src, signatures, 'doc_id %s, simhash long'
+                        % src.schema['doc_id'].dataType.simpleString())
 
 
 # Manku-style multi-table keys (WWW'07 near-duplicate detection): split
@@ -510,17 +449,10 @@ def simhash_near_duplicates(df, text_col='text', bucket_cap=BUCKET_CAP):
     multi-table bucket join (exact for d <= 3), mega-buckets chain-capped,
     candidates verified with popcount."""
     sigs = simhash_signatures(df, text_col)
-    cand = bucket_candidate_pairs(
-        simhash_buckets(sigs), 'doc_id', 'doc_a', 'doc_b', bucket_cap,
-        assume_distinct=True)
-    joined = (cand
-              .join(sigs.select(F.col('doc_id').alias('doc_a'),
-                                F.col('simhash').alias('sig_a')), 'doc_a')
-              .join(sigs.select(F.col('doc_id').alias('doc_b'),
-                                F.col('simhash').alias('sig_b')), 'doc_b'))
-    hamming = F.bit_count(F.col('sig_a').bitwiseXOR(F.col('sig_b')))
-    return (joined.select('doc_a', 'doc_b', hamming.alias('hamming'))
-            .where(F.col('hamming') <= 3))
+    return verified_pairs(
+        simhash_buckets(sigs), sigs, 'doc_a', 'doc_b', 'hamming',
+        lambda a, b: F.bit_count(a('simhash').bitwiseXOR(b('simhash'))),
+        lambda hamming: hamming <= 3, bucket_cap)
 
 
 # -- cluster assignment (the keep/drop decision table) ----------------------
@@ -628,8 +560,6 @@ def passage_sig_rows(df, text_col='text', id_col='doc_id',
     """
     import pyarrow as pa
 
-    from .text_analysis import TOKEN_PATTERN
-
     src = df.select(F.col(id_col).alias('_id'),
                     F.col(text_col).alias('_text'))
     id_ddl = src.schema['_id'].dataType.simpleString()
@@ -639,13 +569,9 @@ def passage_sig_rows(df, text_col='text', id_col='doc_id',
 
     def gen(batches):
         import hashlib
-        import re
-        tok_split = re.compile(TOKEN_PATTERN).split
         md5 = hashlib.md5
         for rb in batches:
             id_type = rb.column(0).type
-            ids = rb.column(0).to_pylist()
-            texts = rb.column(1).to_pylist()
             out_ids, out_sigs, out_ps = [], [], []
 
             def flush():
@@ -657,12 +583,9 @@ def passage_sig_rows(df, text_col='text', id_col='doc_id',
                     names.append('passage')
                 return pa.RecordBatch.from_arrays(arrays, names=names)
 
-            for did, t in zip(ids, texts):
-                if t is None:
-                    continue
-                toks = [x for x in tok_split(t) if x]
-                if len(toks) < n:
-                    continue
+            for did, t in zip(rb.column(0).to_pylist(),
+                              rb.column(1).to_pylist()):
+                toks = py_tokens(t) if t is not None else ()
                 for i in range(len(toks) - n + 1):
                     p = ' '.join(toks[i:i + n])
                     out_ids.append(did)

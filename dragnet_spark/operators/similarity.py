@@ -24,7 +24,9 @@
   pairs.  Candidate volume ~ bands * n^2 / 2^bits: size ``bits`` at
   ~2*log2(n) for linear candidate growth (16 covers the demo corpus;
   a 10^9-doc corpus wants 24-32 with multi-probe).  Mega-buckets
-  (identical/boilerplate vectors) are chain-capped like dedup.py.
+  (identical/boilerplate vectors) are chain-capped like dedup.py, and
+  the verify is :func:`verified_pairs`, the one near-duplicate pair plan
+  the MinHash and SimHash miners of dedup.py end in too.
 
 Every path is assembled from one private core, each piece written once:
 ``_mat``/``_unit``/``_query_matrix`` decode, normalize and collect
@@ -277,25 +279,21 @@ def lsh_band_signatures(df, vec_col='embedding', id_col='vec_id',
         n = proj.shape[0]
         sigs = (proj.reshape(n, bands, bits).astype(np.uint64)
                 * weights).sum(axis=2)              # (n, bands)
-        frames = []
-        base = pd.DataFrame({
-            'vec_id': np.repeat(pdf['vec_id'].to_numpy(), bands),
-            'band': np.tile(np.arange(bands, dtype=np.int32), n),
-            'bucket': (sigs.astype(np.int64) + band_ns).reshape(-1)})
-        frames.append(base)
+        keys = [sigs]
         if probes:
             # per (vec, band): positions of the `probes` smallest
             # |projection| bits -- flip each one for a probe bucket
             margins = np.abs(raw).reshape(n, bands, bits)
             order = np.argsort(margins, axis=2)[:, :, :probes]
-            for p in range(probes):
-                flip = np.uint64(1) << order[:, :, p].astype(np.uint64)
-                pb = ((sigs ^ flip).astype(np.int64) + band_ns)
-                frames.append(pd.DataFrame({
-                    'vec_id': base['vec_id'],
-                    'band': base['band'],
-                    'bucket': pb.reshape(-1)}))
-        return pd.concat(frames, ignore_index=True)
+            keys += [sigs ^ (np.uint64(1) << order[:, :, p].astype(np.uint64))
+                     for p in range(probes)]
+        return pd.DataFrame({
+            'vec_id': np.tile(np.repeat(pdf['vec_id'].to_numpy(), bands),
+                              len(keys)),
+            'band': np.tile(np.arange(bands, dtype=np.int32),
+                            n * len(keys)),
+            'bucket': np.concatenate([(k.astype(np.int64) + band_ns)
+                                      .reshape(-1) for k in keys])})
 
     return _map_batches(_vectors(df, vec_col, id_col), signatures,
                         'vec_id long, band int, bucket long')
@@ -335,23 +333,54 @@ def bucket_candidate_pairs(keyed, id_col, a_col, b_col,
     members = keyed.select(F.col('bucket').alias('_bk'),
                            F.col(id_col).alias('_id'))
     if not assume_distinct:
-        members = members.groupBy('_bk', '_id').agg(F.lit(1).alias('_1')) \
-                         .drop('_1')
+        members = members.distinct()
     word = Window.partitionBy('_bk').orderBy('_id')
     nxt = F.collect_list('_id').over(word.rowsBetween(1, bucket_cap))
     n = F.count('*').over(Window.partitionBy('_bk'))
     # single-pass pair construction (a small/big branch + union would
     # recompute the whole upstream signature pipeline once per branch)
     mates = F.when(n <= bucket_cap, nxt).otherwise(F.slice(nxt, 1, 1))
-    ex = (members
-          .select(F.col('_id').alias('_a'), mates.alias('_mates'),
-                  (n > bucket_cap).alias('capped'))
-          .select('_a', F.explode('_mates').alias('_b'), 'capped')
-          .where(F.col('_a') != F.col('_b')))
-    return (ex.select(F.col('_a').alias(a_col),
-                      F.col('_b').alias(b_col), 'capped')
+    return (members
+            .select(F.col('_id').alias(a_col), mates.alias('_mates'),
+                    (n > bucket_cap).alias('capped'))
+            .select(a_col, F.explode('_mates').alias(b_col), 'capped')
+            .where(F.col(a_col) != F.col(b_col))
             .groupBy(a_col, b_col)
             .agg(F.max('capped').alias('capped')))
+
+
+def verified_pairs(keys, side, a_col, b_col, name, score, keep,
+                   bucket_cap=BUCKET_CAP):
+    """The near-duplicate pair plan every miner ends in: ``(id, bucket)``
+    ``keys`` (one row per (bucket, id)) -> chain-capped candidates ->
+    the per-id ``side`` table attached at both ends -> column ``name`` =
+    ``score(a, b)`` -> rows where ``keep(score)``; returns ``(a_col,
+    b_col, name)``.  The id is the first column of ``keys`` and of
+    ``side``; ``a(col)``/``b(col)`` are the two ends' side columns.
+
+    Attach shape (r06): two joins of the SAME un-renamed ``side``
+    subtree, aliases ABOVE the joins -- the exchange-reuse-eligible
+    shape, measured NEUTRAL on Spark 4.1.2 (it plans two independent
+    BroadcastQueryStages even for a minimal identical self-join), kept
+    because it is no worse.  A melt (explode each pair into two (end,
+    id) rows, join the side table ONCE, regroup per pair) was measured
+    and REJECTED on embeddings: candidates are ~25x the corpus there
+    (bench sf1.0: ~2.5M pairs vs 100k vectors), so regrouping fat
+    (vector, norm) structs per pair costs more than a second scan of
+    the side table (SortAggregate 8.9 s / ObjectHash 9.9 s vs 7.6 s for
+    the two-join form).  AQE broadcasts the candidate side into the
+    first join, and the verify only ever touches candidate rows."""
+    cand = bucket_candidate_pairs(keys, keys.columns[0], a_col, b_col,
+                                  bucket_cap, assume_distinct=True)
+    sid = side.columns[0]
+    joined = (cand
+              .join(side.alias('_sa'), F.col(a_col) == F.col('_sa.' + sid))
+              .join(side.alias('_sb'), F.col(b_col) == F.col('_sb.' + sid)))
+    scored = joined.select(
+        a_col, b_col,
+        score(lambda c: F.col('_sa.' + c),
+              lambda c: F.col('_sb.' + c)).alias(name))
+    return scored.where(keep(F.col(name)))
 
 
 def embedding_near_duplicates(df, threshold=0.9, vec_col='embedding',
@@ -359,46 +388,22 @@ def embedding_near_duplicates(df, threshold=0.9, vec_col='embedding',
                               bits=LSH_BITS_PER_BAND, seed=42,
                               bucket_cap=BUCKET_CAP, probes=0):
     """Embedding-cosine near-dup pairs: band-bucket candidates + exact
-    cosine verify.
+    cosine verify (:func:`verified_pairs`).
 
     16-bit bands (vs r01's 4): a random pair collides per band with
     p = 0.5^16 ~= 1.5e-5, so candidate volume is ~bands * n^2 / 2^bits --
     linear-ish until n approaches 2^bits (then raise ``bits``; see module
-    docstring).  Mega-buckets are chain-capped via
-    :func:`bucket_candidate_pairs`.
+    docstring).  Mega-buckets are chain-capped.
     """
-    dim = df.select(F.size(vec_col)).first()[0]
-    sigs = lsh_band_signatures(df, vec_col, id_col, bands, bits, seed, dim,
+    sigs = lsh_band_signatures(df, vec_col, id_col, bands, bits, seed,
                                probes=probes)
-    cand = bucket_candidate_pairs(
-        sigs.select('vec_id', 'bucket'), 'vec_id', 'vec_a', 'vec_b',
-        bucket_cap, assume_distinct=True).select('vec_a', 'vec_b')
-    # verify shape note (r06): a melt (explode each pair into two
-    # (side, vid) rows, join the vector table ONCE, regroup per pair)
-    # was measured and REJECTED -- candidate volume here is ~25x the
-    # corpus (bench sf1.0: ~2.5M pairs vs 100k vectors), so regrouping
-    # fat (vector, norm) structs per pair costs more than scanning the
-    # vector table a second time (SortAggregate 8.9 s / ObjectHash
-    # 9.9 s vs 7.6 s for the two-join form).  The two joins stay: AQE
-    # broadcasts the candidate side into the first and the verify only
-    # ever touches candidate rows.
     vecs = with_norm(df, vec_col).select(
         F.col(id_col).alias('vid'), F.col(vec_col).alias('_v'),
         F.col('_norm').alias('_n'))
-    # r06: the two vector attachments join the SAME un-renamed subtree
-    # (aliases applied ABOVE the join, not per-side selects inside the
-    # join children) -- the exchange-reuse-eligible shape.  Measured
-    # NEUTRAL on this Spark build (4.1.2 plans two independent
-    # BroadcastQueryStages even for minimal identical self-joins);
-    # kept because it is no worse and reuse-ready.
-    va, vb = vecs.alias('_sva'), vecs.alias('_svb')
-    joined = (cand
-              .join(va, F.col('vec_a') == F.col('_sva.vid'))
-              .join(vb, F.col('vec_b') == F.col('_svb.vid')))
-    cosine = _cosine(F.col('_sva._v'), F.col('_svb._v'),
-                     F.col('_sva._n'), F.col('_svb._n'))
-    return (joined.select('vec_a', 'vec_b', F.round(cosine, 6).alias('cosine'))
-            .where(F.col('cosine') >= threshold))
+    return verified_pairs(
+        sigs.select('vec_id', 'bucket'), vecs, 'vec_a', 'vec_b', 'cosine',
+        lambda a, b: F.round(_cosine(a('_v'), b('_v'), a('_n'), b('_n')), 6),
+        lambda cos: cos >= threshold, bucket_cap)
 
 
 def with_planted_duplicates(df, vec_col='embedding', id_col='vec_id',
@@ -413,7 +418,6 @@ def with_planted_duplicates(df, vec_col='embedding', id_col='vec_id',
     embedding_near_duplicates is specified against, and gives bench.py a
     ground truth for recall measurement.
     """
-    dim = df.select(F.size(vec_col)).first()[0]
     src = _vectors(df, vec_col, id_col)
 
     def perturb(pdf):
@@ -422,7 +426,7 @@ def with_planted_duplicates(df, vec_col='embedding', id_col='vec_id',
         g = np.empty_like(mat)
         for i, vid in enumerate(ids):
             rs = np.random.RandomState(int(vid) & 0x7FFFFFFF)
-            g[i] = rs.standard_normal(dim)
+            g[i] = rs.standard_normal(mat.shape[1])
         return pd.DataFrame({'vec_id': ids + id_offset,
                              'embedding': list(_unit(mat + noise * g))})
 

@@ -28,6 +28,7 @@ is not supported.  Pinned on non-ASCII rows in tests.
 
 from __future__ import annotations
 
+import re
 from collections import Counter
 
 import pyspark.sql.functions as F
@@ -142,7 +143,9 @@ def _quality_exprs():
     so the gate doubles and the DuckDB oracle hashes are bit-identical
     to the old all-JVM expression tree."""
     n_words = F.col('_n_words')
-    sum_word_len = F.col('_sum_word_len')
+    # a null text's mean word length is 0.0 (as in the DuckDB oracle),
+    # so its ``passes`` is 0 (null AND false), not null
+    sum_word_len = F.coalesce('_sum_word_len', F.lit(0))
     mean_word_len = (sum_word_len.cast('double')
                      / F.greatest(n_words, F.lit(1)).cast('double'))
     n_hash = F.col('_n_hash')
@@ -417,22 +420,35 @@ def stratified_sample(df, fracs, strata_col='lang', key_col='doc_id'):
 # old expression trees (the same pattern as synthesize_extract_gold_counts,
 # whose python/JVM tokenizer agreement is already test-pinned).
 
-_PY_TOKEN_RE = None
+# the python twins of the JVM patterns, compiled once per worker import.
+# Java \s is ASCII-only [ \t\n\x0B\f\r]; re.ASCII pins the python
+# dialect to the same set
+_TOKEN_SPLIT = re.compile(TOKEN_PATTERN).split
+_WS_SPLIT = re.compile(r'\s+', re.ASCII).split
+_CJK_RE = re.compile('[一-鿿]')
+_ALPHA_RE = re.compile('[A-Za-z]')
 
 
-def _py_regexes():
-    global _PY_TOKEN_RE
-    if _PY_TOKEN_RE is None:
-        import re
-        _PY_TOKEN_RE = (
-            re.compile(TOKEN_PATTERN),
-            # Java \s is ASCII-only [ \t\n\x0B\f\r]; re.ASCII pins the
-            # python dialect to the same set
-            re.compile(r'\s+', re.ASCII),
-            re.compile('[一-鿿]'),
-            re.compile('[A-Za-z]'),
-        )
-    return _PY_TOKEN_RE
+def py_tokens(text):
+    """The non-empty ``TOKEN_PATTERN`` tokens of ``text`` in order -- the
+    python twin of :func:`tokens_col` (the one Python compile of the
+    pattern; Java and Python regex agree on its ASCII class)."""
+    return [x for x in _TOKEN_SPLIT(text) if x]
+
+
+def py_shingles(toks):
+    """Distinct 3-token shingles in first-occurrence order: full
+    3-token ' '-joined windows, 1-2 token docs shingle as their joined
+    text, and token-less docs get the empty set (never a '' sentinel,
+    which would make every pure-markup doc a jaccard-1.0 dup of every
+    other)."""
+    if len(toks) >= 3:
+        it = (' '.join(toks[i:i + 3]) for i in range(len(toks) - 2))
+    elif toks:
+        it = (' '.join(toks),)
+    else:
+        return []
+    return list(dict.fromkeys(it))
 
 
 def _top2gram_chars(toks):
@@ -458,14 +474,17 @@ def _dup10gram_chars(toks, lens):
 
 def _counts_stage(df, text_col='text', raw=False, lower=False, hits=False,
                   cjk=False, alnum=False, sigs=False, words=False,
-                  rep=False, keep_cols=()):
+                  rep=False, shingles=False, keep_cols=()):
     """(doc_id, <keep_cols>, _n_chars, <requested count cols>) via ONE
     mapInArrow stage; exactly one output row per input row, in order.
 
     Null text propagates as null counts, so downstream JVM arithmetic
     null-propagates exactly as the old all-JVM expression trees did.
+    ``shingles`` adds ``_shingles``, the :func:`py_shingles` of the
+    lowered tokens (the MinHash shingle table, ``dedup.shingle_df``).
     """
     import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_type
 
     # hits: True = all STOPWORDS languages, or an iterable subset --
     # the per-row python loop then intersects only what the caller
@@ -493,6 +512,8 @@ def _counts_stage(df, text_col='text', raw=False, lower=False, hits=False,
     if rep:
         fields += [('_tok_chars', pa.int64()), ('_top2', pa.int64()),
                    ('_dup10', pa.int64())]
+    if shingles:
+        fields += [('_shingles', pa.list_(pa.string()))]
 
     in_fields = ['doc_id', *keep_cols, text_col]
     src = df.select(*dict.fromkeys(in_fields))  # dedup, keep order
@@ -500,7 +521,7 @@ def _counts_stage(df, text_col='text', raw=False, lower=False, hits=False,
     pass_cols = ['doc_id', *[c for c in keep_cols if c != 'doc_id']]
     out_ddl = ', '.join(
         ['%s %s' % (c, ddl_types[c]) for c in pass_cols]
-        + ['%s %s' % (name, 'string' if typ == pa.string() else 'bigint')
+        + ['%s %s' % (name, from_arrow_type(typ).simpleString())
            for name, typ in fields])
     stop_sets = {lang: frozenset(STOPWORDS[lang]) for lang in hit_langs}
     gopher_stop = frozenset(GOPHER_STOPWORDS)
@@ -508,9 +529,6 @@ def _counts_stage(df, text_col='text', raw=False, lower=False, hits=False,
 
     def gen(batches):
         import hashlib
-        tok_re, ws_re, cjk_re, alpha_re = _py_regexes()
-        tok_split = tok_re.split
-        ws_split = ws_re.split
         for rb in batches:
             cols = {name: rb.column(i)
                     for i, name in enumerate(rb.schema.names)}
@@ -523,18 +541,19 @@ def _counts_stage(df, text_col='text', raw=False, lower=False, hits=False,
                     continue
                 out['_n_chars'].append(len(t))
                 if raw:
-                    toks = [x for x in tok_split(t) if x]
+                    toks = py_tokens(t)
                     out['_n_tokens'].append(len(toks))
                     out['_n_distinct'].append(len(set(toks)))
-                if lower or hit_langs or sigs or rep:
-                    toksl = [x for x in tok_split(t.lower()) if x]
+                if lower or hit_langs or sigs or rep or shingles:
+                    toksl = py_tokens(t.lower())
+                if hit_langs or sigs:
                     dt = set(toksl)
                 if lower:
                     out['_n_tokens_lower'].append(len(toksl))
                 for lang in hit_langs:
                     out['_h_' + lang].append(len(dt & stop_sets[lang]))
                 if cjk:
-                    out['_n_cjk'].append(len(cjk_re.findall(t)))
+                    out['_n_cjk'].append(len(_CJK_RE.findall(t)))
                 if alnum:
                     out['_n_alnum_sp'].append(
                         sum(1 for ch in t if ch in alnum_sp_set))
@@ -544,13 +563,13 @@ def _counts_stage(df, text_col='text', raw=False, lower=False, hits=False,
                     out['_tokenset_sig'].append(hashlib.md5(
                         ' '.join(sorted(dt)).encode('utf-8')).hexdigest())
                 if words:
-                    ws = [w for w in ws_split(t.strip(' ')) if w]
+                    ws = [w for w in _WS_SPLIT(t.strip(' ')) if w]
                     out['_n_words'].append(len(ws))
                     out['_sum_word_len'].append(sum(map(len, ws)))
                     out['_n_hash'].append(t.count('#'))
                     out['_ell_lendiff'].append(3 * t.count('...'))
                     out['_alpha_words'].append(
-                        sum(1 for w in ws if alpha_re.search(w)))
+                        sum(1 for w in ws if _ALPHA_RE.search(w)))
                     out['_stop_hits'].append(
                         len({w.lower() for w in ws} & gopher_stop))
                 if rep:
@@ -558,6 +577,8 @@ def _counts_stage(df, text_col='text', raw=False, lower=False, hits=False,
                     out['_tok_chars'].append(sum(lens))
                     out['_top2'].append(_top2gram_chars(toksl))
                     out['_dup10'].append(_dup10gram_chars(toksl, lens))
+                if shingles:
+                    out['_shingles'].append(py_shingles(toksl))
             arrays = [cols[c] for c in pass_cols]
             arrays += [pa.array(out[name], type=typ)
                        for name, typ in fields]

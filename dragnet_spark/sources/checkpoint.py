@@ -35,12 +35,14 @@ def _manifest_dir(base):
 
 
 def read_manifest(spark, base):
-    path = _manifest_dir(base)
-    try:
-        return tables.read_table(spark, 'manifest', path=path) \
-            .to(spark.createDataFrame([], MANIFEST_SCHEMA).schema)
-    except Exception:
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+    """Every committed manifest row; empty only while no manifest path
+    exists.  An unreadable manifest RAISES: read as empty it would mean
+    "nothing done" -- a silent full re-extraction, and every committed
+    row hidden from :func:`read_extracted`."""
+    empty = spark.createDataFrame([], MANIFEST_SCHEMA)
+    manifest = tables.read_if_present(lambda: tables.read_table(
+        spark, 'manifest', path=_manifest_dir(base)))
+    return empty if manifest is None else manifest.to(empty.schema)
 
 
 def completed_ranges(spark, base):
@@ -130,15 +132,10 @@ def run_with_checkpoints(extracted_df, base, run_id=None):
     # manifest row), not an error.  Probing AFTER the write keeps the
     # common non-empty path to a single computation (an isEmpty probe
     # up front would run the whole extraction twice).
-    from pyspark.errors import AnalysisException
-    try:
-        written = tables.read_run(extracted_df.sparkSession, 'extracted',
-                                  run_id, path=out_path)
-        written.schema  # force analysis so a missing path surfaces here
-    except AnalysisException as e:
-        if 'PATH_NOT_FOUND' in str(e) or 'Path does not exist' in str(e):
-            return run_id
-        raise
+    written = tables.read_if_present(lambda: tables.read_run(
+        extracted_df.sparkSession, 'extracted', run_id, path=out_path))
+    if written is None:
+        return run_id
     manifest = (written
                 .groupBy('run_id', 'partition_id')
                 .agg(F.min('doc_id').alias('doc_id_min'),

@@ -33,7 +33,9 @@ from pyspark.sql.datasource import (DataSource, DataSourceReader,
                                     SimpleDataSourceStreamReader,
                                     WriterCommitMessage)
 
-_DELIM_RE = re.compile(r'\n*!@#\$%\^&\*\(\)\s+COMMENTS\n*')
+from .gold_io import COMMENTS_DELIM_LITERAL, COMMENTS_DELIM_RE
+
+_DELIM_RE = re.compile(COMMENTS_DELIM_RE)
 _SUFFIX = '.corrected.txt'
 
 SCHEMA = 'doc_id string, content_text string, comments_text string'
@@ -88,9 +90,6 @@ class GoldCorrectedReader(DataSourceReader):
             yield (name[:-len(_SUFFIX)], content, comments)
 
 
-_DELIM_LITERAL = '!@#$%^&*()  COMMENTS'
-
-
 class GoldWriteDone(WriterCommitMessage):
     def __init__(self, n_files):
         self.n_files = n_files
@@ -122,7 +121,8 @@ class GoldCorrectedWriter(DataSourceWriter):
         for row in iterator:
             body = row.content_text or ''
             if row.comments_text:
-                body += '\n%s\n%s' % (_DELIM_LITERAL, row.comments_text)
+                body += '\n%s\n%s' % (COMMENTS_DELIM_LITERAL,
+                                        row.comments_text)
             # doc_ids carry host/ prefixes ('h000/doc-...'): lay them
             # out as subdirectories so ids round-trip verbatim through
             # the recursive reader.  An absolute doc_id or one with

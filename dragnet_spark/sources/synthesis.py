@@ -405,22 +405,19 @@ def synthesize_extract_gold_counts(spark, sf_dir, amplification=1,
     JVM twin re-tokenized both 2 KB texts per doc with regex split +
     array_distinct + array_intersect (~4.3 s of a 9.6 s query at 50 k
     docs); the tokenizer here is the same ASCII class
-    (``text_analysis.TOKEN_PATTERN``), on which Java and Python regex agree
+    (``text_analysis.py_tokens``), on which Java and Python regex agree
     codepoint-for-codepoint, and the emitted counts are exact ints, so
     the downstream ratio arithmetic is bit-identical."""
-    from ..operators.text_analysis import TOKEN_PATTERN
+    from ..operators.text_analysis import py_tokens
 
     model = model or default_model()
-    tok_re = re.compile(TOKEN_PATTERN)
     schema = pa.schema([('doc_id', pa.string()), ('_tp', pa.int32()),
                         ('_np', pa.int32()), ('_na', pa.int32())])
 
     def per_doc(sid, span_dicts, gold_c, gold_m):
         content = extracted_row(sid, span_dicts, model)['content_text']
-        p = set(tok_re.split(content))
-        p.discard('')
-        a = set(tok_re.split(gold_c))
-        a.discard('')
+        p = set(py_tokens(content))
+        a = set(py_tokens(gold_c))
         return [{'doc_id': sid, '_tp': len(p & a), '_np': len(p),
                  '_na': len(a)}]
 

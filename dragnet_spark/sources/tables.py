@@ -28,6 +28,8 @@ Required cluster confs (documented, not settable here)::
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
@@ -43,13 +45,44 @@ def catalog_available(spark, catalog='lake'):
     return bool(impl)
 
 
-def read_table(spark, name, path=None, catalog='lake'):
-    """Read an Iceberg table by name, or the parquet path fallback."""
+def _uses_catalog(spark, name, path, catalog):
+    """True when the Iceberg ``catalog`` serves table ``name``; otherwise
+    the parquet fallback ``path`` is required."""
     if catalog_available(spark, catalog):
-        return spark.read.table('%s.%s' % (catalog, name))
+        return True
     if path is None:
         raise ValueError('no Iceberg catalog and no fallback path for %r'
                          % name)
+    return False
+
+
+def read_if_present(read):
+    """``read()`` (a DataFrame read, analysed here), or None when it
+    fails only because its path does not exist yet -- the one read
+    failure that means "nothing written yet".  Any other failure
+    (corrupt footer, permissions, transient FS error) raises.  Error
+    class first, message substring as the cross-version fallback."""
+    from pyspark.errors import AnalysisException
+    try:
+        df = read()
+        df.schema  # force analysis so a missing path surfaces here
+        return df
+    except AnalysisException as e:
+        try:
+            cond = e.getCondition()
+        except Exception:
+            cond = None
+        msg = str(e)
+        if (cond == 'PATH_NOT_FOUND' or 'PATH_NOT_FOUND' in msg
+                or 'Path does not exist' in msg):
+            return None
+        raise
+
+
+def read_table(spark, name, path=None, catalog='lake'):
+    """Read an Iceberg table by name, or the parquet path fallback."""
+    if _uses_catalog(spark, name, path, catalog):
+        return spark.read.table('%s.%s' % (catalog, name))
     return spark.read.parquet(path)
 
 
@@ -63,13 +96,9 @@ def append_table(df, name, path=None, catalog='lake',
     """
     if cluster_by_doc_range:
         df = df.repartitionByRange(cluster_by_doc_range, F.col('doc_id'))
-    spark = df.sparkSession
-    if catalog_available(spark, catalog):
+    if _uses_catalog(df.sparkSession, name, path, catalog):
         df.writeTo('%s.%s' % (catalog, name)).append()
         return
-    if path is None:
-        raise ValueError('no Iceberg catalog and no fallback path for %r'
-                         % name)
     df.write.mode('append').parquet(path)
 
 
@@ -98,13 +127,9 @@ def append_table(df, name, path=None, catalog='lake',
 def append_run_partitioned(df, name, path=None, catalog='lake'):
     """Append run-tagged rows (must carry a ``run_id`` column), laid out
     so per-run reads prune to the run's files."""
-    spark = df.sparkSession
-    if catalog_available(spark, catalog):
+    if _uses_catalog(df.sparkSession, name, path, catalog):
         df.writeTo('%s.%s' % (catalog, name)).append()
         return
-    if path is None:
-        raise ValueError('no Iceberg catalog and no fallback path for %r'
-                         % name)
     df.write.mode('append').partitionBy('run_id').parquet(path)
 
 
@@ -139,12 +164,8 @@ def read_all_runs(spark, name, path=None, catalog='lake'):
     none of this: the partition transform is table metadata, not
     directory layout.
     """
-    if catalog_available(spark, catalog):
+    if _uses_catalog(spark, name, path, catalog):
         return spark.read.table('%s.%s' % (catalog, name))
-    if path is None:
-        raise ValueError('no Iceberg catalog and no fallback path for %r'
-                         % name)
-    import os
     entries = os.listdir(path) if os.path.isdir(path) else []
     flat = sorted(e for e in entries
                   if e.endswith('.parquet') and not e.startswith('_'))
@@ -158,11 +179,7 @@ def read_all_runs(spark, name, path=None, catalog='lake'):
 
 def read_run(spark, name, run_id, path=None, catalog='lake'):
     """One run's rows, reading only that run's files."""
-    if catalog_available(spark, catalog):
+    if _uses_catalog(spark, name, path, catalog):
         return (spark.read.table('%s.%s' % (catalog, name))
                 .where(F.col('run_id') == run_id))
-    if path is None:
-        raise ValueError('no Iceberg catalog and no fallback path for %r'
-                         % name)
-    import os
     return _read_runs(spark, path, os.path.join(path, 'run_id=%s' % run_id))

@@ -25,8 +25,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-EVENTS_SCHEMA = ('event_id long, ts timestamp, user_id long, '
-                 'event_type string, value double, props string')
+from .window_stream import EVENTS_SCHEMA
 
 _STATE_SCHEMA = 'n long, cents long, last_us long'
 _OUT_SCHEMA = ('user_id long, n_events long, total_value double, '

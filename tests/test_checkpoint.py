@@ -167,6 +167,26 @@ class TestCheckpointResume:
         files = scan.inputFiles()
         assert files and all('run_id=%s' % run2 in f for f in files)
 
+    def test_corrupted_manifest_fails_loudly(self, spark, tmp_path):
+        # an unreadable manifest is not "no manifest": read as empty, it
+        # would make filter_resume re-extract everything and hide every
+        # committed row from read_extracted
+        import os
+        from dragnet_spark.sources.checkpoint import (filter_resume,
+                                                      read_manifest)
+        base = str(tmp_path / 'ckpt_corrupt')
+        assert read_manifest(spark, base).count() == 0  # absent: empty
+        os.makedirs(os.path.join(base, '_manifest'))
+        with open(os.path.join(base, '_manifest', 'part-0000.parquet'),
+                  'wb') as f:
+            f.write(b'not a parquet file')
+        docs = spark.createDataFrame([('h000/doc-0',)], 'doc_id string')
+        with pytest.raises(Exception) as ei:
+            read_manifest(spark, base).collect()
+        assert 'PATH_NOT_FOUND' not in str(ei.value)
+        with pytest.raises(Exception):
+            filter_resume(spark, docs, base).collect()
+
     def test_manifest_metrics(self, spark, tmp_path):
         from dragnet_spark.sources.checkpoint import (
             extract_resumable, read_manifest)

@@ -239,21 +239,53 @@ class TestGateFunnel:
 
     def test_null_text_row(self, spark):
         # a null text counts toward n_total and the repetition gate
-        # (nothing repeated), while its quality verdict stays null
+        # (nothing repeated); its quality stats stay null except the
+        # mean word length (0.0, as in the DuckDB oracle), so it fails
+        # the quality gate instead of carrying a null verdict
         from dragnet_spark.operators.curation import gate_funnel
         from dragnet_spark.operators.text_analysis import (
             gopher_quality_flags, gopher_repetition_flags_rowwise)
         df = spark.createDataFrame([(1, None)], 'doc_id long, text string')
         q = gopher_quality_flags(df).collect()[0].asDict()
-        assert q == {'doc_id': 1, 'n_words': None, 'mean_word_len': None,
+        assert q == {'doc_id': 1, 'n_words': None, 'mean_word_len': 0.0,
                      'symbol_ratio': None, 'alpha_word_frac': None,
-                     'stopword_hits': None, 'passes': None}
+                     'stopword_hits': None, 'passes': 0}
         r = gopher_repetition_flags_rowwise(df).collect()[0].asDict()
         assert r == {'doc_id': 1, 'top_2gram_char_frac': 0.0,
                      'dup_10gram_char_frac': 0.0, 'passes_repetition': 1}
         f = gate_funnel(df).collect()[0].asDict()
-        assert f == {'n_total': 1, 'n_quality_pass': None,
-                     'n_repetition_pass': 1, 'n_both_pass': None}
+        assert f == {'n_total': 1, 'n_quality_pass': 0,
+                     'n_repetition_pass': 1, 'n_both_pass': 0}
+
+    def test_quality_bit_identical_to_duckdb_oracle(self, spark, sf_dir):
+        # the quality gate over the corpus plus crafted null / empty /
+        # short / symbol-heavy / passing rows equals the DuckDB oracle
+        # column for column
+        import duckdb
+
+        from __spark_entry__ import _gopher_quality_oracle
+        from dragnet_spark.operators.text_analysis import (
+            gopher_quality_flags)
+        docs = (spark.read.parquet(f'{sf_dir}/documents.parquet')
+                .select('doc_id', 'text'))
+        prose = ' '.join(['the cat and the dog sat with that bird'] * 8)
+        extra_rows = [
+            (9001, None), (9002, ''), (9003, '   '), (9004, 'one two'),
+            (9005, ' '.join(['### ... word'] * 30)), (9006, prose),
+            (9007, prose.upper() + ' \t\n 12345 ...')]
+        extra = spark.createDataFrame(extra_rows, 'doc_id long, text string')
+        got = sorted(tuple(r) for r in
+                     gopher_quality_flags(docs.unionByName(extra))
+                     .collect())
+        con = duckdb.connect()
+        con.execute("CREATE TABLE documents AS SELECT doc_id, text "
+                    "FROM read_parquet('%s/documents.parquet')" % sf_dir)
+        con.executemany('INSERT INTO documents VALUES (?, ?)', extra_rows)
+        want = sorted(tuple(r) for r in
+                      con.execute(_gopher_quality_oracle()).fetchall())
+        assert got == want
+        assert [r[1:] for r in got if r[0] == 9001] == [
+            (None, 0.0, None, None, None, 0)]
 
 
 class TestZipSafeArrowStages:

@@ -122,6 +122,72 @@ class TestDedup:
         docs = spark.createDataFrame(rows, 'doc_id long, text string')
         assert minhash_near_duplicates(docs, threshold=0.1).count() == 0
 
+    def test_shingle_table_edge_rows(self, spark):
+        # null and token-less texts shingle as [], 1-2 token texts as
+        # their lowered joined text, longer ones as distinct 3-token
+        # windows in first-occurrence order
+        from dragnet_spark.operators.dedup import shingle_df
+        texts = [None, '', '!!!', 'One', 'one TWO', 'a b c a b c']
+        docs = spark.createDataFrame(list(enumerate(texts)),
+                                     'doc_id long, text string')
+        got = {r.doc_id: r.shingles for r in shingle_df(docs).collect()}
+        assert got == {0: [], 1: [], 2: [], 3: ['one'], 4: ['one two'],
+                       5: ['a b c', 'b c a', 'c a b']}
+
+    @pytest.fixture(scope='class')
+    def planted_docs(self, spark):
+        # 12 base articles, each with a 1-token and a 3-token edit copy
+        import random
+        rng = random.Random(5)
+        vocab = ['w%d' % i for i in range(300)]
+        rows, did = [], 0
+        for _ in range(12):
+            base = [rng.choice(vocab) for _ in range(60)]
+            for n_edits in (0, 1, 3):
+                toks = list(base)
+                for _ in range(n_edits):
+                    toks[rng.randrange(len(toks))] = rng.choice(vocab)
+                rows.append((did, ' '.join(toks)))
+                did += 1
+        return spark.createDataFrame(rows, 'doc_id long, text string')
+
+    def test_simhash_pairs_equal_bruteforce_hamming(self, spark,
+                                                    planted_docs):
+        from dragnet_spark.operators.dedup import (simhash_near_duplicates,
+                                                   simhash_signatures)
+        sigs = {r.doc_id: r.simhash
+                for r in simhash_signatures(planted_docs).collect()}
+        ids = sorted(sigs)
+        want = {(a, b, bin((sigs[a] ^ sigs[b]) & (2 ** 64 - 1)).count('1'))
+                for i, a in enumerate(ids) for b in ids[i + 1:]}
+        want = {t for t in want if t[2] <= 3}
+        got = {(r.doc_a, r.doc_b, r.hamming)
+               for r in simhash_near_duplicates(planted_docs).collect()}
+        assert want and got == want
+
+    def test_minhash_pairs_equal_verified_candidates(self, spark,
+                                                     planted_docs):
+        import re
+        from dragnet_spark.operators.dedup import (minhash_candidates,
+                                                   minhash_near_duplicates)
+
+        def shingles(text):  # every planted doc has >= 3 tokens
+            toks = [t for t in re.split('[^a-zA-Z0-9]+', text.lower()) if t]
+            return {' '.join(toks[i:i + 3]) for i in range(len(toks) - 2)}
+
+        sh = {r.doc_id: shingles(r.text) for r in planted_docs.collect()}
+        threshold = 0.7
+        want = set()
+        for r in minhash_candidates(planted_docs).collect():
+            a, b = sh[r.doc_a], sh[r.doc_b]
+            jac = round(len(a & b) / max(len(a | b), 1), 6)
+            if jac >= threshold:
+                want.add((r.doc_a, r.doc_b, jac))
+        got = {(r.doc_a, r.doc_b, r.jaccard) for r in
+               minhash_near_duplicates(planted_docs,
+                                       threshold=threshold).collect()}
+        assert want and got == want
+
     def test_minhash_mega_bucket_capped(self, spark):
         # 600 identical boilerplate docs: candidates must be chained
         # (599 pairs), not the quadratic 179,700
