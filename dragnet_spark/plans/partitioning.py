@@ -122,11 +122,12 @@ def spread_small_scan(spark, df, path):
         # blind shuffle could move arbitrary bytes -- leave it alone
         return df
     # scale the target to the row count (known from the same footer
-    # probe): at ~600 rows/partition the per-task Arrow worker
-    # handshake amortizes, while tiny corpora stop paying cores-many
-    # handshakes for a few thousand rows (sf0.1 A/B: simhash 1.08 s at
-    # 32p -> 0.77 s at 8p, decontamination 1.17 -> 0.79; the 50 k-doc
-    # corpus caps at cores either way)
+    # probe): at ~600 rows/partition the fixed per-task Python worker
+    # set-up amortizes (its measured cause and cost:
+    # sources.synthesis._spread_docs), while tiny corpora stop paying
+    # cores-many set-ups for a few thousand rows (sf0.1 A/B: simhash
+    # 1.08 s at 32p -> 0.77 s at 8p, decontamination 1.17 -> 0.79; the
+    # 50 k-doc corpus caps at cores either way)
     target = max(2, min(par, -(-rows // 600)))
     if tasks >= target:
         return df

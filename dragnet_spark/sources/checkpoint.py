@@ -159,13 +159,16 @@ def run_with_checkpoints(extracted_df, base, run_id=None):
     return run_id
 
 
-def extract_resumable(spark, spans_df, base, model=None, num_partitions=32):
+def extract_resumable(spark, spans_df, base, model=None, num_partitions=None):
     """Resume-aware extraction driver: anti-join completed ranges,
-    range-repartition the remainder (manifest ranges must be disjoint),
-    extract, write + manifest."""
+    range-repartition the remainder (manifest ranges must be disjoint)
+    into ``num_partitions`` ranges (default one per core, as in
+    ``synthesis._spread_docs``), extract, write + manifest."""
     from ..operators.extract import extract
     from ..plans.partitioning import repartition_by_doc_range
 
+    if num_partitions is None:
+        num_partitions = spark.sparkContext.defaultParallelism
     todo = filter_resume(spark, spans_df, base)
     todo = repartition_by_doc_range(todo, num_partitions)
     return run_with_checkpoints(extract(todo, model=model), base)

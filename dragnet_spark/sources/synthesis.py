@@ -349,19 +349,33 @@ def edge_docs_dfs(spark):
 
 def _spread_docs(spark, sf_dir, num_partitions=None):
     """documents.parquet ``(doc_id, text)``, round-robin spread over
-    ``num_partitions`` (default 4 x defaultParallelism; 0 keeps the file
-    splits, for plan inspection).
+    ``num_partitions`` (default ``defaultParallelism``: one Python task
+    per core; 0 keeps the file splits, for plan inspection).
 
-    The source parquet is one small file = one input split, but the
-    downstream Arrow stages (synthesis, blockify, featurize) are
-    Python-heavy per row -- parallelism must come from an explicit
-    repartition of the *cheap* doc rows before the fat work, not from
-    file splits.  One tiny round-robin exchange of (doc_id, text) rows,
-    then everything stays narrow.  Catalyst prunes the scan to
+    The downstream Arrow stages (synthesis, blockify, featurize,
+    classify) are Python-heavy per row, so parallelism must come from
+    an explicit spread of the *cheap* doc rows before the fat work, not
+    from file splits: one tiny round-robin exchange of (doc_id, text)
+    rows, then everything stays narrow.  Catalyst prunes the scan to
     (doc_id, text) (ReadSchema).
+
+    One task per core, not more: each PySpark Python task pays a fixed
+    set-up before its UDF sees a row -- 130-190 ms on pyspark 4.1.2 /
+    Python 3.11 on a 4-core host, nearly all in
+    ``pyspark.worker_util.setup_spark_files``, whose
+    ``importlib.invalidate_caches()`` makes each of the worker's ~16
+    zipimporters re-read the directory of ``pyspark.zip``
+    (``scripts/python_task_cost.py`` re-measures it).  Every input is
+    spread, also one that already has a split per core: returning such
+    a scan untouched measured the same ``extract`` wall, and a layout
+    of unequal or cores+1 files would leave a straggler task.
+    ``spread_small_scan``'s rows-scaled target (~600 rows per task) is
+    not reused: it was sized for cheap gate stages, while one source
+    row here costs ~2.6 ms of kernel time at amplification 4, so even a
+    1,200-row input must get one task per core.
     """
     if num_partitions is None:
-        num_partitions = 4 * spark.sparkContext.defaultParallelism
+        num_partitions = spark.sparkContext.defaultParallelism
     docs = spark.read.parquet(f'{sf_dir}/documents.parquet').select(
         'doc_id', 'text')
     return docs.repartition(num_partitions) if num_partitions else docs

@@ -36,6 +36,11 @@ def main():
     import __spark_entry__ as entrymod
     from dragnet_spark.plans.session import get_spark
 
+    qs = entrymod.queries()
+    unknown = [n for n in ONLY or () if n not in qs]
+    if unknown:
+        print('unknown query names: %s' % ', '.join(unknown))
+        return 2
     spark = get_spark('oracle-check', cores=8,
                       extra_conf={'spark.sql.shuffle.partitions': '16'})
     con = duckdb.connect()
@@ -45,7 +50,6 @@ def main():
             con.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
     for name, fn in qs.items():

@@ -51,6 +51,18 @@ class TestCheckpointResume:
         assert m2.agg(F.sum('n_docs')).first()[0] == total
         assert run1 != run2
 
+    def test_default_one_range_per_core(self, spark, tmp_path,
+                                        small_corpus):
+        # each doc_id range is one Python extraction task: the default
+        # is one per core, and the manifest covers every doc once
+        from dragnet_spark.sources.checkpoint import (extract_resumable,
+                                                      read_manifest)
+        base = str(tmp_path / 'ckpt_default')
+        extract_resumable(spark, small_corpus, base)
+        m = read_manifest(spark, base)
+        assert m.count() == spark.sparkContext.defaultParallelism
+        assert m.agg(F.sum('n_docs')).first()[0] == small_corpus.count()
+
     def test_numeric_run_id_resumes(self, spark, tmp_path, small_corpus):
         # an all-digit run id (a caller's, or a uuid4 hex prefix that
         # happens to draw only digits) must read back as the same string:

@@ -53,3 +53,17 @@ def test_every_oracle_parses_and_plans_in_duckdb(entry):
         except Exception as e:
             bad[name] = str(e).splitlines()[0][:200]
     assert not bad, bad
+
+
+def test_check_oracles_rejects_unknown_subset_name():
+    # a stale or mistyped subset name must fail the run before any
+    # Spark session starts, not be skipped into "0 failures"
+    import subprocess
+    script = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), 'scripts', 'check_oracles.py')
+    proc = subprocess.run(
+        [sys.executable, script, SF_DIR, 'no_such_query,dedup_exact'],
+        capture_output=True, text=True, timeout=120)
+    assert proc.returncode != 0, proc.stdout
+    assert 'no_such_query' in proc.stdout, proc.stdout
+    assert 'failures' not in proc.stdout, proc.stdout
