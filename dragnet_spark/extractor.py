@@ -36,8 +36,6 @@ from .operators.extract import extract as _extract
 from .operators.labeling import gold_blocks
 from .operators.training import _label_col, train_model
 
-_PRED_BLOCKS_NOTE = 'as_blocks returns the exploded per-block view'
-
 
 class Extractor:
     """fit / predict / extract over span-document DataFrames."""

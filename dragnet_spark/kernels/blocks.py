@@ -36,7 +36,6 @@ from __future__ import annotations
 import codecs
 import math
 import re
-import sys
 
 from .htmlparse import BlockifyError, Node, parse_html
 

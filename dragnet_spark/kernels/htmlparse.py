@@ -133,7 +133,8 @@ class _TreeBuilder(HTMLParser):
     def _cur(self):
         return self.stack[-1]
 
-    # -- HTMLParser callbacks --------------------------------------------
+    # -- HTMLParser callbacks (comments, doctypes and PIs keep its no-op
+    # handlers: lxml's remove_comments=True / remove_pis=True) ----------
     def handle_starttag(self, tag, attrs):
         self.saw_markup = True
         if tag == 'html':
@@ -236,18 +237,6 @@ class _TreeBuilder(HTMLParser):
         else:
             cur.text = (cur.text or '') + data
 
-    def handle_comment(self, data):  # remove_comments=True
-        pass
-
-    def handle_decl(self, decl):  # doctype
-        pass
-
-    def handle_pi(self, data):  # remove_pis=True
-        pass
-
-    def unknown_decl(self, data):
-        pass
-
 
 def _attr_dict(attrs):
     d = {}
@@ -274,23 +263,15 @@ _CDATA_CLOSE = {
     'script': _re.compile(r'</\s*script', _re.IGNORECASE),
     'style': _re.compile(r'</\s*style', _re.IGNORECASE),
 }
-_SIMPLE_TAG = _re.compile(r'<(/?)([a-zA-Z][a-zA-Z0-9]*)>')
-_SIMPLE_END = _re.compile(r'</([a-zA-Z][a-zA-Z0-9]*)\s*>')
-# fast path for fully-quoted well-formed start tags: plain tag name,
-# attrs either valueless or quoted with no quote/&/<> inside (values
-# needing unescaping or tolerant recovery fall through to the full
-# machinery).  On everything it matches, the event stream is identical
-# to _parse_starttag -- enforced by the fast-vs-stdlib fuzz test.
-_FAST_TAG = _re.compile(
-    r'<([a-zA-Z][a-zA-Z0-9]*)'
-    r'((?:\s+[a-zA-Z_][-a-zA-Z0-9_:.]*'
-    r'(?:\s*=\s*(?:"[^"<>&]*"|\'[^\'<>&]*\'))?)*)'
-    r'\s*(/?)>')
 _FAST_ATTR = _re.compile(
     r'\s+([a-zA-Z_][-a-zA-Z0-9_:.]*)'
     r'(?:\s*=\s*(?:"([^"<>&]*)"|\'([^\'<>&]*)\'))?')
-# _SIMPLE_END | _FAST_TAG in one alternation: the scanner main loop does
-# ONE match attempt per tag instead of startswith + two regex calls
+# fast path, ONE match attempt per tag: a plain end tag, or a
+# fully-quoted well-formed start tag -- plain tag name, attrs either
+# valueless or quoted with no quote/&/<> inside (values needing
+# unescaping or tolerant recovery fall through to the full machinery).
+# On everything it matches, the event stream is identical to
+# _parse_starttag -- enforced by the fast-vs-stdlib fuzz test.
 _FAST_EVENT = _re.compile(
     r'</([a-zA-Z][a-zA-Z0-9]*)\s*>'
     r'|<([a-zA-Z][a-zA-Z0-9]*)'

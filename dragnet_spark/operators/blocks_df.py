@@ -38,7 +38,7 @@ BLOCKS_PA_SCHEMA = pa.schema([
 
 
 def doc_to_block_rows(doc_id, spans, model, features=DEFAULT_FEATURES):
-    _, _, all_blocks, status = blockify_spans(spans)
+    _, _, all_blocks, status = blockify_spans(spans, features)
     mat = None
     preds = None
     if status == STATUS_OK and all_blocks:

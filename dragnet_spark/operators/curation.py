@@ -9,8 +9,8 @@ LLM-training-data flow over an extracted corpus:
 
 Every stage is the library operator (individually oracle- or
 golden-checked); this module only wires them, so the composition
-inherits each stage's scale shape: both gates are one narrow Arrow
-stage (``gopher_gates``), dedup is the chain-capped LSH + distributed
+inherits each stage's scale shape: both gates and the MinHash shingles
+are one narrow Arrow stage, dedup is the chain-capped LSH + distributed
 connected components path, and nothing touches the driver.
 
 ``__spark_entry__.training_corpus_funnel`` is the driver-checked
@@ -21,9 +21,10 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from .dedup import duplicate_cluster_assignments
+from .dedup import cluster_assignments_from_pairs, shingle_near_duplicates
 from .text_analysis import (GOPHER_MAX_DUP10GRAM_FRAC,
-                            GOPHER_MAX_TOP2GRAM_FRAC, gopher_gates)
+                            GOPHER_MAX_TOP2GRAM_FRAC, _counts_stage,
+                            _gate_cols, gopher_gates)
 
 
 def gate_funnel(docs, text_col='text', id_col='doc_id',
@@ -72,26 +73,29 @@ def curate_corpus(docs, text_col='text', id_col='doc_id',
     synthetic corpus needs a scaled ``max_dup10``; see the funnel
     query's note).
 
-    The gates run once: their thin verdicts ``(doc_id,
-    passes_quality, passes_repetition)`` are materialized by one eager
-    ``localCheckpoint`` (never the text), and every consumer reads
-    that -- the survivors (``docs`` left-semi-joined to the passing
-    ids) that feed the MinHash pair plan and the components node set,
-    ``verdicts`` and ``curated`` -- so none of them re-runs the gates'
-    Arrow stage.
+    The documents cross into Python once: ONE counts stage yields both
+    gates' counts and the MinHash shingles of the tokens the repetition
+    gate already lowers, and one eager ``localCheckpoint`` holds
+    ``(doc_id, passes_quality, passes_repetition, shingles)`` (shingles
+    only on rows passing both gates; never the text).  The pair plan
+    (``dedup.shingle_near_duplicates``), the components node set and
+    thin projections for ``verdicts`` and ``curated`` all read it:
+    storing the shingles is cheaper than re-reading and re-tokenizing
+    the survivors for each of the pair plan's three shingle readers.
     """
     base = docs.select(F.col(id_col).alias('doc_id'),
                        F.col(text_col).alias('text'))
-    gates = (gopher_gates(base, max_top2, max_dup10)
-             .select('doc_id', 'passes_quality', 'passes_repetition')
+    both = (F.col('passes_quality') == 1) & (F.col('passes_repetition') == 1)
+    gates = (_counts_stage(base, 'text', words=True, rep=True, shingles=True)
+             .select('doc_id', '_shingles', *_gate_cols(max_top2, max_dup10))
+             .select('doc_id', 'passes_quality', 'passes_repetition',
+                     F.when(both, F.col('_shingles')).alias('shingles'))
              .localCheckpoint(eager=True))
-    passing = (gates.where((F.col('passes_quality') == 1)
-                           & (F.col('passes_repetition') == 1))
-               .select('doc_id'))
-    survivors = base.join(passing, 'doc_id', 'left_semi')
-    assigned = duplicate_cluster_assignments(survivors,
-                                             threshold=dedup_threshold)
-    verdicts = (gates.join(assigned, 'doc_id', 'left')
+    passing = (gates.where(F.col('shingles').isNotNull())
+               .select('doc_id', 'shingles'))
+    assigned = cluster_assignments_from_pairs(
+        passing, shingle_near_duplicates(passing, dedup_threshold))
+    verdicts = (gates.drop('shingles').join(assigned, 'doc_id', 'left')
                 .withColumn('kept',
                             (F.coalesce('is_canonical', F.lit(0)) == 1)
                             .cast('long')))

@@ -245,18 +245,18 @@ def minhash_dedup_incremental(new_docs, store_path, text_col='text',
     Returns ``(fresh_docs, n_dropped_within, n_dropped_vs_store)``.
     """
     spark = new_docs.sparkSession
-    assign = duplicate_cluster_assignments(new_docs, text_col=text_col,
-                                           threshold=threshold)
-    batch = new_docs.join(
-        assign.where(F.col('is_canonical') == 1).select('doc_id'),
-        'doc_id', 'left_semi')
-    # r06 (ADVICE r05): persist the within-batch survivors and their
-    # signatures -- the LSH cluster-assignment fixpoint above is the
-    # dominant cost and was re-executed by every count and the store
-    # append; both persists are dropped before returning.
-    batch.persist()
-    sigs = minhash_signatures(shingle_df(batch, text_col), k)
-    sigs.persist()
+    # ONE shingle table feeds the within-batch pair plan and the stored
+    # signatures.  r06 (ADVICE r05): it, the within-batch survivors and
+    # their signatures are persisted -- the LSH cluster-assignment
+    # fixpoint is the dominant cost and was re-executed by every count
+    # and the store append; all are dropped before returning.
+    shingles = shingle_df(new_docs, text_col).persist()
+    assign = cluster_assignments_from_pairs(
+        new_docs, shingle_near_duplicates(shingles, threshold))
+    canon = assign.where(F.col('is_canonical') == 1).select('doc_id')
+    batch = new_docs.join(canon, 'doc_id', 'left_semi').persist()
+    sigs = minhash_signatures(
+        shingles.join(canon, 'doc_id', 'left_semi'), k).persist()
     try:
         n_in = new_docs.count()
         n_within = batch.count()
@@ -287,8 +287,8 @@ def minhash_dedup_incremental(new_docs, store_path, text_col='text',
         (sigs.join(fresh_ids, 'doc_id', 'left_semi')
          .write.mode('append').parquet(store_path))
     finally:
-        batch.unpersist()
-        sigs.unpersist()
+        for frame in (shingles, batch, sigs):
+            frame.unpersist()
     return fresh, n_in - n_within, n_within - n_fresh
 
 
@@ -312,9 +312,17 @@ def minhash_candidates(df, text_col='text', k=MINHASH_K, bands=LSH_BANDS,
 
 def minhash_near_duplicates(df, text_col='text', threshold=0.8,
                             k=MINHASH_K, bands=LSH_BANDS):
-    """LSH candidates verified with exact *shingle*-set Jaccard (the same
-    similarity the minhash signatures estimate -- order-sensitive, the
-    standard near-dup definition).
+    """LSH candidates verified with exact *shingle*-set Jaccard (what the
+    signatures estimate -- order-sensitive, the standard near-dup
+    definition): :func:`shingle_near_duplicates` of :func:`shingle_df`."""
+    return shingle_near_duplicates(shingle_df(df, text_col), threshold,
+                                   k, bands)
+
+
+def shingle_near_duplicates(shingles, threshold=0.8, k=MINHASH_K,
+                            bands=LSH_BANDS):
+    """The MinHash pair plan of a ``(doc_id, shingles)`` table: band keys
+    of its signatures, verified with the table as the side table.
 
     The verify join touches only candidate pairs -- at 100 TB this is the
     difference between feasible and quadratic.  With the default 8 bands
@@ -324,7 +332,6 @@ def minhash_near_duplicates(df, text_col='text', threshold=0.8,
     bands/rows split is the knob that moves the LSH S-curve to the
     target threshold (classic MMDS ch.3 tuning).
     """
-    shingles = shingle_df(df, text_col)
     keys = band_key_rows(minhash_signatures(shingles, k), k, bands)
 
     def jaccard(a, b):

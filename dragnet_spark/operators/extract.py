@@ -91,12 +91,15 @@ def split_runs(spans):
     return items
 
 
-def blockify_spans(spans, do_css=False):
+def blockify_spans(spans, features=DEFAULT_FEATURES):
     """spans -> (items, per-run block lists, all_blocks, status).
 
     ``items`` is the run/media structure from :func:`split_runs`; text
     items are annotated with their index into the per-run block lists.
+    Blocks carry their CSS class/id tokens exactly when ``features``
+    asks for ``'css'`` (the only consumer of ``Block.css``).
     """
+    do_css = 'css' in features
     items = split_runs(spans)
     run_blocks = []
     all_blocks = []
@@ -157,7 +160,7 @@ def process_document(spans, model: LogisticModel,
     emits anchor text verbatim (divergence documented; default False
     keeps reference parity).
     """
-    items, run_blocks, all_blocks, status = blockify_spans(spans)
+    items, run_blocks, all_blocks, status = blockify_spans(spans, features)
 
     preds = None
     if status == STATUS_OK:

@@ -94,7 +94,7 @@ def _frac_and_tokens(blocks_tokens, all_tokens, block_ids, gs_text):
 def label_document(doc_id, spans, content_text, comments_text,
                    features=DEFAULT_FEATURES):
     """One (doc, gold) pair -> gold_blocks rows."""
-    _, _, all_blocks, status = blockify_spans(spans)
+    _, _, all_blocks, status = blockify_spans(spans, features)
     if status != STATUS_OK or not all_blocks:
         return []
     blocks_tokens = [simple_tokenizer(b.text) for b in all_blocks]

@@ -38,7 +38,6 @@ import pyspark.sql.functions as F
 TOKEN_PATTERN = '[^a-zA-Z0-9]+'
 _ALNUM_SPACE = ('abcdefghijklmnopqrstuvwxyz'
                 'ABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789 ')
-CJK_PATTERN = '[\\x{4e00}-\\x{9fff}]'
 
 STOPWORDS = {
     'en': ['the', 'and', 'of', 'to', 'in', 'is', 'was', 'that', 'for', 'with'],
@@ -251,6 +250,13 @@ def gopher_repetition_flags_rowwise(df, text_col='text',
                     *_repetition_exprs(max_top2, max_dup10)))
 
 
+def _gate_cols(max_top2, max_dup10):
+    """:func:`gopher_gates`' columns over a ``words`` + ``rep`` stage."""
+    stats, passes = _quality_exprs()
+    return [*stats, passes.alias('passes_quality'),
+            *_repetition_exprs(max_top2, max_dup10)]
+
+
 def gopher_gates(df, max_top2=GOPHER_MAX_TOP2GRAM_FRAC,
                  max_dup10=GOPHER_MAX_DUP10GRAM_FRAC, keep_cols=()):
     """Both Gopher gates from ONE counts stage over ``(doc_id, text)``:
@@ -258,12 +264,9 @@ def gopher_gates(df, max_top2=GOPHER_MAX_TOP2GRAM_FRAC,
     ``passes_quality``), then the columns of
     :func:`gopher_repetition_flags_rowwise` -- one row per input row,
     no join, no shuffle."""
-    stats, passes = _quality_exprs()
     return (_counts_stage(df, 'text', words=True, rep=True,
                           keep_cols=keep_cols)
-            .select('doc_id', *keep_cols, *stats,
-                    passes.alias('passes_quality'),
-                    *_repetition_exprs(max_top2, max_dup10)))
+            .select('doc_id', *keep_cols, *_gate_cols(max_top2, max_dup10)))
 
 
 def _language_exprs():

@@ -43,20 +43,18 @@ def salt_by_host(df, num_partitions, salts=DEFAULT_SALTS,
 
 
 def probe_parquet_layout(path):
-    """(achievable scan tasks, total rows) of a local parquet input, or
-    ``None`` when it cannot be probed (non-local path, unreadable
-    footer, a directory with no top-level part files or with any
-    subdirectory, e.g. a hive ``key=value`` layout whose files the
-    listing here does not see) -- callers must then leave the scan
-    alone.
+    """(row groups, total rows) of a local parquet input, or ``None``
+    when it cannot be probed (non-local path, unreadable footer, a
+    directory with no top-level part files or with any subdirectory,
+    e.g. a hive ``key=value`` layout whose files the listing here does
+    not see) -- callers must then leave the scan alone.
 
-    Achievable scan tasks = total row-group count across part files:
-    the ROW GROUP is the atomic split unit (a byte-range split never
-    divides one), so a file with a single row group is read by a single
-    task no matter how small ``maxPartitionBytes`` is.  With >= 64 part
-    files the per-footer probe is skipped (already at least one split
-    per core on any plausible local session).  Footer-only reads; no
-    data pages are touched.
+    The ROW GROUP is the atomic split unit (a byte-range split never
+    divides one), so the row-group count BOUNDS the scan tasks that
+    read rows; Spark packs a small file's row groups into one split, so
+    :func:`spread_small_scan` also takes the planned split count.  With
+    >= 64 part files the footers are skipped and the file count stands
+    in.  Footer-only reads; no data pages are touched.
     """
     import os
 
@@ -96,7 +94,8 @@ def spread_small_scan(spark, df, path):
     single-projection corpus queries 6-10x slower on a one-row-group
     50 k-doc file than on the same rows split across ten files.
 
-    When the achievable scan parallelism (row-group count) is below the
+    When the achievable scan parallelism (the smaller of the row-group
+    and the planned split counts; planning runs no job) is below the
     session's core count, spread the rows with ONE round-robin shuffle;
     its cost is the table's bytes, which in this regime are by
     definition at most a few row groups.  Inputs that already expose
@@ -114,7 +113,8 @@ def spread_small_scan(spark, df, path):
     probe = probe_parquet_layout(path)
     if probe is None:
         return df
-    tasks, rows = probe
+    groups, rows = probe
+    tasks = min(groups, df.rdd.getNumPartitions())
     if tasks >= par:
         return df
     if rows is None:

@@ -33,8 +33,6 @@ import os
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
-ICEBERG_CATALOG_IMPL = 'org.apache.iceberg.spark.SparkCatalog'
-
 
 def catalog_available(spark, catalog='lake'):
     """True iff an Iceberg catalog is configured on this session."""

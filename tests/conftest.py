@@ -20,3 +20,22 @@ def spark():
 @pytest.fixture(scope='session')
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def counts_stage_calls(monkeypatch):
+    """The keyword arguments of every ``text_analysis._counts_stage``
+    call made while the test runs, whichever module imported it."""
+    from dragnet_spark.operators import text_analysis
+    orig = text_analysis._counts_stage
+    calls = []
+
+    def spy(*args, **kwargs):
+        calls.append(kwargs)
+        return orig(*args, **kwargs)
+
+    for mod in list(sys.modules.values()):
+        if (getattr(mod, '__name__', '').startswith('dragnet_spark')
+                and getattr(mod, '_counts_stage', None) is orig):
+            monkeypatch.setattr(mod, '_counts_stage', spy)
+    return calls

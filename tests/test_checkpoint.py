@@ -270,6 +270,29 @@ class TestPartitioning:
         spark.range(200).coalesce(1).write.parquet(flat)
         assert probe_parquet_layout(flat) == (1, 200)
 
+    def test_spread_guard_counts_planned_splits(self, spark, tmp_path):
+        # 8 row groups, but Spark packs a file this small into ONE
+        # split: the guard must see one scan task and spread, and find
+        # that out without running a job
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from dragnet_spark.plans.partitioning import (probe_parquet_layout,
+                                                      spread_small_scan)
+        path = str(tmp_path / 'groups.parquet')
+        pq.write_table(pa.table({'id': list(range(500))}), path,
+                       row_group_size=64)
+        assert probe_parquet_layout(path) == (8, 500)
+        df = spark.read.parquet(path)
+        assert df.rdd.getNumPartitions() == 1
+        tracker = spark.sparkContext.statusTracker()
+        jobs_before = set(tracker.getJobIdsForGroup(None))
+        spread = spread_small_scan(spark, df, path)
+        assert set(tracker.getJobIdsForGroup(None)) == jobs_before
+        assert spread is not df
+        assert spread.rdd.getNumPartitions() == 2
+        assert sorted(r.id for r in spread.collect()) == list(range(500))
+
 
 @pytest.mark.spark
 class TestLegacyLayoutMigration:

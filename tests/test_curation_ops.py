@@ -535,6 +535,19 @@ class TestIncrementalDedup:
                  spark.read.parquet(store).select('doc_id').collect()}
                 == {1, 3, 11})
 
+    def test_minhash_incremental_shingles_the_batch_once(
+            self, spark, tmp_path, counts_stage_calls):
+        # one shingle table feeds the within-batch pair plan and the
+        # stored signatures of the survivors
+        from dragnet_spark.operators.dedup import minhash_dedup_incremental
+        text = ' '.join('word%d' % i for i in range(50))
+        b = spark.createDataFrame([(1, text), (2, text + ' tail')],
+                                  'doc_id long, text string')
+        fresh, drop_in, _ = minhash_dedup_incremental(
+            b, str(tmp_path / 'mhstore1'), threshold=0.8)
+        assert [r.doc_id for r in fresh.collect()] == [1] and drop_in == 1
+        assert [c.get('shingles') for c in counts_stage_calls] == [True]
+
     def test_replayed_batch_is_idempotent(self, spark, tmp_path):
         from dragnet_spark.operators.dedup import exact_dedup_incremental
         store = str(tmp_path / 'sigstore2')

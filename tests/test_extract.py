@@ -145,6 +145,33 @@ class TestSynthesis:
             assert any(line in t for t in block_texts), (line, block_texts)
 
 
+def test_css_features_follow_the_requested_features():
+    """Asking for ``'css'`` blockifies with CSS tokens on every span
+    path: the block rows' feature vectors equal the kernel's
+    ``blockify(do_css=True)`` ones, and are not all zero."""
+    from dragnet_spark.kernels.blocks import blockify
+    from dragnet_spark.kernels.features import DEFAULT_FEATURES, compute
+    from dragnet_spark.operators.blocks_df import doc_to_block_rows
+    body = '<p>%s</p>' % ' '.join(['Some words of real text here.'] * 3)
+    html = ('<html><body>'
+            '<div class="menu"><p>Home</p><p>About</p><p>Contact</p></div>'
+            '<div class="content">%s</div>'
+            '<div id="comment"><p class="comment">Nice post!</p>'
+            '<p class="comment">Thanks for writing.</p></div>'
+            '</body></html>' % (body * 4))
+    spans = [{'kind': 'text', 'text': html, 'media_ref': '', 'offset': 0}]
+    feats = DEFAULT_FEATURES + ('css',)
+    model = LogisticModel([0.0] * 45, 0.0, features=feats)
+    rows = doc_to_block_rows('d', spans, model, features=feats)
+    want = compute(blockify(html, do_css=True), feats)
+    assert [r['features'] for r in rows] == [list(v) for v in want]
+    assert want[:, 9:].sum() > 0
+    default_rows = doc_to_block_rows('d', spans, density_model())
+    default_want = compute(blockify(html), DEFAULT_FEATURES)
+    assert ([r['features'] for r in default_rows]
+            == [list(v) for v in default_want])
+
+
 @pytest.mark.spark
 class TestExtractSpark:
     def test_extract_e2e(self, spark, sf_dir):

@@ -860,3 +860,73 @@ class TestCurateCorpus:
             plan = out._jdf.queryExecution().executedPlan().toString()
             assert 'Python' not in plan and 'Arrow' not in plan, plan
         assert [r.doc_id for r in curated.collect()] == [1]
+
+    def test_one_counts_stage(self, spark, counts_stage_calls):
+        from dragnet_spark.operators.curation import curate_corpus
+        curated, verdicts = curate_corpus(
+            spark.createDataFrame(planted_corpus(),
+                                  'doc_id long, text string'),
+            dedup_threshold=0.7)
+        curated.collect()
+        verdicts.collect()
+        assert len(counts_stage_calls) == 1
+
+    def test_equals_gates_then_cluster_assignments(self, spark):
+        # the composition the one-stage form replaced: the gates, the
+        # survivors' texts re-read, then MinHash clusters of those texts
+        from dragnet_spark.operators.curation import curate_corpus
+        from dragnet_spark.operators.dedup import (
+            duplicate_cluster_assignments)
+        from dragnet_spark.operators.text_analysis import gopher_gates
+        df = spark.createDataFrame(planted_corpus(),
+                                   'doc_id long, text string')
+        curated, verdicts = curate_corpus(df, dedup_threshold=0.7)
+
+        gates = (gopher_gates(df)
+                 .select('doc_id', 'passes_quality', 'passes_repetition'))
+        passing = gates.where((F.col('passes_quality') == 1)
+                              & (F.col('passes_repetition') == 1))
+        survivors = df.join(passing, 'doc_id', 'left_semi')
+        assigned = duplicate_cluster_assignments(survivors, threshold=0.7)
+        want_v = (gates.join(assigned, 'doc_id', 'left')
+                  .withColumn('kept',
+                              (F.coalesce('is_canonical', F.lit(0)) == 1)
+                              .cast('long')))
+        want_c = df.join(want_v.where(F.col('kept') == 1).select('doc_id'),
+                         'doc_id', 'left_semi')
+        assert verdicts.columns == want_v.columns
+        assert sorted(verdicts.collect()) == sorted(want_v.collect())
+        assert sorted(curated.collect()) == sorted(want_c.collect())
+        v = verdicts.collect()
+        # the planted families collapse to their minimum id; the null
+        # row fails quality, and every row of a doc_id is audited
+        assert {r.doc_id for r in v if r.kept == 1} == {1, 4, 7, 8, 30}
+        assert [r.passes_quality for r in v if r.doc_id == 20] == [0]
+        assert len([r for r in v if r.doc_id == 30]) == 2
+
+
+def planted_doc(base, swap=None):
+    """64 distinct words incl. stopwords (passes both gates); ``swap``
+    replaces one token, a near copy above shingle Jaccard 0.7."""
+    toks = ['token%03d' % (base * 100 + i) for i in range(54)]
+    if swap is not None:
+        toks[swap] = 'swapped%d' % swap
+    return ('the story of word%d and that which have with be '
+            % base) + ' '.join(toks)
+
+
+def planted_corpus():
+    """Near-dup families {1, 2, 3, 31 twice} and {4, 5, 6}, singletons,
+    gate failures, a null text and a doc_id (30) ingested twice."""
+    return [(1, planted_doc(1)), (2, planted_doc(1, swap=10)),
+            (3, planted_doc(1)), (31, planted_doc(1, swap=40)),
+            (31, planted_doc(1, swap=40)),
+            (4, planted_doc(2)), (5, planted_doc(2, swap=5)),
+            (6, planted_doc(2, swap=30)),
+            (7, planted_doc(3)), (8, planted_doc(4)),
+            (30, planted_doc(5)), (30, planted_doc(5)),
+            (10, 'too short to pass the gate'),
+            (11, 'buy now ' * 200),
+            (12, planted_doc(1) + ' buy now' * 100),
+            (20, None)]
+
