@@ -146,7 +146,9 @@ def propagate_min_labels(nodes, edges, id_col='doc_id',
 
     ``nodes``: the node ids (``id_col``; a repeated id gets one label
     row); ``edges``: undirected pairs (``src_col``, ``dst_col``) --
-    each stored once, symmetrized here.  Returns ``(labels_df,
+    each stored once, symmetrized here.  A null id and an edge with a
+    null endpoint are dropped: a null is no node, and left in, its
+    label row would count as moved in every round.  Returns ``(labels_df,
     converged)`` where ``labels_df`` is ``(id_col, label)`` with
     ``label`` = the component's minimum node id, and ``converged`` is
     False iff ``max_rounds`` elapsed with labels still moving (only
@@ -160,10 +162,13 @@ def propagate_min_labels(nodes, edges, id_col='doc_id',
     # one pass emits both directions of each edge: a union of the edges
     # with their swap would run the edges' upstream (an LSH candidate
     # pipeline, typically) twice.  Materialized once: the seeding pass
-    # reads it and every round re-joins it.
+    # reads it and every round re-joins it.  Null endpoints are dropped
+    # above the inline, so no filter is pushed into the edges' plan.
+    src, dst = F.col(src_col), F.col(dst_col)
     sym = (edges.select(F.inline(F.array(
-        F.struct(F.col(src_col).alias('_src'), F.col(dst_col).alias('_dst')),
-        F.struct(F.col(dst_col).alias('_src'), F.col(src_col).alias('_dst')))))
+        F.struct(src.alias('_src'), dst.alias('_dst')),
+        F.struct(dst.alias('_src'), src.alias('_dst')))))
+        .where(F.col('_src').isNotNull() & F.col('_dst').isNotNull())
         .localCheckpoint(eager=True))
 
     checkpoints = [sym]
@@ -172,8 +177,9 @@ def propagate_min_labels(nodes, edges, id_col='doc_id',
         id_type = sym.schema['_src'].dataType
         seeds = sym.mapInArrow(partition_min_labels, StructType(
             [StructField('_id', id_type), StructField('label', id_type)]))
-        start = (nodes.select(F.col(id_col).alias('_id'),
-                              F.col(id_col).alias('label'))
+        start = (nodes.where(F.col(id_col).isNotNull())
+                 .select(F.col(id_col).alias('_id'),
+                         F.col(id_col).alias('label'))
                  .unionByName(seeds)
                  .groupBy('_id').agg(F.min('label').alias('label')))
         observed = start.observe('seeded', F.count_if(

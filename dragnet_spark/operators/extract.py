@@ -14,6 +14,19 @@ features are computed over the concatenated per-document block list, and
 output spans interleave kept text blocks with passthrough media spans in
 original order.  Documents with no media have exactly one run and are
 bit-identical to reference semantics.
+
+Python stages come in three shapes across the library, each written once:
+
+* per row: :func:`map_doc_rows` -- a ``per_row`` function plus one Arrow
+  schema; extraction, corpus synthesis, the text counts stage, CleanEval
+  gold, edit distance and media features all run through it;
+* per batch, numpy: ``similarity._map_batches`` (vector math over a
+  whole batch);
+* per partition: ``components.partition_min_labels`` (a graph solved
+  over all of a partition's edges).
+
+The one stage with its own row loop is the passage explode
+(``dedup.passage_sig_rows``), kept on measurement (its docstring).
 """
 
 from __future__ import annotations

@@ -14,8 +14,12 @@ replicate them exactly (Java vs RE2 ``\\W`` unicode semantics differ).
 
 from __future__ import annotations
 
+import pyarrow as pa
 import pyspark.sql.functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 
+from ..kernels.metrics import dameraulevenshtein
+from .extract import map_doc_rows
 from .text_analysis import tokens_col
 
 
@@ -95,16 +99,13 @@ def evaluate_extracted_tokens(extracted_df, gold_df, max_tokens=2000):
     """E3 (model_training.py:51-74): per-doc token-set Jaccard (JVM-side)
     + Damerau-Levenshtein edit distance over token sequences (report-only
     metric; O(n*m) per doc, so sequences are capped and the kernel runs
-    in one Arrow batch stage)."""
-    import pandas as pd
-    import pyspark.sql.types as T
+    in one Arrow stage).  A null ``content_text`` scores as no tokens."""
+    def text(df, name):
+        return df.select('doc_id', F.coalesce('content_text', F.lit(''))
+                         .alias(name))
 
-    from ..kernels.metrics import dameraulevenshtein
-
-    joined = extracted_df.select('doc_id', 'content_text').join(
-        gold_df.select('doc_id',
-                       F.col('content_text').alias('content_text_gold')),
-        'doc_id')
+    joined = text(extracted_df, 'content_text').join(
+        text(gold_df, 'content_text_gold'), 'doc_id')
     p = F.array_distinct(tokens_col(F.col('content_text')))
     a = F.array_distinct(tokens_col(F.col('content_text_gold')))
     inter = F.size(F.array_intersect(p, a)).cast('double')
@@ -115,24 +116,17 @@ def evaluate_extracted_tokens(extracted_df, gold_df, max_tokens=2000):
         F.slice(tokens_col(F.col('content_text')), 1, max_tokens).alias('_p'),
         F.slice(tokens_col(F.col('content_text_gold')), 1, max_tokens)
         .alias('_a'))
-
-    schema = T.StructType([
-        T.StructField('doc_id', extracted_df.schema['doc_id'].dataType),
-        T.StructField('jaccard', T.DoubleType()),
-        T.StructField('edit_distance', T.LongType()),
+    schema = pa.schema([
+        ('doc_id', to_arrow_type(extracted_df.schema['doc_id'].dataType)),
+        ('jaccard', pa.float64()),
+        ('edit_distance', pa.int64()),
     ])
 
-    def batches(pdfs):
-        for pdf in pdfs:
-            yield pd.DataFrame({
-                'doc_id': pdf['doc_id'],
-                'jaccard': pdf['jaccard'],
-                'edit_distance': [
-                    dameraulevenshtein(list(pp), list(aa))
-                    for pp, aa in zip(pdf['_p'], pdf['_a'])],
-            })
+    def per_row(doc_id, jaccard, pred, gold):
+        return ({'doc_id': doc_id, 'jaccard': jaccard,
+                 'edit_distance': dameraulevenshtein(pred, gold)},)
 
-    return with_jac.mapInPandas(batches, schema)
+    return map_doc_rows(with_jac, per_row, schema)
 
 
 def token_f1(extracted_df, gold_df):

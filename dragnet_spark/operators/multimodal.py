@@ -1,8 +1,9 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Images/audio/video ride the pipeline as ``binary`` columns with a typed
-metadata struct; decode / feature-extract run as vectorized Arrow stages
-(``mapInPandas``).  The actual codecs are NOT in this container, so the
+metadata struct (:func:`media_table` builds the shape); decode and
+feature extraction run per payload in one Arrow stage
+(``extract.map_doc_rows``).  No codec ships with the package, so the
 decode step is STUBBED (:func:`decode_media` raises NotImplementedError;
 :func:`fake_decode` is the deterministic stand-in used by tests) -- the
 Spark-side plumbing (schema, batch shape, partitioning, UDF signatures)
@@ -12,21 +13,10 @@ is real and tested, and a real codec drops into :data:`_DECODERS`.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-
+import pyarrow as pa
 import pyspark.sql.functions as F
-import pyspark.sql.types as T
 
-MEDIA_SCHEMA = T.StructType([
-    T.StructField('media_ref', T.StringType()),
-    T.StructField('doc_id', T.StringType()),
-    T.StructField('payload', T.BinaryType()),
-    T.StructField('meta', T.StructType([
-        T.StructField('kind', T.StringType()),
-        T.StructField('n_bytes', T.LongType()),
-        T.StructField('mime', T.StringType()),
-    ])),
-])
+from .extract import map_doc_rows
 
 _DECODERS = {}  # kind -> callable(bytes) -> np.ndarray; none shipped here
 
@@ -69,22 +59,17 @@ def media_table(docs_df, text_col='text'):
 
 
 def extract_media_features(media_df, n_features=16):
-    """Vectorized feature extraction over binary payloads (one Arrow
-    stage; swap fake_decode for a real codec via _DECODERS)."""
-    schema = T.StructType([
-        T.StructField('media_ref', T.StringType()),
-        T.StructField('features', T.ArrayType(T.DoubleType())),
-    ])
+    """Feature extraction over binary payloads (one Arrow stage; swap
+    fake_decode for a real codec via _DECODERS)."""
+    schema = pa.schema([('media_ref', pa.string()),
+                        ('features', pa.list_(pa.float64()))])
 
-    def batches(pdfs):
-        for pdf in pdfs:
-            feats = [fake_decode(p, n_features).tolist()
-                     for p in pdf['payload']]
-            yield pd.DataFrame({'media_ref': pdf['media_ref'],
-                                'features': feats})
+    def per_row(media_ref, payload):
+        return ({'media_ref': media_ref,
+                 'features': fake_decode(payload, n_features).tolist()},)
 
-    return media_df.select('media_ref', 'payload').mapInPandas(
-        batches, schema)
+    return map_doc_rows(media_df.select('media_ref', 'payload'), per_row,
+                        schema)
 
 
 def media_stats(media_df):

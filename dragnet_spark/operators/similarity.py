@@ -247,7 +247,7 @@ def _hyperplanes(dim, n_planes, seed=42):
 
 def lsh_band_signatures(df, vec_col='embedding', id_col='vec_id',
                         bands=LSH_BANDS, bits=LSH_BITS_PER_BAND, seed=42,
-                        dim=None, probes=0):
+                        probes=0):
     """(vec_id, band, bucket) rows: one bucket id per band per vector,
     plus ``probes`` multi-probe buckets per band.
 
@@ -264,17 +264,23 @@ def lsh_band_signatures(df, vec_col='embedding', id_col='vec_id',
     *random* pairs down by 2^8-2^16 -- without the recall collapse that
     plain banding suffers; row volume grows only (1 + probes)x.  This is
     the 10^9-doc regime configuration (module docstring).
+
+    The hyperplanes are drawn inside the stage, at the width of the
+    vectors it sees (once per task, same seed on every task), so
+    building the frame runs no job.
     """
-    if dim is None:
-        dim = df.select(F.size(vec_col)).first()[0]
-    planes = _hyperplanes(dim, bands * bits, seed)
     if bits > 31:
         raise ValueError('bits must fit a 31-bit bucket key')
     weights = np.uint64(1) << np.arange(bits, dtype=np.uint64)
     band_ns = np.arange(bands, dtype=np.int64) << 32
+    planes = {}  # vector width -> hyperplanes
 
     def signatures(pdf):
-        raw = _mat(pdf) @ planes.T                 # (n, bands*bits)
+        mat = _mat(pdf)
+        dim = mat.shape[1]
+        if dim not in planes:
+            planes[dim] = _hyperplanes(dim, bands * bits, seed)
+        raw = mat @ planes[dim].T                  # (n, bands*bits)
         proj = raw > 0
         n = proj.shape[0]
         sigs = (proj.reshape(n, bands, bits).astype(np.uint64)

@@ -7,7 +7,8 @@ to audit what the extractor is stripping and to catch template-borne
 contamination (the same spam rail syndicated across thousands of
 hosts).
 
-Recipe (all DataFrame ops, one Python stage inherited from extraction):
+Recipe (all DataFrame ops; two Python stages, extraction and the
+shingles, each run once):
 
 1. boilerplate = the document's raw token stream MINUS the extracted
    content+comments tokens (``array_except`` -- set semantics; template
@@ -33,8 +34,13 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from .components import propagate_min_labels
-from .dedup import minhash_near_duplicates
+from .dedup import shingle_df, shingle_near_duplicates
 from .extract import extract
+
+
+def _host(doc_id):
+    """A synthesized doc_id's host: its first ``/`` segment."""
+    return F.split(doc_id, '/')[0]
 
 
 def boilerplate_docs(spans_df, model=None):
@@ -56,7 +62,7 @@ def boilerplate_docs(spans_df, model=None):
                  lambda t: t != F.lit('')), ' ')
     return (raw.join(ext, 'doc_id')
             .select('doc_id',
-                    F.split('doc_id', '/')[0].alias('host'),
+                    _host('doc_id').alias('host'),
                     boiler.alias('boilerplate')))
 
 
@@ -68,27 +74,25 @@ def template_families(spans_df, model=None, threshold=0.5, max_rounds=24):
     driver-side union-find produced -- lexicographic min).  ``converged``
     is per-run: False on every row iff label propagation hit
     ``max_rounds`` with labels still moving (a component of diameter
-    > ~2^max_rounds; raise the bound rather than trusting the split)."""
-    boiler = boilerplate_docs(spans_df, model=model) \
-        .where(F.length('boilerplate') > 0).cache()
-    # thin (doc_id, host) projection materialized so the fat cached
-    # boilerplate can be dropped as soon as the pairs are mined
-    base = boiler.select('doc_id', 'host').localCheckpoint(eager=True)
-    pairs = minhash_near_duplicates(
-        boiler.select('doc_id', F.col('boilerplate').alias('text')),
-        threshold=threshold, bands=16)
+    > ~2^max_rounds; raise the bound rather than trusting the split).
+
+    The non-empty boilerplate is shingled once, into one eager
+    checkpoint that feeds both the pair plan and the components node
+    set, so each Python stage (extraction, shingles) runs once; the
+    families are counted from the labels (one row per doc_id)."""
+    boiler = boilerplate_docs(spans_df, model=model).where(
+        F.length('boilerplate') > 0)
+    shingles = shingle_df(boiler, 'boilerplate').localCheckpoint(eager=True)
+    pairs = shingle_near_duplicates(shingles, threshold=threshold, bands=16)
     labels, converged = propagate_min_labels(
-        base.select('doc_id'), pairs,
+        shingles.select('doc_id'), pairs,
         id_col='doc_id', src_col='doc_a', dst_col='doc_b',
         max_rounds=max_rounds)
-    boiler.unpersist()
-    out = (base
-           .join(labels, 'doc_id')
-           .groupBy('label')
-           .agg(F.count('*').alias('n_docs'),
-                F.countDistinct('host').alias('n_hosts'),
-                F.min('doc_id').alias('example_doc_id'))
-           .select(F.col('label').alias('family_id'), 'n_docs',
-                   'n_hosts', 'example_doc_id',
-                   F.lit(converged).alias('converged')))
-    return out
+    return (labels
+            .groupBy('label')
+            .agg(F.count('*').alias('n_docs'),
+                 F.countDistinct(_host('doc_id')).alias('n_hosts'),
+                 F.min('doc_id').alias('example_doc_id'))
+            .select(F.col('label').alias('family_id'), 'n_docs',
+                    'n_hosts', 'example_doc_id',
+                    F.lit(converged).alias('converged')))

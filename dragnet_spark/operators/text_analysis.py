@@ -14,7 +14,10 @@ across threads; every ratio / CASE / rounding stays in the JVM over the
 same integers, so outputs (and the frozen DuckDB oracles) are
 bit-identical.  Both Gopher gates count there too (:func:`gopher_gates`
 runs them from one stage); only three integers per document cross back
-to the JVM for the repetition gate.
+to the JVM for the repetition gate.  The stage is a per-row function
+and one Arrow schema run through ``extract.map_doc_rows``, the batch
+loop every per-document Python stage shares; ``keep_cols`` ride through
+it as Python values.
 
 Lowercasing: the stage lowers with python ``str.lower()`` where the JVM
 operators (``tokens_col(lower=True)``) use Spark ``lower()``.  Tokens
@@ -28,10 +31,15 @@ is not supported.  Pinned on non-ASCII rows in tests.
 
 from __future__ import annotations
 
+import hashlib
 import re
 from collections import Counter
 
+import pyarrow as pa
 import pyspark.sql.functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+
+from .extract import map_doc_rows
 
 # [\W_]+ restricted to ASCII so Spark (Java regex) and DuckDB (RE2)
 # tokenize identically in oracle-paired queries
@@ -479,16 +487,15 @@ def _counts_stage(df, text_col='text', raw=False, lower=False, hits=False,
                   cjk=False, alnum=False, sigs=False, words=False,
                   rep=False, shingles=False, keep_cols=()):
     """(doc_id, <keep_cols>, _n_chars, <requested count cols>) via ONE
-    mapInArrow stage; exactly one output row per input row, in order.
+    ``map_doc_rows`` stage; exactly one output row per input row, in
+    order.
 
-    Null text propagates as null counts, so downstream JVM arithmetic
-    null-propagates exactly as the old all-JVM expression trees did.
-    ``shingles`` adds ``_shingles``, the :func:`py_shingles` of the
-    lowered tokens (the MinHash shingle table, ``dedup.shingle_df``).
+    Null text propagates as null counts (its row holds only the
+    pass-through columns), so downstream JVM arithmetic null-propagates
+    exactly as the old all-JVM expression trees did.  ``shingles`` adds
+    ``_shingles``, the :func:`py_shingles` of the lowered tokens (the
+    MinHash shingle table, ``dedup.shingle_df``).
     """
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import from_arrow_type
-
     # hits: True = all STOPWORDS languages, or an iterable subset --
     # the per-row python loop then intersects only what the caller
     # consumes
@@ -518,74 +525,58 @@ def _counts_stage(df, text_col='text', raw=False, lower=False, hits=False,
     if shingles:
         fields += [('_shingles', pa.list_(pa.string()))]
 
-    in_fields = ['doc_id', *keep_cols, text_col]
-    src = df.select(*dict.fromkeys(in_fields))  # dedup, keep order
-    ddl_types = {f.name: f.dataType.simpleString() for f in src.schema}
-    pass_cols = ['doc_id', *[c for c in keep_cols if c != 'doc_id']]
-    out_ddl = ', '.join(
-        ['%s %s' % (c, ddl_types[c]) for c in pass_cols]
-        + ['%s %s' % (name, from_arrow_type(typ).simpleString())
-           for name, typ in fields])
+    # the pass-through columns are a prefix of the input columns
+    pass_cols = list(dict.fromkeys(['doc_id', *keep_cols]))
+    src = df.select(*dict.fromkeys([*pass_cols, text_col]))
+    text_at = src.columns.index(text_col)
+    schema = pa.schema(
+        [(c, to_arrow_type(src.schema[c].dataType)) for c in pass_cols]
+        + fields)
     stop_sets = {lang: frozenset(STOPWORDS[lang]) for lang in hit_langs}
     gopher_stop = frozenset(GOPHER_STOPWORDS)
     alnum_sp_set = frozenset(_ALNUM_SPACE)
 
-    def gen(batches):
-        import hashlib
-        for rb in batches:
-            cols = {name: rb.column(i)
-                    for i, name in enumerate(rb.schema.names)}
-            texts = cols[text_col].to_pylist()
-            out = {name: [] for name, _ in fields}
-            for t in texts:
-                if t is None:
-                    for name, _ in fields:
-                        out[name].append(None)
-                    continue
-                out['_n_chars'].append(len(t))
-                if raw:
-                    toks = py_tokens(t)
-                    out['_n_tokens'].append(len(toks))
-                    out['_n_distinct'].append(len(set(toks)))
-                if lower or hit_langs or sigs or rep or shingles:
-                    toksl = py_tokens(t.lower())
-                if hit_langs or sigs:
-                    dt = set(toksl)
-                if lower:
-                    out['_n_tokens_lower'].append(len(toksl))
-                for lang in hit_langs:
-                    out['_h_' + lang].append(len(dt & stop_sets[lang]))
-                if cjk:
-                    out['_n_cjk'].append(len(_CJK_RE.findall(t)))
-                if alnum:
-                    out['_n_alnum_sp'].append(
-                        sum(1 for ch in t if ch in alnum_sp_set))
-                if sigs:
-                    out['_content_sig'].append(
-                        hashlib.md5(t.encode('utf-8')).hexdigest())
-                    out['_tokenset_sig'].append(hashlib.md5(
-                        ' '.join(sorted(dt)).encode('utf-8')).hexdigest())
-                if words:
-                    ws = [w for w in _WS_SPLIT(t.strip(' ')) if w]
-                    out['_n_words'].append(len(ws))
-                    out['_sum_word_len'].append(sum(map(len, ws)))
-                    out['_n_hash'].append(t.count('#'))
-                    out['_ell_lendiff'].append(3 * t.count('...'))
-                    out['_alpha_words'].append(
-                        sum(1 for w in ws if _ALPHA_RE.search(w)))
-                    out['_stop_hits'].append(
-                        len({w.lower() for w in ws} & gopher_stop))
-                if rep:
-                    lens = [len(x) for x in toksl]
-                    out['_tok_chars'].append(sum(lens))
-                    out['_top2'].append(_top2gram_chars(toksl))
-                    out['_dup10'].append(_dup10gram_chars(toksl, lens))
-                if shingles:
-                    out['_shingles'].append(py_shingles(toksl))
-            arrays = [cols[c] for c in pass_cols]
-            arrays += [pa.array(out[name], type=typ)
-                       for name, typ in fields]
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=pass_cols + [name for name, _ in fields])
+    def per_row(*values):
+        row = dict(zip(pass_cols, values))
+        t = values[text_at]
+        if t is None:
+            return (row,)
+        row['_n_chars'] = len(t)
+        if raw:
+            toks = py_tokens(t)
+            row['_n_tokens'] = len(toks)
+            row['_n_distinct'] = len(set(toks))
+        if lower or hit_langs or sigs or rep or shingles:
+            toksl = py_tokens(t.lower())
+        if hit_langs or sigs:
+            dt = set(toksl)
+        if lower:
+            row['_n_tokens_lower'] = len(toksl)
+        for lang in hit_langs:
+            row['_h_' + lang] = len(dt & stop_sets[lang])
+        if cjk:
+            row['_n_cjk'] = len(_CJK_RE.findall(t))
+        if alnum:
+            row['_n_alnum_sp'] = sum(1 for ch in t if ch in alnum_sp_set)
+        if sigs:
+            row['_content_sig'] = hashlib.md5(t.encode('utf-8')).hexdigest()
+            row['_tokenset_sig'] = hashlib.md5(
+                ' '.join(sorted(dt)).encode('utf-8')).hexdigest()
+        if words:
+            ws = [w for w in _WS_SPLIT(t.strip(' ')) if w]
+            row['_n_words'] = len(ws)
+            row['_sum_word_len'] = sum(map(len, ws))
+            row['_n_hash'] = t.count('#')
+            row['_ell_lendiff'] = 3 * t.count('...')
+            row['_alpha_words'] = sum(1 for w in ws if _ALPHA_RE.search(w))
+            row['_stop_hits'] = len({w.lower() for w in ws} & gopher_stop)
+        if rep:
+            lens = [len(x) for x in toksl]
+            row['_tok_chars'] = sum(lens)
+            row['_top2'] = _top2gram_chars(toksl)
+            row['_dup10'] = _dup10gram_chars(toksl, lens)
+        if shingles:
+            row['_shingles'] = py_shingles(toksl)
+        return (row,)
 
-    return src.mapInArrow(gen, out_ddl)
+    return map_doc_rows(src, per_row, schema)

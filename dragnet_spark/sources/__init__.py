@@ -1,3 +1,3 @@
 from .synthesis import (  # noqa: F401
-    make_document, synthesize_batches, synthesize_corpus,
+    make_document, synthesize_corpus,
 )

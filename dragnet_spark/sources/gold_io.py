@@ -10,12 +10,17 @@ it carry corpora in these shapes, so both round-trip here:
   ``content_frac \\t comments_frac \\t all_tokens \\t content_tokens \\t
   comments_tokens`` (``data_processing.py:106-117,185-196``)
 
-Both parse with JVM-side column expressions (no UDF).
+Both parse with JVM-side column expressions (no UDF); the CleanEval
+HTML mode parses in one ``map_doc_rows`` stage.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 import pyspark.sql.functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+
+from ..operators.extract import map_doc_rows
 
 # data_processing.py:26 -- regex split, first occurrence only
 COMMENTS_DELIM_RE = r'\n*!@#\$%\^&\*\(\)\s+COMMENTS\n*'
@@ -63,25 +68,17 @@ def cleaneval_text(html: str) -> str:
 def parse_corrected_cleaneval(df, text_col='corrected_text'):
     """CleanEval gold column -> (content_text, comments_text='') via one
     Arrow stage (HTML parsing is not a column expression)."""
-    import pandas as pd
-    import pyspark.sql.types as T
-
-    src = df.select('doc_id', F.col(text_col).alias('_t'))
-    schema = T.StructType([
-        T.StructField('doc_id', df.schema['doc_id'].dataType),
-        T.StructField('content_text', T.StringType()),
-        T.StructField('comments_text', T.StringType()),
+    schema = pa.schema([
+        ('doc_id', to_arrow_type(df.schema['doc_id'].dataType)),
+        ('content_text', pa.string()),
+        ('comments_text', pa.string()),
     ])
 
-    def batches(pdfs):
-        for pdf in pdfs:
-            yield pd.DataFrame({
-                'doc_id': pdf['doc_id'],
-                'content_text': [cleaneval_text(t or '') for t in pdf['_t']],
-                'comments_text': ['' for _ in pdf['_t']],
-            })
+    def per_row(doc_id, text):
+        return ({'doc_id': doc_id, 'content_text': cleaneval_text(text or ''),
+                 'comments_text': ''},)
 
-    return src.mapInPandas(batches, schema)
+    return map_doc_rows(df.select('doc_id', text_col), per_row, schema)
 
 
 def format_corrected(gold_df):

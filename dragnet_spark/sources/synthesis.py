@@ -314,25 +314,6 @@ def _iter_docs(did, text, amplification=1, chrome_by_host=False):
         yield sid, _span_dicts(spans), gold_c, gold_m
 
 
-def synthesize_batches(doc_batch, amplification=1, chrome_by_host=False):
-    """documents.parquet RecordBatch -> (spans RecordBatch, gold RecordBatch).
-
-    Pure function of the input rows (executor-safe, order-independent);
-    see :func:`_iter_docs` for ``chrome_by_host``.
-    """
-    span_rows, gold_rows = [], []
-    for did, text in zip(doc_batch.column('doc_id').to_pylist(),
-                         doc_batch.column('text').to_pylist()):
-        for sid, spans, gold_c, gold_m in _iter_docs(did, text, amplification,
-                                                     chrome_by_host):
-            span_rows.append({'doc_id': sid, 'spans': spans})
-            gold_rows.append({'doc_id': sid, 'content_text': gold_c,
-                              'comments_text': gold_m})
-    spans_rb = pa.RecordBatch.from_pylist(span_rows, schema=SPANS_SCHEMA)
-    gold_rb = pa.RecordBatch.from_pylist(gold_rows, schema=GOLD_SCHEMA)
-    return spans_rb, gold_rb
-
-
 def edge_docs_dfs(spark):
     """(spans_df, gold_df) for the fixed edge-case docs (FIXTURES.md §1)
     -- the tiny union branch of ``synthesize_corpus(include_edge_docs=
@@ -388,7 +369,7 @@ def synthesize_fused(spark, sf_dir, per_doc_rows, pa_schema,
     The two-stage form (``synthesize_corpus`` -> join/mapInArrow) pays
     the Arrow boundary twice with fat nested span rows, and any consumer
     that also needs the gold table pays a SECOND full synthesis pass
-    (``gen_gold`` re-renders every document and discards the spans) plus
+    (the gold stage re-renders every document and discards the spans) plus
     a doc_id shuffle join of two opaque python outputs (guide §4.1: you
     control how many columns/rows cross the boundary).  Here
     ``per_doc_rows(sid, span_dicts, gold_content, gold_comments)`` runs
@@ -442,21 +423,23 @@ def synthesize_extract_gold_counts(spark, sf_dir, amplification=1,
 def synthesize_corpus(spark, sf_dir, amplification=1, include_edge_docs=True,
                       num_partitions=None, chrome_by_host=False):
     """Distributed corpus synthesis: returns (spans_df, gold_df), each
-    one Arrow stage over the spread doc rows (:func:`_spread_docs`)."""
+    one Arrow stage over the spread doc rows (:func:`_spread_docs`); see
+    :func:`_iter_docs` for ``chrome_by_host``."""
     docs = _spread_docs(spark, sf_dir, num_partitions)
 
-    def gen_spans(batches):
-        for rb in batches:
-            out, _ = synthesize_batches(rb, amplification, chrome_by_host)
-            yield out
+    def spans_rows(did, text):
+        for sid, spans, _, _ in _iter_docs(did, text, amplification,
+                                           chrome_by_host):
+            yield {'doc_id': sid, 'spans': spans}
 
-    def gen_gold(batches):
-        for rb in batches:
-            _, out = synthesize_batches(rb, amplification, chrome_by_host)
-            yield out
+    def gold_rows(did, text):
+        for sid, _, gold_c, gold_m in _iter_docs(did, text, amplification,
+                                                 chrome_by_host):
+            yield {'doc_id': sid, 'content_text': gold_c,
+                   'comments_text': gold_m}
 
-    spans_df = docs.mapInArrow(gen_spans, from_arrow_schema(SPANS_SCHEMA))
-    gold_df = docs.mapInArrow(gen_gold, from_arrow_schema(GOLD_SCHEMA))
+    spans_df = map_doc_rows(docs, spans_rows, SPANS_SCHEMA)
+    gold_df = map_doc_rows(docs, gold_rows, GOLD_SCHEMA)
 
     if include_edge_docs:
         edge_spans, edge_gold = edge_docs_dfs(spark)
@@ -503,8 +486,7 @@ def synthesize_with_mirrors(spark, sf_dir, mod=8, num_partitions=None):
 
 def iter_span_docs(doc_ids, texts, amplification=1):
     """Yield (doc_id, span_dicts) per synthesized document -- the same id
-    scheme and rendering as :func:`synthesize_batches`, without the
-    intermediate Arrow materialization."""
+    scheme and rendering as :func:`synthesize_corpus`, without Spark."""
     for did, text in zip(doc_ids, texts):
         for sid, spans, _, _ in _iter_docs(did, text, amplification):
             yield sid, spans

@@ -249,6 +249,22 @@ class TestSimilarity:
                                         bits=4).collect()
         assert {(r.vec_a, r.vec_b) for r in out} == {(0, 1)}
 
+    def test_lsh_signatures_build_runs_no_job(self, spark, emb):
+        # the hyperplanes take the vector width from the batch inside
+        # the stage: building the frame must not run a job to learn it
+        from dragnet_spark.operators.similarity import (LSH_BANDS,
+                                                        lsh_band_signatures)
+        spread = emb.repartition(2)
+        sc = spark.sparkContext
+        sc.setJobGroup('lsh-build', 'lsh_band_signatures build')
+        try:
+            sigs = lsh_band_signatures(spread)
+        finally:
+            sc.setLocalProperty('spark.jobGroup.id', None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup('lsh-build')) == []
+        assert sigs.count() == 20 * LSH_BANDS
+
     def test_planted_duplicates_found_at_16bit_bands(self, spark, emb):
         from dragnet_spark.operators.similarity import (
             embedding_near_duplicates, with_planted_duplicates)

@@ -67,6 +67,24 @@ class TestHardCorpus:
         assert all(f.n_hosts >= 5 for f in fams), fams
         assert all(f.converged for f in fams)
 
+    def test_template_mining_shingles_once(self, spark, hard, monkeypatch):
+        # the pair plan reads the one shingle checkpoint: no Python
+        # stage runs again under the edges handed to the components
+        from dragnet_spark.operators import templates
+        seen = []
+        propagate = templates.propagate_min_labels
+
+        def spy(nodes, edges, **kwargs):
+            seen.append(edges)
+            return propagate(nodes, edges, **kwargs)
+
+        monkeypatch.setattr(templates, 'propagate_min_labels', spy)
+        spans_df, _ = hard
+        templates.template_families(spans_df)
+        (edges,) = seen
+        plan = edges._jdf.queryExecution().executedPlan().toString()
+        assert 'MapInArrow' not in plan, plan
+
 
 # rounds propagate_min_labels takes on the 100k-node chain below
 # (measured): spark.range gives as many contiguous partitions as cores,
@@ -265,6 +283,21 @@ class TestConnectedComponents:
         assert report == {'rounds': 1, 'moved': [0], 'seeded': 3}
         rows = sorted((r.doc_id, r.label) for r in labels.collect())
         assert rows == [(10, 10), (20, 10), (30, 10), (40, 40), (50, 40)]
+
+    def test_null_ids_and_null_endpoints_are_dropped(self, spark):
+        # a null id is no node: left in, its label row counted as moved
+        # in every round, and the fixpoint ran out of rounds unconverged
+        from dragnet_spark.operators.components import propagate_min_labels
+        nodes = spark.createDataFrame([(1,), (2,), (None,)], 'doc_id long')
+        edges = spark.createDataFrame([(1, 2), (3, None)],
+                                      'src long, dst long')
+        report = {}
+        labels, converged = propagate_min_labels(nodes, edges, max_rounds=6,
+                                                 report=report)
+        assert converged
+        assert report['rounds'] == 1
+        got = {(r.doc_id, r.label) for r in labels.collect()}
+        assert got == {(1, 1), (2, 1)}
 
     def test_frees_superseded_checkpoints(self, spark):
         # the edge, seed and round checkpoints are released before the
